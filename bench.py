@@ -9,7 +9,8 @@ SF. Prints ONE JSON line:
    "er_turns": N, "er_turns_per_sec": T, "cpus": C}
 
 Each query is forced end-to-end with the noop sink (full materialization,
-no driver collect, no disk write). Run with SPARK_GRAFT_CPUS=8 and =32 on
+no driver collect, no disk write). If any query fails, the run prints no
+result line and exits non-zero. Run with SPARK_GRAFT_CPUS=8 and =32 on
 the same input to evidence the N→4N scaling rule (see BENCH.md).
 """
 
@@ -97,19 +98,24 @@ def main() -> None:
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=max(cpus, 16))
     qs = entrymod.queries()
     times: dict[str, float] = {}
+    failed: list[str] = []
     for name in HEADLINE:
         t0 = time.time()
         try:
             force(qs[name](spark, sf_dir))
             times[name] = round(time.time() - t0, 3)
         except Exception as e:  # noqa: BLE001 — a broken query must not hide the rest
-            times[name] = -1.0
+            failed.append(name)
             print(f"# bench {name} FAILED: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
+    if failed:
+        # a failed query has no time: a total without it would look faster
+        spark.stop()
+        sys.exit(f"# bench: {len(failed)} of {len(HEADLINE)} queries failed ({', '.join(failed)}); no value")
 
     er_turns, er_wall = run_er_pipeline(spark, sf)
     times["er_pipeline"] = round(er_wall, 3)
 
-    total = round(sum(t for t in times.values() if t >= 0), 3)
+    total = round(sum(times.values()), 3)
     print(
         json.dumps(
             {

@@ -20,7 +20,7 @@ Skew controls (north rule, explicit):
 - **AQE skew-join** splits residual hot partitions at runtime (enabled in
   session.py).
 - ``block_histogram`` exposes the token-frequency distribution used to size
-  ``spark.sql.shuffle.partitions`` and emitted as lineage rows.
+  ``spark.sql.shuffle.partitions`` and ``max_token_df``.
 
 The shuffle structure is: one exchange on token (the join), one exchange on
 (a_id,b_id) (the pair agg, partially aggregated map-side), one exchange on
@@ -449,7 +449,10 @@ def token_jaccard_join(
         .select("g")
         .localCheckpoint()  # one pass feeds the dict-size probe AND both joins
     )
-    n_kept = keep.count()
+    # one bounded collect is both the dictionary-size probe and, in the
+    # dense branch, the dictionary itself
+    kept = keep.limit(dense_dict_max + 1).collect()
+    n_kept = len(kept)
 
     sim_of = lambda ov, asz, bsz: F.round(ov / (asz + bsz - ov), 6)  # noqa: E731
 
@@ -461,7 +464,7 @@ def token_jaccard_join(
         # explode → keep-join → collect_list → re-join-prep round trip spent
         # two ~5 s jobs per side at sf0.1 rebuilding arrays prep already had
         # (BENCH.md 2026-08-21 decomposition).
-        keep_arr = np.sort(np.asarray([r["g"] for r in keep.collect()], dtype=np.int64))
+        keep_arr = np.sort(np.asarray([r["g"] for r in kept], dtype=np.int64))
 
         from ertransfer_spark.operators.gridsweep import grid_blocks
 
@@ -567,8 +570,8 @@ def block_histogram(records: DataFrame, tokens_col: str = "token_set") -> DataFr
     """Token document-frequency histogram: (df_bucket, n_tokens, comparisons).
 
     ``comparisons`` ~ df² — the per-block cost driver. Used to choose
-    shuffle-partition counts and max_token_df, and appended to lineage
-    (reference analog: the blocking stats in split_statistics.txt,
+    shuffle-partition counts and max_token_df (reference analog: the
+    blocking stats in split_statistics.txt,
     splitters/KNN-Join/splitter.py:198-207)."""
     df = records.select(F.explode(tokens_col).alias("token")).groupBy("token").agg(
         F.count(F.lit(1)).alias("df")

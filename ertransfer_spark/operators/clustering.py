@@ -285,28 +285,38 @@ def _neighbors(edges: DataFrame) -> DataFrame:
     return edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = 30,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Connected components over an undirected edge list (u,v) →
     (node, cluster_id) with cluster_id = min node id in the component.
 
     Alternating large-star / small-star rounds; converges in O(log n).
-    Fixpoint detected by an order-insensitive edge-set fingerprint
-    (count + sum of pair-hashes) — no expensive subtract. Frontiers are
-    localCheckpoint()ed so the iterative plan doesn't grow.
-    """
-    e = _canonical_edges(edges).localCheckpoint()
+    The fixpoint test is exact and needs no previous round to compare
+    with: the alternation has converged iff the canonical edge set is a
+    forest of stars centred on their minimum node (every member has one
+    edge, to a smaller centre, and no centre is a member). An input that
+    is already such a forest — a 1-1 matching, say — runs no round.
 
-    def fingerprint(df: DataFrame):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # pmod keeps the sum far from long overflow (ANSI-safe)
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
+    Driver round-trips: ONE action per round, as in
+    :func:`unique_mapping_clusters`. Each frontier is lazily
+    localCheckpoint()ed, and the fixpoint aggregate is the job that
+    materializes it, so the next round reads the cached blocks and the
+    iterative plan stays flat.
+
+    Raises RuntimeError when ``max_rounds`` pass without reaching the
+    fixpoint: reading cluster ids off a non-star edge set would silently
+    assign arbitrary ids.
+    """
+    def is_star_forest(df: DataFrame) -> bool:
+        roles = df.select(
+            F.col("u").alias("n"), F.lit(1).alias("centre"), F.lit(0).alias("member")
+        ).unionByName(
+            df.select(F.col("v").alias("n"), F.lit(0).alias("centre"), F.lit(1).alias("member"))
+        )
+        per_node = roles.groupBy("n").agg(
+            F.max("centre").alias("centre"), F.sum("member").alias("member")
+        )
+        bad = (F.col("member") > 1) | ((F.col("centre") == 1) & (F.col("member") > 0))
+        return per_node.agg(F.count(F.when(bad, 1))).collect()[0][0] == 0
 
     def large_star(e: DataFrame) -> DataFrame:
         nbrs = _neighbors(e)
@@ -335,24 +345,23 @@ def connected_components(
         )
         return out
 
-    prev_fp = fingerprint(e)
-    for i in range(max_rounds):
-        e = large_star(e)
-        e = small_star(e)
-        if (i + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint()
-        fp = fingerprint(e)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
+    e = _canonical_edges(edges).localCheckpoint(eager=False)
+    rounds = 0
+    while not is_star_forest(e):
+        if rounds == max_rounds:
+            raise RuntimeError(
+                f"connected_components reached no fixpoint in max_rounds={max_rounds}"
+            )
+        e = small_star(large_star(e)).localCheckpoint(eager=False)
+        rounds += 1
 
-    # At fixpoint e is a star in canonical (least, greatest) orientation:
-    # u = component-min root, v = member.
+    # e is a star forest in canonical (least, greatest) orientation:
+    # u = component-min centre, v = member; every node appears once.
     comp = e.select(F.col("v").alias("node"), F.col("u").alias("cluster_id"))
     roots = e.select(F.col("u").alias("node")).distinct().withColumn(
         "cluster_id", F.col("node")
     )
-    return comp.unionByName(roots).dropDuplicates(["node"])
+    return comp.unionByName(roots)
 
 
 def clusters_from_pairs(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -> DataFrame:
@@ -379,14 +388,24 @@ def clusters_from_pairs(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_i
 
 def pairwise_metrics(accepted: DataFrame, golden: DataFrame) -> dict:
     """Pairwise precision/recall/F1 of accepted (a_id,b_id) vs golden —
-    parity: clustering/Probabilities/clustering.py:32-37."""
-    acc = accepted.select("a_id", "b_id").distinct()
+    parity: clustering/Probabilities/clustering.py:32-37.
+
+    One job: a single aggregate over the full-outer join of the distinct
+    accepted and golden pairs counts both sides and their overlap."""
+    acc = accepted.select("a_id", "b_id").distinct().withColumn("_acc", F.lit(1))
     g_a = next(c for c in golden.columns if c.startswith("a"))
     g_b = next(c for c in golden.columns if c.startswith("b"))
-    gold = golden.select(F.col(g_a).alias("a_id"), F.col(g_b).alias("b_id")).distinct()
-    tp = acc.join(gold, ["a_id", "b_id"], "left_semi").count()
-    n_acc = acc.count()
-    n_gold = gold.count()
+    gold = (
+        golden.select(F.col(g_a).alias("a_id"), F.col(g_b).alias("b_id"))
+        .distinct()
+        .withColumn("_gold", F.lit(1))
+    )
+    r = acc.join(gold, ["a_id", "b_id"], "full_outer").agg(
+        F.count("_acc").alias("n_acc"),
+        F.count("_gold").alias("n_gold"),
+        F.count(F.when(F.col("_acc").isNotNull() & F.col("_gold").isNotNull(), 1)).alias("tp"),
+    ).collect()[0]
+    tp, n_acc, n_gold = r["tp"], r["n_acc"], r["n_gold"]
     prec = tp / n_acc if n_acc else 0.0
     rec = tp / n_gold if n_gold else 0.0
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0

@@ -159,7 +159,10 @@ def shingle_jaccard_pairs(
     # probe and the hot-set reuse it instead of recomputing the postings agg
     dfreq = posts.groupBy("g").agg(F.count(F.lit(1)).alias("df")).localCheckpoint()
     hot = dfreq.filter(F.col("df") > max_gram_df).select("g")
-    n_kept = dfreq.filter(F.col("df") <= max_gram_df).count()
+    # one bounded collect is both the dictionary-size probe and, in the
+    # dense branch, the dictionary itself
+    kept = dfreq.filter(F.col("df") <= max_gram_df).select("g").limit(dense_dict_max + 1).collect()
+    n_kept = len(kept)
 
     sim_of = lambda ov, asz, bsz: F.round(ov / (asz + bsz - ov), 6)  # noqa: E731
 
@@ -170,10 +173,7 @@ def shingle_jaccard_pairs(
         # prepped (id, hs, sz) rows instead of the explode → anti-join →
         # collect_list round trip (two corpus passes saved; BENCH.md
         # 2026-08-21 decomposition).
-        keep_arr = np.sort(np.asarray(
-            [r["g"] for r in dfreq.filter(F.col("df") <= max_gram_df).select("g").collect()],
-            dtype=np.int64,
-        ))
+        keep_arr = np.sort(np.asarray([r["g"] for r in kept], dtype=np.int64))
         sets = h.select("id", F.sort_array("hs").alias("gs"), "sz")
         # materialized once: feeds BOTH cogroup sides and the block count
         sets = sets.localCheckpoint()

@@ -2,7 +2,9 @@
 Spark job graph (SURVEY §3: normalize → filtering → matching → clustering).
 
 Every stage commits a snapshot through :class:`SnapshotCatalog` and appends
-lineage rows (stage, counts, wall_ms, run_id). ``resume=True`` skips any
+one lineage row (stage, rows written, label matches, wall_ms, run_id). The
+counts are read from the files the commit wrote, so lineage costs no extra
+Spark job. ``resume=True`` skips any
 stage whose snapshot is already committed — kill the driver at any stage
 boundary and rerun: only the remaining stages execute (the north-rule
 checkpoint/resume contract; reference precedent is only model-checkpoint
@@ -18,7 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ertransfer_spark.operators.blocking import block_histogram, top_k_token_join
+from ertransfer_spark.operators.blocking import top_k_token_join
 from ertransfer_spark.operators.canonicalize import canonicalize
 from ertransfer_spark.operators.clustering import (
     best_threshold,
@@ -104,26 +106,26 @@ class ERPipeline:
         self.cfg = config or PipelineConfig()
         self.run_id = uuid.uuid4().hex[:12]
 
-    def _stage(self, name: str, fn, resume: bool):
+    def _stage(self, name: str, fn, resume: bool, label_col: str | None = None):
+        """Commit ``fn()`` as stage ``name`` and append its lineage row.
+
+        The counts come from the commit's own files, not from extra Spark
+        jobs: the rows written from the parquet footers the manifest
+        records, and the label matches (``label_col``) from that column of
+        the committed snapshot."""
         if resume and self.catalog.exists(name):
             return self.catalog.read(name)
         t0 = time.time()
-        df, extra_lineage = fn()
-        self.catalog.commit(name, df, meta={"run_id": self.run_id})
-        wall_ms = int((time.time() - t0) * 1000)
-        rows = [
-            {
-                "stage": name,
-                "run_id": self.run_id,
-                "wall_ms": wall_ms,
-                "block_key": r.get("block_key", ""),
-                "candidate_count": int(r.get("candidate_count", 0)),
-                "comparisons": int(r.get("comparisons", 0)),
-                "matches": int(r.get("matches", 0)),
-            }
-            for r in (extra_lineage or [{}])
-        ]
-        self.catalog.append_lineage(rows)
+        self.catalog.commit(name, fn(), meta={"run_id": self.run_id})
+        self.catalog.append_lineage([{
+            "stage": name,
+            "run_id": self.run_id,
+            "wall_ms": int((time.time() - t0) * 1000),
+            "block_key": "",
+            "candidate_count": self.catalog.manifest(name)["rows"],
+            "comparisons": 0,
+            "matches": self.catalog.column_sum(name, label_col) if label_col else 0,
+        }])
         return self.catalog.read(name)
 
     def run(
@@ -150,51 +152,35 @@ class ERPipeline:
             raise ValueError("cfg.attrs requires run(raw_a=, raw_b=)")
         rec_resume = resume if resume_records is None else resume_records
 
-        ra = self._stage(
-            "records_a", lambda: (canonicalize(transcripts_a), [{"candidate_count": transcripts_a.count()}]), rec_resume
-        )
-        rb = self._stage(
-            "records_b", lambda: (canonicalize(transcripts_b), [{"candidate_count": transcripts_b.count()}]), rec_resume
-        )
+        ra = self._stage("records_a", lambda: canonicalize(transcripts_a), rec_resume)
+        rb = self._stage("records_b", lambda: canonicalize(transcripts_b), rec_resume)
 
         def _block():
             if cfg.blocker == "vector":
                 from ertransfer_spark.operators.simsearch import vector_blocking
 
-                cand = vector_blocking(ra, rb, k=cfg.k, tokens_col=cfg.tokens_col)
-            else:
-                ba, bb, tok_col, multiset = ra, rb, cfg.tokens_col, False
-                if cfg.qgram:
-                    # reference splitter QGram=N blocking: multiset q-grams
-                    # of the canonical blob (settings.py per-dataset config)
-                    from ertransfer_spark.functions.text import qgrams
+                return vector_blocking(ra, rb, k=cfg.k, tokens_col=cfg.tokens_col)
+            ba, bb, tok_col, multiset = ra, rb, cfg.tokens_col, False
+            if cfg.qgram:
+                # reference splitter QGram=N blocking: multiset q-grams
+                # of the canonical blob (settings.py per-dataset config)
+                from ertransfer_spark.functions.text import qgrams
 
-                    qg = qgrams(F.col("agValue"), q=cfg.qgram,
-                                multiset=cfg.qgram_multiset)
-                    ba, bb = ra.withColumn("qg", qg), rb.withColumn("qg", qg)
-                    tok_col, multiset = "qg", cfg.qgram_multiset
-                cand = top_k_token_join(
-                    ba, bb, k=cfg.k, metric=cfg.metric, tokens_col=tok_col,
-                    multiset=multiset, reverse=cfg.reverse,
-                    direction=cfg.direction, salt=cfg.salt,
-                    salt_hot_product=cfg.salt_hot_product,
-                    skinny_postings=cfg.skinny_postings, topk_mode=cfg.topk_mode,
-                    hash_tokens=cfg.hash_tokens,
-                    max_token_df=cfg.max_token_df, keep_rare_df=cfg.keep_rare_df,
-                    posting_budget=cfg.posting_budget,
-                    min_sim=cfg.min_sim,
-                )
-            # per-block lineage from the token-frequency histogram
-            hist = block_histogram(ra, tokens_col=cfg.tokens_col).collect()
-            lineage = [
-                {
-                    "block_key": f"df<={r['df_bucket']}",
-                    "candidate_count": int(r["n_tokens"]),
-                    "comparisons": int(r["comparisons"]),
-                }
-                for r in hist
-            ]
-            return cand, lineage
+                qg = qgrams(F.col("agValue"), q=cfg.qgram,
+                            multiset=cfg.qgram_multiset)
+                ba, bb = ra.withColumn("qg", qg), rb.withColumn("qg", qg)
+                tok_col, multiset = "qg", cfg.qgram_multiset
+            return top_k_token_join(
+                ba, bb, k=cfg.k, metric=cfg.metric, tokens_col=tok_col,
+                multiset=multiset, reverse=cfg.reverse,
+                direction=cfg.direction, salt=cfg.salt,
+                salt_hot_product=cfg.salt_hot_product,
+                skinny_postings=cfg.skinny_postings, topk_mode=cfg.topk_mode,
+                hash_tokens=cfg.hash_tokens,
+                max_token_df=cfg.max_token_df, keep_rare_df=cfg.keep_rare_df,
+                posting_budget=cfg.posting_budget,
+                min_sim=cfg.min_sim,
+            )
 
         cand = self._stage("candidates", _block, resume)
 
@@ -202,15 +188,11 @@ class ERPipeline:
         if golden_matches is not None:
             golden = referential_filter(golden_matches, ra, rb)
 
-        def _label():
-            labeled = attach_labels(cand, golden)
-            # one agg job for both lineage numbers (was count + sum = 2)
-            row = labeled.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("label").alias("m")
-            ).collect()[0]
-            return labeled, [{"candidate_count": int(row["n"]), "matches": int(row["m"] or 0)}]
-
-        labeled = self._stage("labeled", _label, resume) if golden is not None else cand
+        labeled = cand
+        if golden is not None:
+            labeled = self._stage(
+                "labeled", lambda: attach_labels(cand, golden), resume, label_col="label"
+            )
 
         # corpus size for tfidf idf: count ONCE here — _featurize runs up to
         # twice per pipeline (train + full featurize) and tfidf_cosine would
@@ -292,7 +274,7 @@ class ERPipeline:
                 all_ft = _featurize(labeled)
                 um = train_unsupervised(all_ft, seed=cfg.seed, feature_cols=feature_cols)
                 preds = score_unsupervised(um, all_ft)
-            return preds, [{"candidate_count": preds.count()}]
+            return preds
 
         preds = self._stage("predictions", _predict, resume)
 
@@ -306,14 +288,10 @@ class ERPipeline:
                 pairs = unique_mapping_clusters(preds, threshold=t)
             else:
                 pairs = exact_clusters(preds, threshold=t)
-            return pairs.withColumn("threshold", F.lit(float(t))), [
-                {"candidate_count": pairs.count()}
-            ]
+            return pairs.withColumn("threshold", F.lit(float(t)))
 
         matched = self._stage("matched_pairs", _cluster, resume)
-        clusters = self._stage(
-            "clusters", lambda: (clusters_from_pairs(matched), [{"candidate_count": matched.count()}]), resume
-        )
+        clusters = self._stage("clusters", lambda: clusters_from_pairs(matched), resume)
 
         result = {"matched_pairs": matched, "clusters": clusters, "predictions": preds}
         if golden is not None:

@@ -12,10 +12,16 @@ the Iceberg-commit semantics on plain parquet. When an Iceberg catalog is
 on the classpath (not in this image; import-gated), ``SnapshotCatalog``
 delegates to ``df.writeTo(...)`` instead; the pipeline code is identical.
 
-``lineage`` is an append-only table of per-stage/per-partition rows
-(stage, block_key, candidate_count, comparisons, matches, wall_ms, run_id,
-snapshot) — the split_statistics.txt analog (splitter.py:198-207) that the
-north rule requires as the resume ledger.
+The manifest also records the snapshot's schema, which
+:meth:`SnapshotCatalog.read` passes to the parquet reader instead of
+inferring it, and the rows written, summed from the new files' footers.
+
+``lineage`` is an append-only table with one row per committed stage
+(stage, block_key, candidate_count, comparisons, matches, wall_ms, run_id):
+``candidate_count`` is the rows the stage wrote and ``matches`` its label
+matches, both read from the committed files, never from extra Spark jobs —
+the split_statistics.txt analog (splitter.py:198-207) that the north rule
+requires as the resume ledger.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _fsync_dir(path: Path) -> None:
@@ -39,6 +46,32 @@ def _fsync_dir(path: Path) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def _parquet_rows(path: Path) -> int:
+    """Rows in the parquet files under ``path``, summed from their footers:
+    metadata only, no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in path.rglob("*.parquet"))
+
+
+def _nullable(dtype):
+    """A JSON-form Spark data type with every struct field, array element
+    and map value made nullable (Spark's ``DataType.asNullable``)."""
+    if not isinstance(dtype, dict):
+        return dtype
+    kind = dtype["type"]
+    if kind == "struct":
+        return {**dtype, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in dtype["fields"]
+        ]}
+    if kind == "array":
+        return {**dtype, "containsNull": True, "elementType": _nullable(dtype["elementType"])}
+    if kind == "map":
+        return {**dtype, "valueContainsNull": True, "keyType": _nullable(dtype["keyType"]),
+                "valueType": _nullable(dtype["valueType"])}
+    return dtype
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -102,6 +135,7 @@ class SnapshotCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(tmp))
+        rows = _parquet_rows(tmp)
         snap = d / f"snap-{n:05d}"
         if snap.exists():
             shutil.rmtree(snap)
@@ -112,6 +146,7 @@ class SnapshotCatalog:
             "snapshot": snap.name,
             "committed_at": time.time(),
             "schema": df.schema.json(),
+            "rows": rows,
             "mode": mode,
             "partition_by": partition_by or [],
             "n_buckets": n_buckets,
@@ -177,7 +212,11 @@ class SnapshotCatalog:
         if not snaps:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
         if not self._is_partitioned(snaps):
-            return self.spark.read.parquet(*[str(p) for p in snaps])
+            reader = self.spark.read
+            schema = self._manifest_schema(snaps)
+            if schema is not None:
+                reader = reader.schema(schema)
+            return reader.parquet(*[str(p) for p in snaps])
         # Partitioned snapshots are each their own partition-discovery root;
         # Spark refuses multiple roots in one load, so union per-snapshot
         # reads (driver cost O(snapshots); each read stays pruned/lazy).
@@ -189,6 +228,16 @@ class SnapshotCatalog:
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def _manifest_schema(self, snaps: list[Path]) -> StructType | None:
+        """The data schema every snapshot's manifest records, made nullable
+        throughout the way Spark writes parquet — exactly what inference
+        from the footers returns, without reading them. None when the
+        manifests disagree or one records no schema."""
+        schemas = {self._manifest_of(p).get("schema") for p in snaps}
+        if len(schemas) != 1 or None in schemas:
+            return None
+        return StructType.fromJson(_nullable(json.loads(schemas.pop())))
 
     def _is_partitioned(self, snaps: list[Path]) -> bool:
         for p in snaps:
@@ -275,6 +324,18 @@ class SnapshotCatalog:
         for d in parts[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def column_sum(self, table: str, col: str) -> int:
+        """Sum of an integer column over the table's active snapshots, read
+        on the driver from the committed parquet files — no Spark job."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        total = 0
+        for snap in self._active_snaps(table):
+            for f in snap.rglob("*.parquet"):
+                total += pc.sum(pq.read_table(f, columns=[col])[col]).as_py() or 0
+        return total
 
     def manifest(self, table: str) -> dict:
         snaps = self.snapshots(table)

@@ -7,6 +7,8 @@ import random
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ertransfer_spark.operators.clustering import (
     best_threshold,
@@ -186,3 +188,68 @@ def test_pairwise_metrics(spark):
     gold = spark.createDataFrame(pd.DataFrame([("a1", "b1"), ("a3", "b3")], columns=["a_conv_id", "b_conv_id"]))
     m = pairwise_metrics(acc, gold)
     assert m["precision"] == 0.5 and m["recall"] == 0.5 and abs(m["f1"] - 0.5) < 1e-12
+
+
+def _path_pairs(n, seed):
+    """A bipartite path a-b-a-b-... over 2n nodes whose ids are shuffled,
+    so the component minimum sits anywhere along it."""
+    rng = random.Random(seed)
+    a_ids = [f"a{i:04d}" for i in range(n)]
+    b_ids = [f"b{i:04d}" for i in range(n)]
+    rng.shuffle(a_ids)
+    rng.shuffle(b_ids)
+    rows = []
+    for i in range(n):
+        rows.append((a_ids[i], b_ids[i]))
+        if i + 1 < n:
+            rows.append((a_ids[i + 1], b_ids[i]))
+    return rows
+
+
+def test_connected_components_raises_without_fixpoint(spark):
+    """A long path needs O(log n) rounds; exhausting max_rounds first must
+    raise instead of returning arbitrary cluster ids."""
+    edges = spark.createDataFrame(
+        pd.DataFrame(
+            [(f"a#{a}", f"b#{b}") for a, b in _path_pairs(100, seed=1)],
+            columns=["u", "v"],
+        )
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=2"):
+        connected_components(edges, max_rounds=2)
+
+
+def test_connected_components_high_diameter_vs_unionfind(spark):
+    """Long shuffled paths plus random chords and a few small random
+    components equal the union-find oracle."""
+    rng = random.Random(17)
+    rows = _path_pairs(80, seed=2)
+    rows += [(f"a{rng.randrange(80):04d}", f"b{rng.randrange(80):04d}") for _ in range(3)]
+    rows += [(f"a9{rng.randrange(30)}", f"b9{rng.randrange(30)}") for _ in range(25)]
+    pairs = pd.DataFrame(rows, columns=["a_id", "b_id"]).drop_duplicates()
+    got = clusters_from_pairs(spark.createDataFrame(pairs)).toPandas()
+    assert dict(zip(got["node"], got["cluster_id"])) == oracle.connected_components(pairs)
+
+
+_pair = st.tuples(st.sampled_from(["a1", "a2", "a3", "a4"]), st.sampled_from(["b1", "b2", "b3"]))
+
+
+@settings(max_examples=25, deadline=None)
+@given(acc=st.lists(_pair, max_size=12), gold=st.lists(_pair, max_size=12))
+def test_pairwise_metrics_equals_set_arithmetic(spark, acc, gold):
+    """pairwise_metrics equals pandas set arithmetic on the distinct pairs,
+    with duplicate rows and empty accepted or golden sets."""
+    acc_pd = pd.DataFrame(acc, columns=["a_id", "b_id"])
+    gold_pd = pd.DataFrame(gold, columns=["a_conv_id", "b_conv_id"])
+    m = pairwise_metrics(
+        spark.createDataFrame(acc_pd, "a_id string, b_id string"),
+        spark.createDataFrame(gold_pd, "a_conv_id string, b_conv_id string"),
+    )
+    a = acc_pd.drop_duplicates()
+    g = gold_pd.drop_duplicates().set_axis(["a_id", "b_id"], axis=1)
+    tp = len(a.merge(g, on=["a_id", "b_id"]))
+    prec = tp / len(a) if len(a) else 0.0
+    rec = tp / len(g) if len(g) else 0.0
+    f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+    assert (m["tp"], m["n_accepted"], m["n_golden"]) == (tp, len(a), len(g))
+    assert (m["precision"], m["recall"], m["f1"]) == (prec, rec, f1)

@@ -145,3 +145,77 @@ def test_pipeline_local_train_cap_keeps_positives(spark, spark_corpora, workdir)
     )
     out = pipe.run(ta, tb, matches)
     assert out["metrics"]["f1"] >= 0.99
+
+
+# Spark jobs one default pipeline run over the test corpus may submit: the
+# stage commits plus the probes their operators need. Lineage counts are
+# read from the committed files, so a new bookkeeping action shows up here.
+MAX_PIPELINE_JOBS = 49
+
+
+@pytest.fixture(scope="module")
+def default_run(spark, spark_corpora, tmp_path_factory):
+    """One default pipeline run under its own job group → (pipeline,
+    output, ids of the Spark jobs it submitted)."""
+    ta, tb, matches = spark_corpora
+    sc = spark.sparkContext
+    group = "pipeline-job-guard"
+    pipe = ERPipeline(spark, str(tmp_path_factory.mktemp("er")), PipelineConfig(k=5))
+    sc.setJobGroup(group, "default pipeline run")
+    try:
+        out = pipe.run(ta, tb, matches, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return pipe, out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+COMMITTED = ["records_a", "records_b", "candidates", "labeled", "predictions",
+             "matched_pairs", "clusters", "metrics"]
+
+
+def test_pipeline_job_count_guard(default_run):
+    _, out, jobs = default_run
+    assert out["metrics"]["f1"] >= 0.99
+    assert 0 < len(jobs) <= MAX_PIPELINE_JOBS
+
+
+def test_lineage_counts_equal_snapshot_rows(default_run):
+    """Every stage's lineage row carries the rows its snapshot holds, and
+    the labeled stage its label matches — read from the committed files."""
+    from pyspark.sql import functions as F
+
+    pipe, _, _ = default_run
+    cat = pipe.catalog
+    lin = cat.lineage().toPandas().set_index("stage")
+    assert set(lin.index) == set(COMMITTED) - {"metrics"}
+    for stage, row in lin.iterrows():
+        assert row["candidate_count"] == cat.read(stage).count(), stage
+    n_pos = cat.read("labeled").agg(F.sum("label")).first()[0]
+    assert lin.loc["labeled", "matches"] == n_pos > 0
+
+
+def test_catalog_read_schema_equals_inferred(spark, default_run):
+    """read() takes the schema from the manifest; it must be exactly what
+    parquet inference returns, nested arrays included."""
+    cat = default_run[0].catalog
+    nested = False
+    for t in COMMITTED:
+        snap = cat.snapshots(t)[-1]
+        want = spark.read.parquet(str(snap)).schema
+        assert cat.read(t).schema == want, t
+        nested |= any(f.dataType.typeName() == "array" for f in want.fields)
+    assert nested
+
+
+def test_spark_ml_model_still_scores_after_pipeline_run(spark, default_run):
+    """A pipeline run leaves its session usable for Spark ML: a model that
+    keeps a training summary must still evaluate afterwards (a session
+    that has used a pyspark Observation fails here with Task not
+    serializable)."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    df = spark.createDataFrame([(float(i % 2), float(i)) for i in range(8)], "label double, x double")
+    ft = VectorAssembler(inputCols=["x"], outputCol="features").transform(df)
+    model = LogisticRegression(maxIter=2).fit(ft)
+    assert len(model.transform(ft).select("probability").collect()) == 8
