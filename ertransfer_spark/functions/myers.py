@@ -18,6 +18,11 @@ Exactness: integer edit distances, no approximation. Pairs are sorted by
 state updates need no masking (a pair's score is final once it leaves the
 prefix). Parity with the classic DP is pinned in tests (random + unicode +
 supplementary-plane + cross-limb lengths + empties).
+
+Layout: Peq and the VP/VN state are limb-major, ``(L, n)``, so every limb
+op reads one contiguous row; the cross-limb shift and the carry add are
+2-D ops plus an in-place ripple over the L limbs, and each step writes
+into preallocated buffers.
 """
 
 from __future__ import annotations
@@ -55,75 +60,82 @@ def _myers_chunk(A: list[str], B: list[str]) -> np.ndarray:
     for i, s in enumerate(B):
         bc[i, : len(s)] = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64) + 1
 
-    # batch-local code compression -> Peq is (n, V, L)
     uniq, inv = np.unique(np.concatenate([ac.ravel(), bc.ravel()]), return_inverse=True)
     V = len(uniq)
     ac_c = inv[: ac.size].reshape(ac.shape)
     bc_c = inv[ac.size :].reshape(bc.shape)
 
-    peq = np.zeros(n * V * L, dtype=np.uint64)
+    # limb-major Peq: row l holds limb l of every (pair, code) mask
+    peq = np.zeros(L * n * V, dtype=np.uint64)
     pos = np.arange(mmax, dtype=np.int64)
     limb = pos // 64
     bit = _ONE << (pos % 64).astype(np.uint64)
     rows = np.arange(n, dtype=np.int64)[:, None]
-    flat_idx = (rows * V + ac_c) * L + limb[None, :]
+    flat_idx = (limb[None, :] * n + rows) * V + ac_c
     valid = pos[None, :] < m[:, None]
     np.bitwise_or.at(peq, flat_idx[valid], np.broadcast_to(bit, (n, mmax))[valid])
-    peq = peq.reshape(n, V, L)
+    peq = peq.reshape(L, n * V)
     if uniq[0] == 0:
-        peq[:, 0, :] = 0  # padding code never matches
+        peq[:, ::V] = 0  # padding code never matches
+    # column of pair i's code c in peq, per step: i * V + c
+    bc_c += np.arange(n, dtype=np.int64)[:, None] * V
+    cols = np.ascontiguousarray(bc_c.T)  # step j's columns are cols[j, :k]
 
-    full = np.zeros((n, L), dtype=np.uint64)
-    for l in range(L):
-        k = np.clip(m - l * 64, 0, 64).astype(np.uint64)
-        full[:, l] = np.where(k >= 64, _U64MAX, (_ONE << k) - _ONE)
+    kbits = np.clip(m[None, :] - 64 * np.arange(L, dtype=np.int64)[:, None], 0, 64).astype(np.uint64)
+    full = np.where(kbits >= 64, _U64MAX, (_ONE << kbits) - _ONE)
     sl = ((m - 1) // 64).astype(np.int64)
     sbit = _ONE << ((m - 1) % 64).astype(np.uint64)
 
     VP = full.copy()
-    VN = np.zeros((n, L), dtype=np.uint64)
+    VN = np.zeros((L, n), dtype=np.uint64)
     score = m.copy()
-    ar = np.arange(n)
+    # flat index of pair i's score bit (limb sl, bit m-1) in an (L, n) array
+    sflat = sl * n + np.arange(n)
     neg_nb = -nb  # ascending
+    EQ, XV, X, R, HP, HN, T = (np.empty((L, n), dtype=np.uint64) for _ in range(7))
+    C = np.empty((L, n), dtype=bool)
 
     for j in range(bmax):
         k = int(np.searchsorted(neg_nb, -j, side="left"))  # count of |b| > j
         if k == 0:
             break
-        eq = peq[ar[:k], bc_c[:k, j], :]
-        vp = VP[:k]
-        vn = VN[:k]
-        fu = full[:k]
-        xv = eq | vn
-        # (eq & vp) + vp with limb carries
-        x = eq & vp
-        res = np.empty_like(x)
-        carry = np.zeros(k, dtype=np.uint64)
-        for l in range(L):
-            s1 = x[:, l] + vp[:, l]
-            c1 = s1 < x[:, l]
-            s2 = s1 + carry
-            c2 = s2 < s1
-            res[:, l] = s2
-            carry = (c1 | c2).astype(np.uint64)
-        xh = (res ^ vp) | eq
-        hp = vn | (~(xh | vp) & fu)
-        hn = vp & xh
-        up = (hp[ar[:k], sl[:k]] & sbit[:k]) != 0
-        dn = (hn[ar[:k], sl[:k]] & sbit[:k]) != 0
-        score[:k] += up.astype(np.int64) - dn.astype(np.int64)
-        # shift left by 1 across limbs
-        hp_s = np.empty_like(hp)
-        hn_s = np.empty_like(hn)
-        cp = np.ones(k, dtype=np.uint64)
-        cn = np.zeros(k, dtype=np.uint64)
-        for l in range(L):
-            hp_s[:, l] = (hp[:, l] << _ONE) | cp
-            cp = hp[:, l] >> _S63
-            hn_s[:, l] = (hn[:, l] << _ONE) | cn
-            cn = hn[:, l] >> _S63
-        VP[:k] = hn_s | (~(xv | hp_s) & fu)
-        VN[:k] = hp_s & xv
+        eq, xv, x, res, hp, hn, t = (a[:, :k] for a in (EQ, XV, X, R, HP, HN, T))
+        vp, vn, fu = VP[:, :k], VN[:, :k], full[:, :k]
+        np.take(peq, cols[j, :k], axis=1, out=eq, mode="clip")
+        np.bitwise_or(eq, vn, out=xv)
+        # (eq & vp) + vp as one L*64-bit add: per-limb sums, then ripple
+        np.bitwise_and(eq, vp, out=x)
+        np.add(x, vp, out=res)
+        if L > 1:
+            carry = np.less(res, x, out=C[:, :k])
+            for l in range(1, L):
+                res[l] += carry[l - 1]
+                carry[l] |= carry[l - 1] & (res[l] == 0)
+        # xh = (res ^ vp) | eq, kept in x
+        np.bitwise_xor(res, vp, out=x)
+        x |= eq
+        # hp = vn | ~(xh | vp) & fu ; hn = vp & xh
+        np.bitwise_or(x, vp, out=hp)
+        np.invert(hp, out=hp)
+        hp &= fu
+        hp |= vn
+        np.bitwise_and(vp, x, out=hn)
+        score[:k] += (HP.ravel().take(sflat[:k]) & sbit[:k]) != 0
+        score[:k] -= (HN.ravel().take(sflat[:k]) & sbit[:k]) != 0
+        # shift left by 1 across limbs (VP's low bit is shifted in as 1)
+        np.left_shift(hp, _ONE, out=t)
+        t[0] |= _ONE
+        if L > 1:
+            t[1:] |= hp[:-1] >> _S63
+        # hp_s now in t; VN = hp_s & xv ; VP = hn_s | ~(xv | hp_s) & fu
+        np.bitwise_and(t, xv, out=vn)
+        np.bitwise_or(xv, t, out=x)
+        np.invert(x, out=x)
+        x &= fu
+        np.left_shift(hn, _ONE, out=t)
+        if L > 1:
+            t[1:] |= hn[:-1] >> _S63
+        np.bitwise_or(t, x, out=vp)
 
     out = np.empty(n, dtype=np.int64)
     out[order] = score

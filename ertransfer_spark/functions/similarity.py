@@ -4,8 +4,9 @@
   array columns (parity: pyJedAI metric param, splitters/KNN-Join/
   splitter.py:78, settings grid settings.py:1-12). JVM-side, codegens.
 - Levenshtein: Spark's built-in ``F.levenshtein`` (JVM) normalized to a
-  similarity.
-- Jaro-Winkler + batched pair feature vector: Arrow-batched pandas UDF —
+  similarity; the featurize hot path computes the same values with the
+  batch Myers kernel (``levenshtein_sim_udf``, functions/myers.py).
+- Jaro-Winkler: Arrow-batched pandas UDF —
   the "Magellan auto feature" analog (methods/magellan/entrypoint.py:81-89)
   prescribed as a vectorized scalar UDF by the north rule. rapidfuzz is not
   in the image so Jaro-Winkler is implemented here (pinned spec:
@@ -20,7 +21,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import DoubleType
 
 
 # --------------------------------------------------------------------------
@@ -265,76 +266,6 @@ FEATURE_NAMES = [
     "len_ratio",
     "prefix_sim",
 ]
-
-
-def _pair_features_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    import numpy as np
-
-    from ertransfer_spark.functions.myers import myers_lev_batch
-
-    jw_fn = _RF_JW or jaro_winkler
-    av = a.fillna("")
-    bv = b.fillna("")
-    # one vectorized Myers pass for the whole batch (identical values to
-    # the per-row _levenshtein_capped DP, which remains the spec/reference)
-    levs = myers_lev_batch([x[:256] for x in av], [y[:256] for y in bv])
-    out = []
-    for i, (x, y) in enumerate(zip(av, bv)):
-        tx, ty = set(x.split()), set(y.split())
-        o = float(len(tx & ty))
-        u = float(len(tx | ty))
-        sx, sy = float(len(tx)), float(len(ty))
-        jac = o / u if u else 0.0
-        dic = 2.0 * o / (sx + sy) if sx + sy else 0.0
-        cos = o / np.sqrt(sx * sy) if sx and sy else 0.0
-        ovl = o / min(sx, sy) if sx and sy else 0.0
-        lx, ly = len(x), len(y)
-        ml = max(lx, ly)
-        if ml:
-            lev = 1.0 - int(levs[i]) / float(max(min(lx, 256), min(ly, 256), 1))
-        else:
-            lev = 1.0
-        jw = jw_fn(x[:64], y[:64])
-        lr = min(lx, ly) / ml if ml else 1.0
-        pfx = 0
-        for ca, cb in zip(x[:16], y[:16]):
-            if ca == cb:
-                pfx += 1
-            else:
-                break
-        psim = pfx / 16.0
-        out.append([jac, dic, cos, ovl, lev, jw, lr, psim])
-    return pd.Series(out, index=a.index)
-
-
-def _levenshtein_capped(x: str, y: str, cap: int = 256) -> int:
-    """Levenshtein with input truncation — the UDF fallback path; the hot
-    path uses Spark's JVM ``F.levenshtein`` instead (features_native)."""
-    x, y = x[:cap], y[:cap]
-    if x == y:
-        return 0
-    if not x:
-        return len(y)
-    if not y:
-        return len(x)
-    prev = list(range(len(y) + 1))
-    for i, cx in enumerate(x, 1):
-        cur = [i]
-        for j, cy in enumerate(y, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (cx != cy)))
-        prev = cur
-    return prev[-1]
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def pair_features_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched feature vector over (normalized_a, normalized_b) string pairs.
-
-    Arrow-batched; one Python invocation per ~10k rows. This is the
-    north-rule-prescribed vectorized feature UDF replacing Magellan's
-    auto feature table (methods/magellan/entrypoint.py:81-89).
-    """
-    return _pair_features_batch(a, b)
 
 
 def features_native(

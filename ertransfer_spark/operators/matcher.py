@@ -8,13 +8,15 @@ vectorized similarity-feature vector (functions/similarity.py:
 pair_features / features_native — the Magellan auto-feature analog,
 methods/magellan/entrypoint.py:81-89).
 
-Flow (all lazy until fit):
+Flow:
   candidate pairs (a_id, b_id, label?) + canonical records
   → two hash equi-joins attach agValue/token_set (J4 parity,
     splitters/KNN-Join/splitter.py:99-103) — broadcast when a side is small
-  → feature columns (JVM exprs + one Arrow-batched pandas UDF)
-  → Spark ML fit on the train split (driver-coordinated, data-parallel)
-  → model.transform scores ALL candidates → (a_id, b_id, label,
+  → feature columns (JVM exprs + one Arrow-batched pandas UDF), computed
+    ONCE for every pair: the pipeline materialises the featurized frame
+    and both steps below read that one frame
+  → fit on its train split (driver IRLS or Spark ML)
+  → score ALL candidates of the same frame → (a_id, b_id, label,
     prob_class1)  [F10 contract: methods/emtransformer/transform.py:75-79]
 
 Ids are carried through the scoring plan (no positional re-attach like
@@ -288,9 +290,9 @@ def tfidf_cosine(
         F.explode(F.array_distinct(tokens_col)).alias("tok"),
     )
     if n_docs is None:
-        # two eager count() jobs — callers invoking tfidf_cosine more than
-        # once on the same corpus (e.g. train + full featurize) should
-        # count once and pass n_docs in
+        # two eager count() jobs — callers that already know the corpus
+        # size (the pipeline reads it from the records manifests) pass
+        # n_docs in
         n_docs = records_a.count() + records_b.count()
     df_tok = (
         toks_a.select("tok").unionAll(toks_b.select("tok"))

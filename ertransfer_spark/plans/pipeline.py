@@ -9,6 +9,12 @@ stage whose snapshot is already committed — kill the driver at any stage
 boundary and rerun: only the remaining stages execute (the north-rule
 checkpoint/resume contract; reference precedent is only model-checkpoint
 reuse, methods/emtransformer/entrypoint.py:83-87,179-202).
+
+The predictions stage featurizes the candidate pairs once per run
+(:meth:`ERPipeline._featurize`) into one ``localCheckpoint()``ed frame,
+computed by one job spread over at least the session's parallelism, that
+the train split, the train-cap count, the fit (IRLS, Spark ML or the
+unsupervised GMM) and scoring all read.
 """
 
 from __future__ import annotations
@@ -17,6 +23,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,6 +135,45 @@ class ERPipeline:
         }])
         return self.catalog.read(name)
 
+    def _featurize(self, pairs: DataFrame, raw_a: DataFrame | None = None,
+                   raw_b: DataFrame | None = None) -> DataFrame:
+        """The feature vector of every pair in ``pairs``, against the
+        committed ``records_a``/``records_b``, lazily
+        ``localCheckpoint()``ed: the first job that reads it (the
+        train-cap count on the supervised path) computes it once, and
+        training and scoring read its blocks instead of featurizing again.
+
+        The joined pair rows are hash-repartitioned on (a_id, b_id) to
+        ``max(defaultParallelism, input partitions)`` right before the
+        Arrow UDF: a committed snapshot is often one AQE-coalesced file,
+        and the UDF would otherwise run in one task. The shuffle sits
+        after the text joins because a broadcast join keeps the
+        partitioning of its streamed side, and the planner streams
+        whichever side is larger — on small corpora the one-file records
+        scan, not the pairs. The count is explicit so AQE cannot coalesce
+        the UDF stage back; it is not ``spark.sql.shuffle.partitions``,
+        since each extra Python task costs a fixed 150-250 ms on small
+        inputs."""
+        cfg = self.cfg
+        ra, rb = self.catalog.read("records_a"), self.catalog.read("records_b")
+        n = max(self.spark.sparkContext.defaultParallelism,
+                pairs.rdd.getNumPartitions())
+        text = attach_pair_text(pairs, ra, rb, truncate=256)
+        ft = featurize(text.repartition(n, "a_id", "b_id"))
+        if cfg.attrs:
+            from ertransfer_spark.operators.matcher import attr_features
+
+            ft, _ = attr_features(
+                ft, raw_a, raw_b, list(cfg.attrs), extra=list(cfg.attr_extra)
+            )
+        if cfg.tfidf:
+            from ertransfer_spark.operators.matcher import tfidf_cosine
+
+            # idf's corpus size from the records manifests, not count() jobs
+            n_docs = sum(self.catalog.manifest(t)["rows"] for t in ("records_a", "records_b"))
+            ft = tfidf_cosine(ft, ra, rb, max_df=cfg.tfidf_max_df, n_docs=n_docs)
+        return ft.localCheckpoint(eager=False)
+
     def run(
         self,
         transcripts_a: DataFrame,
@@ -194,27 +240,6 @@ class ERPipeline:
                 "labeled", lambda: attach_labels(cand, golden), resume, label_col="label"
             )
 
-        # corpus size for tfidf idf: count ONCE here — _featurize runs up to
-        # twice per pipeline (train + full featurize) and tfidf_cosine would
-        # otherwise re-run both count() jobs per invocation
-        n_docs_tfidf = (ra.count() + rb.count()) if cfg.tfidf else None
-
-        def _featurize(pairs_df):
-            ft = featurize(attach_pair_text(pairs_df, ra, rb, truncate=256))
-            if cfg.attrs:
-                from ertransfer_spark.operators.matcher import attr_features
-
-                ft, _ = attr_features(
-                    ft, raw_a, raw_b, list(cfg.attrs), extra=list(cfg.attr_extra)
-                )
-            if cfg.tfidf:
-                from ertransfer_spark.operators.matcher import tfidf_cosine
-
-                ft = tfidf_cosine(
-                    ft, ra, rb, max_df=cfg.tfidf_max_df, n_docs=n_docs_tfidf
-                )
-            return ft
-
         feature_cols = None
         if cfg.attrs or cfg.tfidf:
             attr_names = [
@@ -226,9 +251,13 @@ class ERPipeline:
             )
 
         def _predict():
+            # every consumer below (train split, train-cap count, scoring,
+            # the unsupervised fit) reads this one materialised frame
+            ft = self._featurize(labeled, raw_a, raw_b)
             if golden is not None and cfg.algorithm != "unsupervised":
-                splits = stratified_split(labeled, cfg.split_weights, cfg.seed)
-                train_pairs = splits["train"]
+                # the split hash reads only (a_id, b_id), so it selects the
+                # same train rows from the featurized frame as from labeled
+                train_ft = stratified_split(ft, cfg.split_weights, cfg.seed)["train"]
                 if (cfg.algorithm == "logreg" and cfg.local_train
                         and not cfg.train_params):
                     from ertransfer_spark.operators.matcher import (
@@ -242,26 +271,24 @@ class ERPipeline:
                     # and degenerate the IRLS boundary — so the driver
                     # collect is bounded by n_positives + ~cap (ceil keeps
                     # the negative sample <= cap; floor allowed up to 2x).
-                    n_train = train_pairs.count()
+                    n_train = train_ft.count()
                     keep = max(1, -(-n_train // cfg.train_sample_cap))
                     if keep > 1:
-                        train_pairs = train_pairs.filter(
+                        train_ft = train_ft.filter(
                             (F.col("label") == 1)
                             | (F.pmod(
                                 F.xxhash64("a_id", "b_id", F.lit(999)),
                                 F.lit(keep),
                             ) == 0)
                         )
-                    model = train_matcher_local(
-                        _featurize(train_pairs), feature_cols=feature_cols
-                    )
+                    model = train_matcher_local(train_ft, feature_cols=feature_cols)
                 else:
                     model = train_matcher(
-                        _featurize(train_pairs), algorithm=cfg.algorithm,
+                        train_ft, algorithm=cfg.algorithm,
                         seed=cfg.seed, feature_cols=feature_cols,
                         params=cfg.train_params,
                     )
-                preds = score(model, _featurize(labeled))
+                preds = score(model, ft)
             else:
                 # no labels (or algorithm="unsupervised"): ZeroER-style GMM
                 # over the similarity features — the reference paper's
@@ -271,9 +298,8 @@ class ERPipeline:
                     train_unsupervised,
                 )
 
-                all_ft = _featurize(labeled)
-                um = train_unsupervised(all_ft, seed=cfg.seed, feature_cols=feature_cols)
-                preds = score_unsupervised(um, all_ft)
+                um = train_unsupervised(ft, seed=cfg.seed, feature_cols=feature_cols)
+                preds = score_unsupervised(um, ft)
             return preds
 
         preds = self._stage("predictions", _predict, resume)
@@ -304,15 +330,15 @@ class ERPipeline:
             metrics.update(
                 {f"clf_{k}": v for k, v in evaluate_predictions(preds).items()}
             )
-            mdf = self.spark.createDataFrame(
-                [
-                    {
-                        "run_id": self.run_id,
-                        "stage": "pipeline",
-                        **{k: float(v) for k, v in metrics.items()},
-                    }
-                ]
-            )
+            row = {
+                "run_id": self.run_id,
+                "stage": "pipeline",
+                **{k: float(v) for k, v in metrics.items()},
+            }
+            # a pandas frame crosses to the JVM through Arrow, with no
+            # Python worker; sorted columns keep the schema the
+            # list-of-dicts path inferred
+            mdf = self.spark.createDataFrame(pd.DataFrame([row])[sorted(row)])
             self.catalog.commit("metrics", mdf, meta={"run_id": self.run_id})
             result["metrics"] = metrics
         return result

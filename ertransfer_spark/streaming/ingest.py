@@ -95,17 +95,17 @@ def stream_to_catalog(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        records = canonicalize(batch_df)
-        n = records.count()
-        catalog.commit(f"{table}_batch_{batch_id:05d}", records, meta={"batch_id": batch_id})
+        stage = f"{table}_batch_{batch_id:05d}"
+        catalog.commit(stage, canonicalize(batch_df), meta={"batch_id": batch_id})
         catalog.append_lineage(
             [
                 {
-                    "stage": f"{table}_batch_{batch_id:05d}",
+                    "stage": stage,
                     "run_id": f"stream-{batch_id}",
                     "wall_ms": 0,
                     "block_key": "",
-                    "candidate_count": int(n),
+                    # rows written, from the commit's manifest: no count() job
+                    "candidate_count": catalog.manifest(stage)["rows"],
                     "comparisons": 0,
                     "matches": 0,
                 }
@@ -253,8 +253,6 @@ def incremental_dedup_stream(
             .select("a_id", "b_id", "sim")
         )
 
-        n_new = new.count()
-        n_pairs = pairs.count()
         catalog.append(
             corpus_table,
             new.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))),
@@ -267,17 +265,20 @@ def incremental_dedup_stream(
             new_bands.select("n_id", "band_idx", "band_hash"),
             meta={"batch_id": batch_id},
         )
-        catalog.commit(f"{dup_table}_batch_{batch_id:05d}", pairs, meta={"batch_id": batch_id})
+        stage = f"{dup_table}_batch_{batch_id:05d}"
+        catalog.commit(stage, pairs, meta={"batch_id": batch_id})
+        # rows each commit wrote, from its manifest: no count() jobs, and
+        # the verify join runs once, in the commit
         catalog.append_lineage(
             [
                 {
-                    "stage": f"{dup_table}_batch_{batch_id:05d}",
+                    "stage": stage,
                     "run_id": f"stream-{batch_id}",
                     "wall_ms": 0,
                     "block_key": "",
-                    "candidate_count": int(n_new),
+                    "candidate_count": catalog.manifest(corpus_table)["rows"],
                     "comparisons": int(n_cand),
-                    "matches": int(n_pairs),
+                    "matches": catalog.manifest(stage)["rows"],
                 }
             ]
         )

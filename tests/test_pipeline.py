@@ -14,6 +14,22 @@ def workdir(tmp_path):
     return str(tmp_path / "er")
 
 
+def count_featurize(monkeypatch) -> list[int]:
+    """Count the pipeline's calls to ``featurize``; returns a one-element
+    list holding the count."""
+    import ertransfer_spark.plans.pipeline as pipeline
+
+    calls = [0]
+    real = pipeline.featurize
+
+    def counted(df):
+        calls[0] += 1
+        return real(df)
+
+    monkeypatch.setattr(pipeline, "featurize", counted)
+    return calls
+
+
 def test_pipeline_f1_vs_golden(spark, spark_corpora, workdir):
     ta, tb, matches = spark_corpora
     pipe = ERPipeline(spark, workdir, PipelineConfig(k=5))
@@ -110,28 +126,34 @@ def test_snapshot_catalog_append_mode(spark, tmp_path):
     assert cat.read("t").count() == 4
 
 
-def test_unsupervised_pipeline_no_labels(spark, spark_corpora, tmp_path):
+def test_unsupervised_pipeline_no_labels(spark, spark_corpora, tmp_path, monkeypatch):
     """ZeroER regime: NO golden matches given to the pipeline — the GMM
     matcher + fixed threshold must still recover the duplicate pairs
     (evaluated against the golden set only afterwards, externally)."""
     from ertransfer_spark.operators.clustering import pairwise_metrics
 
     ta, tb, matches = spark_corpora
+    calls = count_featurize(monkeypatch)
     pipe = ERPipeline(spark, str(tmp_path / "unsup"), PipelineConfig(k=5))
     out = pipe.run(ta, tb, golden_matches=None, resume=False)
     m = pairwise_metrics(out["matched_pairs"], matches)
     assert m["f1"] >= 0.9, m
+    # the GMM fit and its scoring read one featurized frame
+    assert calls == [1]
 
 
-def test_pipeline_tfidf_feature(spark, spark_corpora, workdir):
+def test_pipeline_tfidf_feature(spark, spark_corpora, workdir, monkeypatch):
     """PipelineConfig(tfidf=True) threads the corpus-IDF token-cosine
     feature through train AND score (feature_cols stays consistent) and
     holds the F1 bar; predictions carry the standard contract columns."""
     ta, tb, matches = spark_corpora
+    calls = count_featurize(monkeypatch)
     pipe = ERPipeline(spark, workdir, PipelineConfig(k=5, tfidf=True))
     out = pipe.run(ta, tb, matches)
     assert out["metrics"]["f1"] >= 0.99
     assert {"a_id", "b_id", "prob_class1"} <= set(out["predictions"].columns)
+    # train and score share one featurized frame, so one tfidf join
+    assert calls == [1]
 
 
 def test_pipeline_local_train_cap_keeps_positives(spark, spark_corpora, workdir):
@@ -150,7 +172,7 @@ def test_pipeline_local_train_cap_keeps_positives(spark, spark_corpora, workdir)
 # Spark jobs one default pipeline run over the test corpus may submit: the
 # stage commits plus the probes their operators need. Lineage counts are
 # read from the committed files, so a new bookkeeping action shows up here.
-MAX_PIPELINE_JOBS = 49
+MAX_PIPELINE_JOBS = 48
 
 
 @pytest.fixture(scope="module")
@@ -219,3 +241,46 @@ def test_spark_ml_model_still_scores_after_pipeline_run(spark, default_run):
     ft = VectorAssembler(inputCols=["x"], outputCol="features").transform(df)
     model = LogisticRegression(maxIter=2).fit(ft)
     assert len(model.transform(ft).select("probability").collect()) == 8
+
+
+def test_predictions_equal_two_featurize_reference(spark, spark_corpora, tmp_path, monkeypatch):
+    """A default run featurizes once, and its predictions equal the
+    reference that featurizes the train split and then every pair."""
+    from ertransfer_spark.operators.matcher import (
+        attach_pair_text,
+        featurize,
+        score,
+        train_matcher_local,
+    )
+    from ertransfer_spark.operators.labeling import stratified_split
+
+    ta, tb, matches = spark_corpora
+    calls = count_featurize(monkeypatch)
+    pipe = ERPipeline(spark, str(tmp_path / "er"), PipelineConfig(k=5))
+    out = pipe.run(ta, tb, matches, resume=False)
+    assert calls == [1]
+
+    cat = pipe.catalog
+    labeled, ra, rb = cat.read("labeled"), cat.read("records_a"), cat.read("records_b")
+    train = stratified_split(labeled)["train"]
+    model = train_matcher_local(featurize(attach_pair_text(train, ra, rb, truncate=256)))
+    want = score(model, featurize(attach_pair_text(labeled, ra, rb, truncate=256)))
+
+    key = ["a_id", "b_id"]
+    got = out["predictions"].toPandas().sort_values(key).reset_index(drop=True)
+    want = want.toPandas().sort_values(key).reset_index(drop=True)
+    assert len(got) == len(want) == labeled.count()
+    pd.testing.assert_frame_equal(got[key], want[key])
+    assert (got["label"] == want["label"]).all()
+    assert (got["prob_class1"] - want["prob_class1"]).abs().max() <= 1e-9
+
+
+def test_featurized_frame_spreads_single_file_input(spark, default_run):
+    """A one-partition pair input is featurized over at least the
+    session's parallelism, not in one Arrow UDF task."""
+    pipe = default_run[0]
+    one = pipe.catalog.read("labeled").coalesce(1)
+    assert one.rdd.getNumPartitions() == 1
+    ft = pipe._featurize(one)
+    assert ft.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert ft.count() == one.count()

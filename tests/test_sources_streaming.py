@@ -161,6 +161,9 @@ def test_stream_matches_batch_canonicalization(spark, tmp_path):
     g = dict(zip(got["conv_id"], got["agValue"]))
     w = dict(zip(want["conv_id"], want["agValue"]))
     assert g == w
+    # the lineage row carries the rows the batch's snapshot holds
+    lin = catalog.lineage().toPandas().set_index("stage")
+    assert lin.loc["stream_records_batch_00000", "candidate_count"] == len(got)
 
 
 def _write_batch(src, name, pdf):
@@ -227,6 +230,14 @@ def test_incremental_dedup_stream(spark, tmp_path):
     ) == snap0_files
     delta = catalog.read("corpus_records", snapshot="snap-00001")
     assert set(r["conv_id"] for r in delta.select("conv_id").collect()) == set(tb["conv_id"])
+
+    # each batch's lineage row carries the rows its commits wrote
+    lin = catalog.lineage().toPandas().set_index("stage")
+    for b in range(2):
+        row = lin.loc[f"dup_pairs_batch_{b:05d}"]
+        snap = catalog.read("corpus_records", snapshot=f"snap-{b:05d}")
+        assert row["candidate_count"] == snap.count()
+        assert row["matches"] == catalog.read(f"dup_pairs_batch_{b:05d}").count()
 
     found = _all_dup_pairs(catalog, 2)
     golden = {(a, b) for a, b in zip(matches["a_conv_id"], matches["b_conv_id"])}
