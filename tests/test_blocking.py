@@ -207,3 +207,73 @@ def test_token_jaccard_join_dense_equals_sparse(spark):
     # "hub" never witnesses an overlap: doc 0 vs 1000 share only tok0/pair0
     hub_pair = [r for r in ds if r[0] == 0 and r[1] == 1000]
     assert hub_pair and hub_pair[0][2] == 2  # overlap counts kept grams only
+
+
+def _topk_spec(recs_a, recs_b, k, metric, multiset, per="a"):
+    """Brute-force top-K spec: overlap is the shared-token count (set) or
+    the sum of min per-token counts (multiset); sizes are distinct-token
+    counts (set) or raw token counts (multiset); K best per ``per``-side
+    record, tie-break (sim DESC, other id ASC)."""
+    import math
+    from collections import Counter
+
+    def bag(toks):
+        return Counter(toks) if multiset else Counter(set(toks))
+
+    sims = []
+    for a_id, ta in recs_a:
+        for b_id, tb in recs_b:
+            ca, cb = bag(ta), bag(tb)
+            o = sum(min(n, cb[t]) for t, n in ca.items() if t in cb)
+            if not o:
+                continue
+            sa, sb = float(sum(ca.values())), float(sum(cb.values()))
+            sim = {
+                "jaccard": o / (sa + sb - o),
+                "dice": 2.0 * o / (sa + sb),
+                "cosine": o / math.sqrt(sa * sb),
+            }[metric]
+            sims.append((a_id, b_id, o, sim))
+    key, other = (0, 1) if per == "a" else (1, 0)
+    out = {}
+    for rec in sorted(sims, key=lambda r: (r[key], -r[3], r[other])):
+        kept = out.setdefault(rec[key], [])
+        if len(kept) < k:
+            kept.append(rec)
+    return {(r[0], r[1]): (r[2], r[3]) for v in out.values() for r in v}
+
+
+def test_multiset_and_metrics_match_bruteforce_spec(spark):
+    """Multiset overlap (sum of min counts) and the dice/cosine metrics,
+    set and multiset, forward and reverse budgets, against a brute-force
+    spec on a corpus with repeated tokens and many tied similarities."""
+    import random
+
+    rng = random.Random(5)
+    vocab = ["p", "q", "r", "s", "t", "u"]
+
+    def corpus(n, prefix):
+        return [(f"{prefix}{i}", [rng.choice(vocab) for _ in range(rng.randint(1, 7))])
+                for i in range(n)]
+
+    recs_a, recs_b = corpus(12, "a"), corpus(10, "b")
+    schema = "conv_id string, token_set array<string>"
+    ra = spark.createDataFrame(recs_a, schema)
+    rb = spark.createDataFrame(recs_b, schema)
+    for multiset, metric in ((True, "jaccard"), (True, "dice"), (True, "cosine"),
+                             (False, "dice"), (False, "cosine")):
+        for direction in ("fwd", "rev"):
+            got = {
+                (r.a_id, r.b_id): (r.overlap, r.sim)
+                for r in top_k_token_join(
+                    ra, rb, k=2, metric=metric, multiset=multiset,
+                    direction=direction,
+                ).collect()
+            }
+            want = _topk_spec(recs_a, recs_b, 2, metric, multiset,
+                              per="a" if direction == "fwd" else "b")
+            case = (multiset, metric, direction)
+            assert set(got) == set(want), case
+            for pair, (o, sim) in want.items():
+                assert got[pair][0] == o, case
+                assert abs(got[pair][1] - sim) < 1e-12, case
