@@ -83,9 +83,9 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle → pair agg → jaccard. A = even ids, B = odd ids.
     Columns: a_id b_id overlap a_size b_size a_lang b_lang sim_r."""
     # Delegates to blocking.token_jaccard_join — ADAPTIVE: the sparse form
-    # (xxhash64 posting keys, skinny (g, id) postings, broadcast two-sided
-    # df-cap keep-set, equi-join + pair agg — the plan audited in prior
-    # rounds) is the web-scale default; when the capped shared dictionary
+    # (xxhash64 posting keys, skinny (g, id) postings, two-sided df cap as
+    # a broadcast hot-set join, equi-join + pair agg) is the web-scale
+    # default; when the capped shared dictionary
     # is small (runtime probe ≤ 4096, true for this corpus where the
     # posting join degenerates to near-all-pairs) a rectangular
     # block-matmul sweep computes the identical overlaps in one BLAS pass
@@ -216,9 +216,9 @@ def q_topk_rare_union(spark, sf_dir):
     pairs (lifted d10_imdb_dbpedia blocking recall 0.664 → 0.721 of a
     0.737 content ceiling). Unlike the other blocking oracles this one
     calls the REAL operator (``top_k_token_join``) end-to-end — skinny
-    postings, xxhash64 posting keys, targeted salt, union windows, rare
-    flag — so the DuckDB oracle checks the operator itself, not an
-    inline re-expression."""
+    xxhash64 postings, the hot-set df cap, hot-token salting, union
+    windows, rare flag — so the DuckDB oracle checks the operator itself,
+    not an inline re-expression."""
     from ertransfer_spark.operators.blocking import top_k_token_join
 
     d = _doc_shingles(spark, sf_dir)
@@ -227,8 +227,6 @@ def q_topk_rare_union(spark, sf_dir):
     out = top_k_token_join(
         ra, rb, k=3, metric="jaccard", id_col="id", tokens_col="s",
         direction="union", max_token_df=MAX_GRAM_DF, keep_rare_df=20,
-        skinny_postings=True, hash_tokens=True, salt=2,
-        salt_hot_product=65536,
     )
     return out.select(
         "a_id", "b_id",
@@ -440,7 +438,7 @@ def q_dedup_shingle_jaccard(spark, sf_dir):
 
     d = _doc_shingles(spark, sf_dir)
     return shingle_jaccard_pairs(
-        d, gram_col="s", id_col="id", sz_col="sz",
+        d, gram_col="s", id_col="id",
         threshold=0.6, max_gram_df=MAX_GRAM_DF,
     )
 

@@ -73,9 +73,11 @@ def build_parser() -> argparse.ArgumentParser:
                           "(stop-token quadratic-blowup guard; required for "
                           "long-prose sides like d5-d7 abstracts)")
     side = run.add_mutually_exclusive_group()
-    side.add_argument("--reverse", action="store_true",
-                      help="spend the K budget on the larger B side (J3)")
-    side.add_argument("--direction", choices=["fwd", "rev", "union"], default=None,
+    side.add_argument("--reverse", action="store_const", dest="direction", const="rev",
+                      default="fwd",
+                      help="spend the K budget on the larger B side (J3); "
+                           "same as --direction rev")
+    side.add_argument("--direction", choices=["fwd", "rev", "union"], default="fwd",
                       help="top-K budget side; union = K per node on BOTH "
                            "sides (pyJedAI graph pruning — the d10 recipe)")
     run.add_argument("--clean", action="store_true",
@@ -175,7 +177,6 @@ def cmd_run(args) -> int:
         attrs=attrs, attr_extra=attr_extra,
         qgram=args.qgram, qgram_multiset=not args.no_multiset,
         max_token_df=args.max_token_df, keep_rare_df=args.keep_rare_df,
-        reverse=args.reverse,
         direction=args.direction,
     )
     pipe = ERPipeline(spark, str(out / "snapshots"), cfg)

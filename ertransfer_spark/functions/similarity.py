@@ -35,8 +35,7 @@ def _overlap(a: Column, b: Column) -> Column:
 # Each metric accepts an optional pre-computed ``overlap`` column: emitting
 # several metrics over the same token arrays in ONE projection would
 # otherwise evaluate array_intersect once per metric (Catalyst/codegen does
-# not CSE them away across output columns — measured 3x in
-# scripts/exp_features_cse.py). featurize() materializes the overlap in a
+# not CSE them away across output columns — measured 3x, BENCH.md). featurize() materializes the overlap in a
 # prior projection and passes it in; values are identical either way.
 
 def jaccard(a: Column, b: Column, overlap: Column | None = None) -> Column:

@@ -8,15 +8,17 @@ pairs; /root/reference/splitters/random-split/merger.py:34 drop_duplicates
 is the exact-dup case). Here each flavor is a standalone operator:
 
 - exact:   hash-groupBy on the full text digest — one shuffle, no joins.
-- n-gram:  character-q-gram Jaccard self-join (explode → equi-join →
-           overlap agg), df-pruned so a hot gram cannot explode the join.
+- n-gram:  q-gram / word-shingle Jaccard self-join over the set-overlap
+           kernel (operators.overlap), df-pruned so a hot gram cannot
+           explode the join.
 - minhash: JVM-native MinHash+LSH banding (blocking.minhash_lsh_join) —
            the 100 TB path: candidates ∝ true near-dups, not |corpus|².
 - simhash: 32-bit SimHash fingerprint from a pinned polynomial token hash
            (portable: the same hash is expressible in any engine, so the
            DuckDB oracle can verify it bit-for-bit).
 
-All pure Column expressions except nothing — zero Python in any of these.
+All pure Column expressions except the n-gram join's dense grid kernel
+(one numpy matmul per grid cell).
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ertransfer_spark.functions.text import normalize, qgrams, tokens
+from ertransfer_spark.functions.text import tokens
+from ertransfer_spark.operators.overlap import jaccard_at_least, overlap_pairs
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -54,233 +57,36 @@ def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def ngram_jaccard_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    q: int = 3,
-    threshold: float = 0.5,
-    max_gram_df: int = 50,
-) -> DataFrame:
-    """Near-dup pairs by character-q-gram Jaccard → (a_id, b_id, sim_r).
-
-    Self-join semantics: a_id < b_id. ``max_gram_df`` drops grams shared by
-    more than that many docs *before* the pair join — the per-block budget
-    that keeps a stop-gram from generating df² candidates (north-rule skew
-    control). Jaccard uses the FULL gram-set sizes, so pruning only lowers
-    recall for pairs whose entire overlap is hot grams (none, at any
-    sensible threshold).
-    """
-    g = docs.select(
-        F.col(id_col).cast("long").alias("id"),
-        qgrams(F.col(text_col), q=q).alias("grams"),
-    ).withColumn("sz", F.size("grams"))
-    posts = g.select("id", "sz", F.explode("grams").alias("gram"))
-    dfreq = posts.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    keep = dfreq.filter(F.col("df") <= max_gram_df).select("gram")
-    posts = posts.join(F.broadcast(keep), "gram")
-    left = posts.select(
-        F.col("id").alias("a_id"), F.col("sz").alias("a_sz"), "gram"
-    )
-    right = posts.select(
-        F.col("id").alias("b_id"), F.col("sz").alias("b_sz"), "gram"
-    )
-    pairs = (
-        left.join(right, "gram")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(
-            F.count(F.lit(1)).alias("overlap"),
-            F.first("a_sz").alias("a_sz"),
-            F.first("b_sz").alias("b_sz"),
-        )
-    )
-    sim = F.col("overlap") / (F.col("a_sz") + F.col("b_sz") - F.col("overlap"))
-    return (
-        pairs.withColumn("sim_r", F.round(sim, 6))
-        .filter(F.col("sim_r") >= threshold)
-        .select("a_id", "b_id", "sim_r")
-    )
-
-
 def shingle_jaccard_pairs(
     docs: DataFrame,
     gram_col: str = "s",
     id_col: str = "id",
-    sz_col: str = "sz",
     threshold: float = 0.6,
     max_gram_df: int = 500,
     dense_dict_max: int = 4096,
     rows_per_block: int = 4096,
 ) -> DataFrame:
     """Threshold Jaccard self-join over pre-shingled docs → (a_id, b_id, sim_r),
-    a_id < b_id, with an ADAPTIVE physical strategy.
+    a_id < b_id: a rounded-threshold filter over the set-overlap kernel's
+    triangular self-join (``operators.overlap``).
 
-    Input: one row per doc with ``gram_col`` = array of distinct shingle
-    strings and ``sz_col`` = size of the FULL shingle set (the Jaccard
-    denominator uses full sizes; the df cap only prunes which grams can
-    WITNESS an overlap — same contract as :func:`ngram_jaccard_dedup`).
-
-    Two kernels, chosen at runtime from the df-capped gram-dictionary size
-    (one O(1)-row driver probe):
-
-    - **sparse** (the web-scale default): xxhash64 posting keys, hot grams
-      (df > ``max_gram_df``) removed by a broadcast ANTI-join — the hot set
-      is provably ≤ |postings|/cap rows, so it broadcasts at any corpus
-      size, unlike the keep-set — then the triangular posting self-join +
-      pair count agg.
-    - **dense** (when the kept dictionary ≤ ``dense_dict_max``): a
-      triangular block-matrix sweep (same shape as
-      ``simsearch.cosine_neardup_pairs``): docs are hash-bucketed into
-      blocks, each unordered block pair is ONE cogrouped applyInPandas
-      cell, and the cell computes ALL pairwise overlaps with a single
-      binary-matrix float32 matmul over a cell-local dictionary
-      (np.unique + searchsorted). Exact: 0/1 dot products ≤ dict size are
-      exactly representable in float32, and the kernel only PREFILTERS
-      with a margin — the authoritative round(·,6) ≥ threshold filter runs
-      in Spark expressions, identical to the sparse path and the SQL
-      oracle. This is the small-dictionary regime where the posting join
-      degenerates to near-all-pairs (every gram hot but under the cap):
-      streaming sum(df²) rows through a shuffle loses to one BLAS sweep.
-
-    Both kernels return the identical pair set (dense-vs-sparse equality
-    is pinned in tests/test_dedup_textstats.py).
+    Input: one row per doc with ``gram_col`` = array of shingle strings
+    (character q-grams from ``functions.text.qgrams`` or word shingles from
+    ``word_shingles``). The Jaccard denominator is the size of the distinct
+    array; grams with df > ``max_gram_df`` are dropped as WITNESSES of an
+    overlap only — the per-block budget that keeps a stop-gram from
+    generating df² candidates. The kernel runs the triangular dense
+    block-matmul grid when the capped dictionary has at most
+    ``dense_dict_max`` grams (the small-dictionary regime where the posting
+    join degenerates to near-all-pairs), else the sparse posting self-join;
+    the output is the same either way (pinned in tests/test_properties.py).
     """
-    import numpy as np
-    import pandas as pd
-
-    h = docs.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.expr(f"transform({gram_col}, x -> xxhash64(x))").alias("hs"),
-        F.col(sz_col).cast("int").alias("sz"),
+    d = docs.select(F.col(id_col).cast("long").alias("id"), gram_col)
+    pairs = overlap_pairs(
+        d, None, "id", gram_col, max_token_df=max_gram_df, min_jaccard=threshold,
+        dense_dict_max=dense_dict_max, rows_per_block=rows_per_block,
     )
-    posts = h.select("id", F.explode("hs").alias("g"))
-    # one pass computes the df table; materialized so the dictionary-size
-    # probe and the hot-set reuse it instead of recomputing the postings agg
-    dfreq = posts.groupBy("g").agg(F.count(F.lit(1)).alias("df")).localCheckpoint()
-    hot = dfreq.filter(F.col("df") > max_gram_df).select("g")
-    # one bounded collect is both the dictionary-size probe and, in the
-    # dense branch, the dictionary itself
-    kept = dfreq.filter(F.col("df") <= max_gram_df).select("g").limit(dense_dict_max + 1).collect()
-    n_kept = len(kept)
-
-    sim_of = lambda ov, asz, bsz: F.round(ov / (asz + bsz - ov), 6)  # noqa: E731
-
-    if 0 < n_kept <= dense_dict_max:
-        # The kept dictionary is ≤ dense_dict_max rows by branch condition →
-        # O(dict) driver collect (like IVF centroids); the kernel restricts
-        # each cell-local vocab to it, so the grid feeds straight off the
-        # prepped (id, hs, sz) rows instead of the explode → anti-join →
-        # collect_list round trip (two corpus passes saved; BENCH.md
-        # 2026-08-21 decomposition).
-        keep_arr = np.sort(np.asarray([r["g"] for r in kept], dtype=np.int64))
-        sets = h.select("id", F.sort_array("hs").alias("gs"), "sz")
-        # materialized once: feeds BOTH cogroup sides and the block count
-        sets = sets.localCheckpoint()
-        from ertransfer_spark.operators.gridsweep import grid_blocks
-
-        n_docs = sets.count()
-        p = grid_blocks(
-            n_docs, rows_per_block,
-            docs.sparkSession.sparkContext.defaultParallelism, triangular=True,
-        )
-        v = sets.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(p)))
-        left = v.select(
-            F.col("blk").alias("bi"),
-            F.explode(F.sequence(F.col("blk"), F.lit(p - 1))).alias("bj"),
-            "id", "gs", "sz",
-        )
-        right = v.select(
-            F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-            F.col("blk").alias("bj"),
-            "id", "gs", "sz",
-        )
-        t_eff = threshold - 1e-6  # margin: Spark's rounded filter is authoritative
-
-        def overlap_cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"a_id": [], "b_id": [], "overlap": [], "a_sz": [], "b_sz": []}
-            ).astype(
-                {"a_id": "int64", "b_id": "int64", "overlap": "int64",
-                 "a_sz": "int32", "b_sz": "int32"}
-            )
-            if not len(lpdf) or not len(rpdf):
-                return empty
-            lg = [np.asarray(a, dtype=np.int64) for a in lpdf["gs"]]
-            rg = [np.asarray(a, dtype=np.int64) for a in rpdf["gs"]]
-            # gs arrives UNFILTERED; only under-cap grams may witness an
-            # overlap, so the cell vocab is intersected with the kept
-            # dictionary — identical semantics to the old posting-side
-            # anti-join, applied O(cell) instead of O(corpus).
-            vocab = np.intersect1d(
-                np.unique(np.concatenate(lg + rg)) if (lg or rg) else np.array([], dtype=np.int64),
-                keep_arr, assume_unique=True,
-            )
-
-            def densify(arrs):
-                M = np.zeros((len(arrs), len(vocab)), dtype=np.float32)
-                if len(vocab):
-                    rows = np.repeat(np.arange(len(arrs)), [len(a) for a in arrs])
-                    vals = np.concatenate(arrs) if arrs else np.array([], dtype=np.int64)
-                    cols = np.searchsorted(vocab, vals)
-                    ok = cols < len(vocab)
-                    ok[ok] = vocab[cols[ok]] == vals[ok]
-                    M[rows[ok], cols[ok]] = 1.0
-                return M
-
-            O = densify(lg) @ densify(rg).T  # noqa: E741 — overlap counts, exact in f32
-            x = np.asarray(lpdf["id"], dtype=np.int64)
-            y = np.asarray(rpdf["id"], dtype=np.int64)
-            sa = np.asarray(lpdf["sz"], dtype=np.int64)
-            sb = np.asarray(rpdf["sz"], dtype=np.int64)
-            # J >= t  <=>  O*(1+t) >= t*(sa+sb); evaluated with a margin
-            mask = O * (1.0 + t_eff) >= t_eff * (sa[:, None] + sb[None, :]) - 1e-6
-            mask &= O > 0
-            if key[0] == key[1]:
-                mask &= x[:, None] < y[None, :]
-            r, c = np.where(mask)
-            xa, yb = x[r], y[c]
-            swap = xa > yb
-            return pd.DataFrame(
-                {
-                    "a_id": np.where(swap, yb, xa),
-                    "b_id": np.where(swap, xa, yb),
-                    "overlap": O[r, c].astype(np.int64),
-                    "a_sz": np.where(swap, sb[c], sa[r]).astype(np.int32),
-                    "b_sz": np.where(swap, sa[r], sb[c]).astype(np.int32),
-                }
-            )
-
-        from ertransfer_spark.operators.gridsweep import grid_cogroup
-
-        pairs = grid_cogroup(
-            left, right, ("bi", "bj"), overlap_cell,
-            schema="a_id long, b_id long, overlap long, a_sz int, b_sz int",
-        )
-        return (
-            pairs.withColumn("sim_r", sim_of(F.col("overlap"), F.col("a_sz"), F.col("b_sz")))
-            .filter(F.col("sim_r") >= threshold)
-            .select("a_id", "b_id", "sim_r")
-        )
-
-    # sparse posting self-join (the 100 TB default): skinny (g, id) postings,
-    # hot grams dropped by broadcast anti-join, triangular a_id < b_id
-    pk = posts.join(F.broadcast(hot), "g", "left_anti")
-    szs = h.select("id", "sz")
-    agg = (
-        pk.select(F.col("id").alias("a_id"), "g")
-        .join(pk.select(F.col("id").alias("b_id"), "g"), "g")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("overlap"))
-        .join(szs.select(F.col("id").alias("a_id"), F.col("sz").alias("a_sz")), "a_id")
-        .join(szs.select(F.col("id").alias("b_id"), F.col("sz").alias("b_sz")), "b_id")
-    )
-    return (
-        agg.withColumn("sim_r", sim_of(F.col("overlap"), F.col("a_sz"), F.col("b_sz")))
-        .filter(F.col("sim_r") >= threshold)
-        .select("a_id", "b_id", "sim_r")
-    )
+    return jaccard_at_least(pairs, threshold).select("a_id", "b_id", "sim_r")
 
 
 def minhash_dedup(
@@ -298,7 +104,7 @@ def minhash_dedup(
     signatures, banding bucket-join, exact-jaccard verification. The scale
     path — shuffle width is O(docs × bands), candidates only where bands
     collide. Non-portable hash → verified by the rows-only driver check
-    plus the engine-side property test (recall vs ngram_jaccard_dedup).
+    plus the engine-side recall test against exact Jaccard.
 
     ``shingle``: word n-gram size for the token set (1 = raw tokens).
     Shingles ≥2 are essential on small-vocabulary corpora where unigram

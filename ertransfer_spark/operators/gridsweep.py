@@ -1,8 +1,9 @@
 """Side-tagged grouped-map cells — the safe form of a two-sided cogroup.
 
 All block-matrix sweeps here (``simsearch.brute_force_topk``,
-``simsearch.cosine_neardup_pairs``, ``dedup.shingle_jaccard_pairs``,
-``blocking.token_jaccard_join``) need "for each grid cell (i, j), give one
+``simsearch.cosine_neardup_pairs``, and the set-overlap kernel's dense
+grid in ``overlap.overlap_pairs`` behind ``dedup.shingle_jaccard_pairs``
+and ``blocking.token_jaccard_join``) need "for each grid cell (i, j), give one
 Python kernel the cell's LEFT rows and RIGHT rows". The direct expression
 is ``left.groupBy(keys).cogroup(right.groupBy(keys)).applyInPandas(...)``
 — but when both sides derive from the SAME upstream DataFrame (triangular

@@ -143,7 +143,7 @@ def attr_features(
       to equal dates across formats), 0 when either side doesn't parse.
 
     Measured on the reference's hard textual datasets (d3 amazon-google
-    end-to-end, scripts/exp_hard_textual.py): baseline 0.618 →
+    end-to-end, r4 experiment; SURVEY §8): baseline 0.618 →
     +num 0.631 → +num+ovl 0.667; with tfidf_cosine 0.691.
     """
     from ertransfer_spark.functions.similarity import jaccard, levenshtein_sim
@@ -275,7 +275,7 @@ def tfidf_cosine(
     so the pair-explode join in step 4 inflates without it; a capped
     token's idf ≈ 0 contributes nothing to the ranking anyway.
 
-    Measured (scripts/exp_hard_textual.py): +0.02-0.07 end-to-end F1 on
+    Measured (r4 experiment; SURVEY §8): +0.02-0.07 end-to-end F1 on
     the reference's hard textual datasets over the blob+attr features.
     Returns ``pairs`` + ``out_col`` (0.0 when no shared token or an
     empty side). Float determinism: sums are doubles — round downstream

@@ -61,15 +61,9 @@ class PipelineConfig:
                                      # tokens_col (reference splitter QGram=N)
     qgram_multiset: bool = True      # settings.py 'multiset' switch: False →
                                      # distinct-gram sets (d5-d7/d10 recipes)
-    reverse: bool = False            # K budget on the larger B side (J3)
-    direction: str | None = None     # fwd|rev|union; supersedes reverse —
-                                     # union = K per node on BOTH sides
-                                     # (pyJedAI graph pruning; d10 recipe)
-    salt: int = 4                    # posting-join salt (hot-token spread)
-    salt_hot_product: int | None = 65536  # salt only output-explosive tokens
-    skinny_postings: bool = True     # (token, id) posting rows; sizes post-agg
-    topk_mode: str = "agg"           # partial-aggregable top-K (vs window)
-    hash_tokens: bool = False        # 8-byte posting keys (P[collision]≈n²/2⁶⁵)
+    direction: str = "fwd"           # fwd|rev|union: K per A record, per B
+                                     # record (J3), or per node on BOTH
+                                     # sides (pyJedAI graph pruning; d10)
     blocker: str = "token"           # token (J1) | vector (J2 feature-hash LSH)
     max_token_df: int | None = None
     keep_rare_df: int | None = None  # rare-token pass-through keep-rule:
@@ -218,11 +212,7 @@ class ERPipeline:
                 tok_col, multiset = "qg", cfg.qgram_multiset
             return top_k_token_join(
                 ba, bb, k=cfg.k, metric=cfg.metric, tokens_col=tok_col,
-                multiset=multiset, reverse=cfg.reverse,
-                direction=cfg.direction, salt=cfg.salt,
-                salt_hot_product=cfg.salt_hot_product,
-                skinny_postings=cfg.skinny_postings, topk_mode=cfg.topk_mode,
-                hash_tokens=cfg.hash_tokens,
+                multiset=multiset, direction=cfg.direction,
                 max_token_df=cfg.max_token_df, keep_rare_df=cfg.keep_rare_df,
                 posting_budget=cfg.posting_budget,
                 min_sim=cfg.min_sim,

@@ -85,15 +85,10 @@ def main() -> None:
     ra, rb = canonicalize_sides(sa, sb)
     t = mark("canonicalize", t)
     golden = referential_filter(matches, ra, rb)
-    # blocking configuration measured variant-by-variant in
-    # scripts/exp_blocking.py (results in BENCH.md):
-    # - hash_tokens: posting keys are 8-byte longs, not shingle strings
-    # - salt_hot_product: replicate B postings ONLY for output-explosive
-    #   tokens (dfa*dfb > 64k), not the whole posting list 8x
-    # - skinny_postings: sizes re-attached post-agg via broadcast — the
-    #   posting shuffle rows shrink to (token, id)
-    # - topk_mode='agg': collect_list/slice top-K (partial-aggregable)
-    #   instead of a full-partition WindowExec sort
+    # blocking: top_k_token_join's built-in plan is the configuration
+    # measured variant-by-variant (results in BENCH.md): xxhash64 skinny
+    # (token, id) postings, salting only for output-explosive tokens
+    # (dfa*dfb > 64k), collect_list/slice top-K. The one knob:
     # - max_token_df=500: the per-block comparison budget (same constant
     #   as the contract queries' df cap) — head-vocabulary stop-shingles
     #   grow df ~ linearly with corpus size, so their join output grows
@@ -102,9 +97,7 @@ def main() -> None:
     labeled = attach_labels(
         top_k_token_join(
             ra, rb, k=int(sys.argv[3]) if len(sys.argv) > 3 else 25,
-            tokens_col="shingle_set", salt=8, hash_tokens=True,
-            salt_hot_product=65536, skinny_postings=True, topk_mode="agg",
-            max_token_df=500,
+            tokens_col="shingle_set", max_token_df=500,
         ),
         golden,
     ).localCheckpoint()

@@ -101,8 +101,8 @@ def test_reverse_join_orientation(records):
     from pyspark.sql import functions as F
 
     fwd = top_k_token_join(records[0], records[1], k=3)
-    rev = top_k_token_join(records[1], records[0], k=3, reverse=True)
-    # reverse swaps which side the K-budget applies to, but output columns
+    rev = top_k_token_join(records[1], records[0], k=3, direction="rev")
+    # rev swaps which side the K-budget applies to, but output columns
     # keep the caller's (a, b) orientation: here both calls budget per
     # original-A record, so the pair sets coincide
     f = {(r["a_id"], r["b_id"]) for r in fwd.collect()}
@@ -113,19 +113,16 @@ def test_reverse_join_orientation(records):
 def test_union_direction_is_fwd_union_rev(records):
     """direction='union' = K per node on BOTH sides (pyJedAI TopKJoin's
     actual graph pruning): pair set must equal fwd ∪ rev exactly, with
-    per-pair sims unchanged, in both topk_modes."""
+    per-pair sims unchanged."""
     kw = dict(k=3, metric="cosine")
     fwd = top_k_token_join(records[0], records[1], **kw).toPandas()
     rev = top_k_token_join(
         records[0], records[1], direction="rev", **kw
     ).toPandas()
     want = set(zip(fwd["a_id"], fwd["b_id"])) | set(zip(rev["a_id"], rev["b_id"]))
-    for mode in ("window", "agg"):
-        uni = top_k_token_join(
-            records[0], records[1], direction="union", topk_mode=mode, **kw
-        ).toPandas()
-        assert not uni.duplicated(["a_id", "b_id"]).any()
-        assert set(zip(uni["a_id"], uni["b_id"])) == want
+    uni = top_k_token_join(records[0], records[1], direction="union", **kw).toPandas()
+    assert not uni.duplicated(["a_id", "b_id"]).any()
+    assert set(zip(uni["a_id"], uni["b_id"])) == want
     sims = {(r.a_id, r.b_id): r.sim for r in fwd.itertuples(index=False)}
     for r in uni.itertuples(index=False):
         if (r.a_id, r.b_id) in sims:
@@ -157,7 +154,7 @@ def test_keep_rare_df_passthrough(spark):
          ("b9", ["x", "zq", "w", "v", "u"])],
         "conv_id string, token_set array<string>",
     )
-    for direction in (None, "union"):
+    for direction in ("fwd", "union"):
         kw = dict(k=1, metric="jaccard", direction=direction)
         base = {(r.a_id, r.b_id)
                 for r in top_k_token_join(ra, rb, **kw).collect()}
@@ -168,11 +165,11 @@ def test_keep_rare_df_passthrough(spark):
         assert base <= rare
         # common-token pairs (x,y: df_sum 4-5 > 2) are NOT passed through:
         # in fwd k=1, a2's only kept pair stays the rank-1 tie-break b1
-        if direction is None:
+        if direction == "fwd":
             assert ("a2", "b2") not in rare
     rev = {(r.a_id, r.b_id)
            for r in top_k_token_join(ra, rb, k=1, metric="jaccard",
-                                     reverse=True, keep_rare_df=2).collect()}
+                                     direction="rev", keep_rare_df=2).collect()}
     assert ("a1", "b9") in rev
 
 
@@ -260,20 +257,43 @@ def test_multiset_and_metrics_match_bruteforce_spec(spark):
     schema = "conv_id string, token_set array<string>"
     ra = spark.createDataFrame(recs_a, schema)
     rb = spark.createDataFrame(recs_b, schema)
-    for multiset, metric in ((True, "jaccard"), (True, "dice"), (True, "cosine"),
-                             (False, "dice"), (False, "cosine")):
-        for direction in ("fwd", "rev"):
-            got = {
-                (r.a_id, r.b_id): (r.overlap, r.sim)
-                for r in top_k_token_join(
-                    ra, rb, k=2, metric=metric, multiset=multiset,
-                    direction=direction,
-                ).collect()
-            }
-            want = _topk_spec(recs_a, recs_b, 2, metric, multiset,
-                              per="a" if direction == "fwd" else "b")
-            case = (multiset, metric, direction)
-            assert set(got) == set(want), case
-            for pair, (o, sim) in want.items():
-                assert got[pair][0] == o, case
-                assert abs(got[pair][1] - sim) < 1e-12, case
+    for case in ((True, "jaccard", "fwd"), (True, "dice", "rev"), (True, "cosine", "rev"),
+                 (False, "dice", "fwd"), (False, "cosine", "rev")):
+        multiset, metric, direction = case
+        got = {
+            (r.a_id, r.b_id): (r.overlap, r.sim)
+            for r in top_k_token_join(
+                ra, rb, k=2, metric=metric, multiset=multiset, direction=direction,
+            ).collect()
+        }
+        want = _topk_spec(recs_a, recs_b, 2, metric, multiset,
+                          per="a" if direction == "fwd" else "b")
+        assert set(got) == set(want), case
+        for pair, (o, sim) in want.items():
+            assert got[pair][0] == o, case
+            assert abs(got[pair][1] - sim) < 1e-12, case
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_df_cap_broadcasts_only_the_hot_set(records):
+    """The two-sided max_token_df cap broadcasts the HOT set: tokens whose
+    df is ABOVE a bound, at most |postings|/bound rows at any corpus size.
+    No broadcast hint may sit on the kept-token relation (df at or below
+    the cap), which grows with the vocabulary."""
+    cand = top_k_token_join(records[0], records[1], k=3, max_token_df=5)
+    hinted = [
+        n for n in _plan_nodes(cand._jdf.queryExecution().analyzed())
+        if n.nodeName() == "ResolvedHint" and "broadcast" in n.hints().toString()
+    ]
+    assert hinted, "the df cap should broadcast its hot set"
+    for hint in hinted:
+        filters = [n for n in _plan_nodes(hint) if n.nodeName() == "Filter"]
+        assert filters, hint.toString()
+        cond = filters[0].condition().sql()
+        assert ">" in cond and "<=" not in cond, cond

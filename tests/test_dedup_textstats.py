@@ -32,11 +32,14 @@ def test_exact_dedup(spark, docs):
     assert stats["n_docs"] == 6 and stats["n_distinct"] == 5 and stats["n_dup_docs"] == 1
 
 
-def test_ngram_jaccard_dedup_finds_near_dup(spark, docs):
-    from ertransfer_spark.operators.dedup import ngram_jaccard_dedup
+def test_qgram_jaccard_dedup_finds_near_dup(spark, docs):
+    """Character-3-gram near-dup pairs through the shingle self-join."""
+    from ertransfer_spark.functions.text import qgrams
+    from ertransfer_spark.operators.dedup import shingle_jaccard_pairs
 
-    pairs = {(r["a_id"], r["b_id"]): r["sim_r"] for r in ngram_jaccard_dedup(
-        docs, threshold=0.5, max_gram_df=10
+    grams = docs.select("doc_id", qgrams(F.col("text"), q=3).alias("s"))
+    pairs = {(r["a_id"], r["b_id"]): r["sim_r"] for r in shingle_jaccard_pairs(
+        grams, id_col="doc_id", threshold=0.5, max_gram_df=10
     ).collect()}
     assert pairs[(0, 1)] == 1.0            # exact dup
     assert (0, 2) in pairs and pairs[(0, 2)] > 0.5  # near dup
@@ -68,7 +71,7 @@ def test_shingle_jaccard_pairs_dense_equals_sparse(spark):
     # doc 100 share the 2 kept grams "variant token0" / "token0 extra0" out
     # of 9 distinct bigrams each -> J = 2/(9+9-2) = 0.125 (denominator uses
     # FULL sizes; the cap prunes witnesses only — the operator's contract)
-    kw = dict(gram_col="s", id_col="id", sz_col="sz", threshold=0.1, max_gram_df=15)
+    kw = dict(gram_col="s", id_col="id", threshold=0.1, max_gram_df=15)
     dense = shingle_jaccard_pairs(d, dense_dict_max=100000, rows_per_block=7, **kw)
     sparse = shingle_jaccard_pairs(d, dense_dict_max=0, **kw)
     ds = sorted(tuple(r) for r in dense.collect())

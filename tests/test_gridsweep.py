@@ -79,7 +79,7 @@ def test_migrated_sweeps_survive_count_action(spark, docs):
         F.array_distinct(F.split(F.lower("text"), r"\s+")).alias("gs"),
     ).withColumn("sz", F.size("gs"))
     dense = shingle_jaccard_pairs(
-        grams, gram_col="gs", id_col="id", sz_col="sz",
+        grams, gram_col="gs", id_col="id",
         threshold=0.5, dense_dict_max=100000, rows_per_block=2,
     )
     n = dense.count()

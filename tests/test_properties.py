@@ -1,8 +1,11 @@
-"""Property tests (SURVEY §5e): permutation invariance of input row order
-and determinism of every seeded operator."""
+"""Property tests (SURVEY §5e): permutation invariance of input row order,
+determinism of every seeded operator, and the set-overlap kernel's
+dense-equals-sparse and top-K-equals-oracle invariants on generated inputs."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -112,55 +115,72 @@ def test_negative_sampling_marginals(spark, spark_corpora):
     assert max(freq.values()) <= 6 * 3
 
 
-def test_adaptive_kernels_randomized_parity(spark):
-    """Multi-seed randomized dense-vs-sparse parity for BOTH adaptive
-    operators (`blocking.token_jaccard_join`, `dedup.shingle_jaccard_pairs`).
+# Small integer set sizes put many pairs EXACTLY on round(J,6) threshold
+# grid points (J = 1/8, 1/5, 1/3, ...): the regime where the dense kernel's
+# float32 margin prefilter could in principle diverge from the sparse
+# path's exact integer agg.
+_VOCAB = [f"t{v}" for v in range(12)]
+_token_set = st.lists(st.sampled_from(_VOCAB), min_size=1, max_size=8, unique=True)
+_corpus = st.lists(_token_set, min_size=1, max_size=20)
+_threshold = st.sampled_from([1 / 8, 1 / 5, 1 / 4, 1 / 3, 1 / 2, 2 / 3])
 
-    The hand-built parity tests pin one corpus each; this sweep drives the
-    two kernels over seeded random corpora whose small integer set sizes
-    land many pairs EXACTLY on round(J,6)-threshold grid points (J = 1/8,
-    1/5, 1/3, ...), the regime where the dense kernel's float32 margin
-    prefilter could in principle diverge from the sparse path's exact
-    integer agg. Asserts bit-identical (a_id, b_id, sim_r) sets at every
-    seed, with multiple grid cells forced (rows_per_block=7)."""
-    import random
 
-    from ertransfer_spark.operators.blocking import token_jaccard_join
-    from ertransfer_spark.operators.dedup import shingle_jaccard_pairs
+def _kernel_rows(ra, rb, t, cap, dense_dict_max):
+    from ertransfer_spark.operators.overlap import jaccard_at_least, overlap_pairs
 
-    for seed in (11, 23, 47):
-        rng = random.Random(seed)
-        vocab = [f"t{v}" for v in range(40)]
+    pairs = overlap_pairs(
+        ra, rb, "id", "s", max_token_df=cap, min_jaccard=t,
+        dense_dict_max=dense_dict_max, rows_per_block=7,
+    )
+    return sorted(tuple(r) for r in jaccard_at_least(pairs, t).collect())
 
-        def corpus(n, id0):
-            rows = []
-            for i in range(n):
-                sz = rng.randint(2, 8)
-                rows.append((id0 + i, sorted(rng.sample(vocab, sz))))
-            return rows
 
-        ra = spark.createDataFrame(corpus(35, 0), "id long, s array<string>")
-        rb = spark.createDataFrame(corpus(30, 1000), "id long, s array<string>")
-        for t in (0.125, 0.2, 1 / 3):
-            kw = dict(id_col="id", tokens_col="s", min_sim=t, max_token_df=12)
-            dense = token_jaccard_join(
-                ra, rb, dense_dict_max=100000, rows_per_block=7, **kw
-            )
-            sparse = token_jaccard_join(ra, rb, dense_dict_max=0, **kw)
-            ds = sorted(tuple(r) for r in dense.collect())
-            sp = sorted(tuple(r) for r in sparse.collect())
-            assert ds == sp, f"token_jaccard_join mismatch seed={seed} t={t}"
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(a=_corpus, b=_corpus, t=_threshold, cap=st.integers(1, 20))
+def test_overlap_kernel_dense_equals_sparse_rectangular(spark, a, b, t, cap):
+    """The set-overlap kernel's rectangular dense grid (several cells at
+    rows_per_block=7) returns the sparse posting join's rows exactly."""
+    schema = "id long, s array<string>"
+    ra = spark.createDataFrame(list(enumerate(a)), schema)
+    rb = spark.createDataFrame([(1000 + i, s) for i, s in enumerate(b)], schema)
+    assert _kernel_rows(ra, rb, t, cap, 100000) == _kernel_rows(ra, rb, t, cap, 0)
 
-        d = ra.unionByName(rb).selectExpr("id", "s", "size(s) as sz")
-        for t in (0.125, 0.2, 1 / 3):
-            kw = dict(
-                gram_col="s", id_col="id", sz_col="sz",
-                threshold=t, max_gram_df=12,
-            )
-            dense = shingle_jaccard_pairs(
-                d, dense_dict_max=100000, rows_per_block=7, **kw
-            )
-            sparse = shingle_jaccard_pairs(d, dense_dict_max=0, **kw)
-            ds = sorted(tuple(r) for r in dense.collect())
-            sp = sorted(tuple(r) for r in sparse.collect())
-            assert ds == sp, f"shingle_jaccard_pairs mismatch seed={seed} t={t}"
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(docs=_corpus, t=_threshold, cap=st.integers(1, 20))
+def test_overlap_kernel_dense_equals_sparse_triangular(spark, docs, t, cap):
+    """The triangular self-join: dense grid rows equal the sparse posting
+    self-join's, all with a_id < b_id."""
+    d = spark.createDataFrame(list(enumerate(docs)), "id long, s array<string>")
+    dense = _kernel_rows(d, None, t, cap, 100000)
+    assert dense == _kernel_rows(d, None, t, cap, 0)
+    assert all(r[0] < r[1] for r in dense)
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(a=_corpus, b=_corpus, k=st.integers(1, 4))
+def test_top_k_equals_bruteforce_oracle(spark, a, b, k):
+    """top_k_token_join equals the brute-force jaccard top-K oracle (pairs,
+    tie-break sim DESC then b_id ASC, and similarity values)."""
+    import pandas as pd
+
+    from ertransfer_spark.operators.blocking import top_k_token_join
+    from ertransfer_spark.oracle.pandas_oracle import top_k_join
+
+    rows_a = [(f"a{i}", s) for i, s in enumerate(a)]
+    rows_b = [(f"b{i}", s) for i, s in enumerate(b)]
+    schema = "conv_id string, token_set array<string>"
+    got = {
+        (r.a_id, r.b_id): r.sim
+        for r in top_k_token_join(
+            spark.createDataFrame(rows_a, schema), spark.createDataFrame(rows_b, schema), k=k
+        ).collect()
+    }
+
+    def frame(rows):
+        return pd.DataFrame([(i, frozenset(s)) for i, s in rows], columns=["conv_id", "token_set"])
+
+    want = top_k_join(frame(rows_a), frame(rows_b), k=k)
+    assert set(got) == set(zip(want["a_id"], want["b_id"]))
+    for r in want.itertuples(index=False):
+        assert abs(got[(r.a_id, r.b_id)] - r.sim) < 1e-12

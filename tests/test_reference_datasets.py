@@ -76,7 +76,7 @@ def _pipeline_f1(spark, ra, rb, golden, cand, raw=None, attrs=None, algorithm="r
     per-attribute feature kinds ((num/ovl/qg3, attr) pairs) and
     ``tfidf=True`` adds the corpus-IDF-weighted token cosine — the two
     upgrades that lift the hard textual datasets (d2 0.78→0.82,
-    d3 0.62→0.69; scripts/exp_hard_textual.py). ``train_params`` forwards
+    d3 0.62→0.69; r4, SURVEY §8). ``train_params`` forwards
     estimator hyperparameter overrides (d3's r5 lever: RF capacity)."""
     from ertransfer_spark.operators.clustering import (
         best_threshold,
@@ -127,7 +127,8 @@ def test_d1_fodors_zagats_end_to_end(spark):
         "qg", qgrams(F.col("agValue"), q=4, multiset=True)
     ).localCheckpoint()
     cand = top_k_token_join(
-        ra, rb, k=5, metric="dice", tokens_col="qg", multiset=True, reverse=True
+        ra, rb, k=5, metric="dice", tokens_col="qg", multiset=True,
+        direction="rev",
     )
     m = _pipeline_f1(
         spark, ra, rb, golden, cand,
@@ -190,7 +191,7 @@ def test_d3_amazon_google_end_to_end(spark):
     numTrees=100/maxDepth=16 (r5: the default 50/8 underfits the
     expanded feature set — capacity alone lifts 0.703→0.788, precision
     0.78→0.93; depth 12/16/20 plateau, exp in /tmp/d3_params*.log
-    methodology pinned in scripts/exp_pipeline_all.py recipe comment):
+    methodology in the _RECIPES notes):
     measured 0.788 (p=0.93, r=0.69). Published classical baselines on
     this dataset's curated benchmark run ~0.49."""
     from ertransfer_spark.functions.text import qgrams
@@ -204,7 +205,8 @@ def test_d3_amazon_google_end_to_end(spark):
         "qg", qgrams(F.col("agValue"), q=5, multiset=True)
     ).localCheckpoint()
     cand = top_k_token_join(
-        ra, rb, k=26, metric="cosine", tokens_col="qg", multiset=True, reverse=True
+        ra, rb, k=26, metric="cosine", tokens_col="qg", multiset=True,
+        direction="rev",
     )
     m = _pipeline_f1(
         spark, ra, rb, golden, cand,
@@ -250,13 +252,200 @@ def test_matcher_on_committed_splits(spark, name, floor):
     assert m["f1"] >= floor, (name, m)
 
 
+# Blocking + matcher recipes for the end-to-end runs below: the
+# reference's splitter settings (splitters/KNN-Join/settings.py:1-12)
+# with K raised for a trained matcher, plus per-schema matcher attrs.
+_RECIPES = {
+    # d5-d7 sides carry long prose columns (dbpedia abstracts): common
+    # 5-grams of English text have df ~ corpus/2, so an uncapped posting
+    # join is quadratic (measured: single hot partition, >10 min at 5k x 6k).
+    # The df cap is the Spark-first analog of the reference's prefix-filter
+    # KNN; stop-gram removal costs little recall on near-duplicate pairs.
+    # K raised to 10 (matcher consumes candidates); cap=1000 beats 2000 on
+    # BOTH recall and wall (stop-grams add noise neighbors, not signal).
+    # episode/season NUMERIC distances are the strong discriminators on the
+    # TV-episode entities (d5 0.894 -> 0.903).
+    "d5_imdb_tmdb": dict(clean=False, qgram=5, multiset=False, metric="cosine",
+                         k=10, max_token_df=1000,
+                         attrs=["title", "name", "episodeNumber", "seasonNumber"],
+                         extra=[("num", "episodeNumber"), ("num", "seasonNumber"),
+                                ("ovl", "title")]),
+    "d6_imdb_tvdb": dict(clean=False, qgram=5, multiset=False, metric="cosine",
+                         k=10, max_token_df=1000, tfidf=True,
+                         attrs=["title", "name", "episodeNumber", "seasonNumber"],
+                         extra=[("num", "episodeNumber"), ("num", "seasonNumber"),
+                                ("ovl", "title"), ("qg3", "name")]),
+    "d7_tmdb_tvdb": dict(clean=False, qgram=5, multiset=False, metric="cosine",
+                         k=10, max_token_df=1000,
+                         attrs=["title", "name", "abstract", "episodeNumber",
+                                "seasonNumber", "releaseDate"],
+                         extra=[("num", "episodeNumber"), ("num", "seasonNumber"),
+                                ("ovl", "title"), ("ovl", "abstract"),
+                                ("qg3", "name"), ("qg3", "releaseDate")]),
+    "d8_amazon_walmart": dict(clean=True, qgram=4, multiset=True, metric="cosine",
+                              k=5, direction="rev",
+                              attrs=["title", "modelno", "price", "brand"],
+                              extra=[("num", "price"), ("ovl", "title")],
+                              tfidf=True,
+                              train_params={"numTrees": 100, "maxDepth": 16}),
+    # d10 recall CEILING is textual-overlap-bound, not a recipe problem:
+    # 26.3% of the 22,148 golden pairs share ZERO word tokens (A rows have
+    # NaN titles + a different cast member than B's single actor/director;
+    # foreign retitles like "Terminal Station"/"Stazione Termini") and sit
+    # at char-3-gram jaccard 0.0175 = noise floor, so NO content-based
+    # blocker (token, q-gram, OR token-derived embedding — feature-hashed
+    # vectors of disjoint token sets have expected cosine 0) exceeds the
+    # 0.737 reachable ceiling; full analysis in SURVEY §8. Sweep:
+    # q-grams cost 10x the wall of word tokens for IDENTICAL recall
+    # (BENCH.md); k=20 single-dir 0.626, k=20 union 0.664
+    # (BENCH.md); + keep_rare_df=100 (rare-token pass-through,
+    # r5) 0.721 = 0.978 of ceiling, e2e F1 0.651→0.679 at +6% wall
+    # (T=200 gives br 0.725 but F1 0.672 and +43% wall — T=100 wins).
+    # The committed d10 split is random-negative (recall 1.0 by
+    # construction) — the reference's own KNN recall on d10 is unpublished.
+    "d10_imdb_dbpedia": dict(clean=False, qgram=None, metric="cosine",
+                             k=20, direction="union", max_token_df=4000,
+                             keep_rare_df=100,
+                             attrs=["title"], extra=[("ovl", "title")],
+                             train_params={"numTrees": 100, "maxDepth": 16}),
+    # d9/d11 reconstruct tableB from the split inline attrs (see
+    # pipeline_eval). d9's settings.py row is qgram=4/reverse/cosine;
+    # word tokens measured equal-or-better recall at a fraction of the
+    # wall on every text dataset (d10 note), so the recipe uses them.
+    "d9_dblp_scholar": dict(clean=False, qgram=None, metric="cosine",
+                            k=10, direction="rev", max_token_df=2000,
+                            attrs=["title", "authors", "venue", "year"],
+                            extra=[("num", "year"), ("ovl", "title"),
+                                   ("qg3", "authors")], tfidf=True),
+    "d11_itunes_amazon": dict(clean=False, qgram=None, metric="cosine",
+                              k=10, direction="rev", tfidf=True,
+                              attrs=["Song_Name", "Artist_Name", "Album_Name",
+                                     "Time", "Released", "Price"],
+                              extra=[("num", "Price"), ("ovl", "Song_Name"),
+                                     ("qg3", "Song_Name"), ("qg3", "Time"),
+                                     ("date", "Released"),
+                                     ("qg3", "Album_Name")],
+                              train_params={"numTrees": 100, "maxDepth": 16}),
+    # d12 has no settings.py entry (it enters the reference via the
+    # DeepMatcher split only); word-token jaccard is the sane default.
+    "d12_beeradvo_ratebeer": dict(clean=False, qgram=None, metric="jaccard", k=5,
+                                  attrs=["Beer_Name", "Brew_Factory_Name",
+                                         "Style", "ABV"],
+                                  extra=[("num", "ABV"), ("ovl", "Beer_Name")],
+                                  train_params={"numTrees": 100, "maxDepth": 16}),
+}
+
+
+def _pipeline_eval(spark, name: str, algorithm: str = "rf") -> dict:
+    """Full pipeline on one dataset; returns pairwise metrics + block recall."""
+    from pyspark.sql import functions as F
+
+    from ertransfer_spark.functions.text import qgrams
+    from ertransfer_spark.operators.blocking import top_k_token_join
+    from ertransfer_spark.operators.canonicalize import canonicalize_table
+    from ertransfer_spark.operators.clustering import (
+        best_threshold,
+        pairwise_metrics,
+        unique_mapping_clusters,
+    )
+    from ertransfer_spark.operators.labeling import attach_labels, stratified_split
+    from ertransfer_spark.operators.matcher import (
+        FEATURES,
+        attach_pair_text,
+        attr_features,
+        featurize,
+        score,
+        tfidf_cosine,
+        train_matcher,
+    )
+    from ertransfer_spark.sources.normalizer import (
+        read_csv_normalized,
+        read_matches_normalized,
+    )
+
+    r = _RECIPES[name]
+    d = DATASETS / name
+    a = read_csv_normalized(spark, str(d / "tableA.csv"))
+    if (d / "tableB.csv").exists():
+        b = read_csv_normalized(spark, str(d / "tableB.csv"))
+    else:
+        # d9/d11 commit no tableB.csv — reconstruct it from the committed
+        # pair splits' INLINE attributes (verified: every golden B id
+        # appears there and attr values are consistent per id). Caveat,
+        # pinned in the test docstring too: the reconstructed corpus is
+        # only the splits' B records (golden partners + random negatives),
+        # so blocking faces fewer distractors than the reference's full
+        # tableB; treat the result as coverage, not a published benchmark.
+        from ertransfer_spark.sources.normalizer import read_pair_split
+
+        parts = [
+            read_pair_split(spark, str(d / f), prefix_ids=False)[2]
+            for f in ("train.csv", "test.csv")
+        ]
+        b = parts[0].unionByName(parts[1], allowMissingColumns=True).dropDuplicates(
+            ["id"]
+        )
+    golden = read_matches_normalized(spark, str(d / "matches.csv")).select(
+        F.concat(F.lit("a_"), F.col("tableA_id")).alias("a_id"),
+        F.concat(F.lit("b_"), F.col("tableB_id")).alias("b_id"),
+    ).localCheckpoint()
+
+    def canon(df, side):
+        rec = canonicalize_table(df, id_col="id", clean=r["clean"]).withColumn(
+            "conv_id", F.concat(F.lit(f"{side}_"), F.col("conv_id"))
+        )
+        if r.get("qgram"):
+            rec = rec.withColumn(
+                "qg", qgrams(F.col("agValue"), q=r["qgram"],
+                             multiset=r.get("multiset", False))
+            )
+        return rec.localCheckpoint()
+
+    ra, rb = canon(a, "a"), canon(b, "b")
+    cand = top_k_token_join(
+        ra, rb, k=r["k"], metric=r["metric"],
+        tokens_col="qg" if r.get("qgram") else "token_set",
+        multiset=bool(r.get("qgram")) and r.get("multiset", False),
+        direction=r.get("direction", "fwd"),
+        max_token_df=r.get("max_token_df"),
+        keep_rare_df=r.get("keep_rare_df"),
+    )
+
+    labeled = attach_labels(cand, golden).localCheckpoint()
+    n_golden = golden.count()
+    block_recall = labeled.filter("label = 1").count() / max(n_golden, 1)
+
+    feats = featurize(attach_pair_text(labeled, ra, rb))
+    feature_cols = None
+    if r.get("attrs"):
+        attrs = [c for c in r["attrs"] if c in a.columns and c in b.columns]
+        pa = a.select(F.concat(F.lit("a_"), F.col("id")).alias("id"), *attrs)
+        pb = b.select(F.concat(F.lit("b_"), F.col("id")).alias("id"), *attrs)
+        feats, names = attr_features(feats, pa, pb, attrs,
+                                     extra=r.get("extra", ()))
+        feature_cols = FEATURES + names
+    if r.get("tfidf"):
+        feats = tfidf_cosine(feats, ra, rb)
+        feature_cols = (feature_cols or FEATURES) + ["tfidf_cos"]
+    feats = feats.localCheckpoint()
+    model = train_matcher(stratified_split(feats)["train"], algorithm=algorithm,
+                          feature_cols=feature_cols,
+                          params=r.get("train_params"))
+    preds = score(model, feats).localCheckpoint()
+    out = unique_mapping_clusters(preds, best_threshold(preds))
+    m = pairwise_metrics(out, golden)
+    m["block_recall"] = round(block_recall, 4)
+    return m
+
+
+
 # End-to-end pipeline on the remaining datasets. d9/d11 commit no
 # tableB.csv — pipeline_eval reconstructs it from the pair splits' inline
 # attributes (every golden B id appears there with consistent attr values;
 # the negatives corpus is the splits' random sample, so blocking faces
 # fewer distractors than the reference's full tableB — coverage, not a
-# published benchmark). Recipes + measured values live in
-# scripts/exp_pipeline_all.py; floors sit just under the 2026-08-19 r5
+# published benchmark). Recipes are in _RECIPES above; floors sit just
+# under the 2026-08-19 r5
 # local[8] measurements:
 # d5 0.903, d6 0.799, d7 0.771, d8 0.856, d9 0.984 (block recall 0.997),
 # d10 0.698, d11 0.268, d12 0.532 (d11/d12 are the extreme-label-scarcity
@@ -267,7 +456,7 @@ def test_matcher_on_committed_splits(spark, name, floor):
         ("d5_imdb_tmdb", 0.85),
         ("d6_imdb_tvdb", 0.75),
         ("d7_tmdb_tvdb", 0.72),
-        # r5: RF capacity 100/16 (see exp_pipeline_all recipe notes) lifted
+        # r5: RF capacity 100/16 (see the _RECIPES notes) lifted
         # d8 0.736→0.856, d10 0.679→0.698, d12 0.489→0.532, d11 0.250→0.268
         ("d8_amazon_walmart", 0.80),
         ("d9_dblp_scholar", 0.95),
@@ -275,7 +464,7 @@ def test_matcher_on_committed_splits(spark, name, floor):
         # (26.3% of golden pairs share zero word tokens ACROSS ALL ATTRS:
         # NaN titles, foreign retitles, alias cast names — and those pairs
         # sit at char-3-gram jaccard 0.0175, the noise floor, so NO
-        # content-based blocker reaches them; analysis in exp_d10_rare.py).
+        # content-based blocker reaches them; analysis in SURVEY §8).
         # union k=20 + keep_rare_df=100 (rare-token pass-through) reaches
         # 0.721 ≈ 0.978 of the ceiling; measured F1 0.679 (was 0.651).
         ("d10_imdb_dbpedia", 0.66),
@@ -293,10 +482,5 @@ def test_matcher_on_committed_splits(spark, name, floor):
     ],
 )
 def test_pipeline_end_to_end_remaining_datasets(spark, name, floor):
-    import sys
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from exp_pipeline_all import pipeline_eval
-
-    m = pipeline_eval(spark, name)
+    m = _pipeline_eval(spark, name)
     assert m["f1"] >= floor, (name, m)

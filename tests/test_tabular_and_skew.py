@@ -70,11 +70,12 @@ def test_tabular_pipeline_payload_agnostic(spark):
     assert m["f1"] >= 0.95, m
 
 
-def test_skew_fixture_hot_token_and_mega_conversation(spark):
+def test_skew_fixture_hot_token_and_mega_conversation(spark, monkeypatch):
     """FIXTURES §1 skew knobs: a hot token in 30% of conversations plus a
-    mega-conversation. The salted, df-capped join must produce the same
-    pairs as the unsalted/uncapped one restricted to surviving tokens, and
-    block_histogram must expose the hot block for lineage-driven sizing."""
+    mega-conversation. Hot-token salting must produce the same pairs as
+    the unsalted join, and block_histogram must expose the hot block for
+    lineage-driven sizing."""
+    from ertransfer_spark.operators import overlap
     from ertransfer_spark.operators.blocking import block_histogram, top_k_token_join
     from ertransfer_spark.operators.canonicalize import canonicalize
     from ertransfer_spark.synth import SynthConfig, generate, to_spark
@@ -91,16 +92,21 @@ def test_skew_fixture_hot_token_and_mega_conversation(spark):
     # the hot token lands in a high-df bucket with dominating comparison cost
     assert max(comparisons) >= 16
 
+    # at the default HOT_PRODUCT no token of this corpus is salted; lowered
+    # to 16, the hot token (df ≈ 18 per side) and every other token with
+    # df_a·df_b > 16 take the salted path, fanned out over the cores
+    assert spark.sparkContext.defaultParallelism > 1
     plain = top_k_token_join(ra, rb, k=3, tokens_col="token_set")
-    salted = top_k_token_join(ra, rb, k=3, tokens_col="token_set", salt=8)
     p = sorted((r["a_id"], r["b_id"], r["sim"]) for r in plain.collect())
+    monkeypatch.setattr(overlap, "HOT_PRODUCT", 16)
+    salted = top_k_token_join(ra, rb, k=3, tokens_col="token_set")
     s = sorted((r["a_id"], r["b_id"], r["sim"]) for r in salted.collect())
     assert p == s  # salting never changes results
+    df_a, df_b = (r.filter(F.array_contains("token_set", "hotspot")).count() for r in (ra, rb))
+    assert 16 < df_a * df_b <= 65536  # salted only under the lowered constant
 
     # posting budgets bound a block's contribution without dropping dup pairs
-    budgeted = top_k_token_join(
-        ra, rb, k=3, tokens_col="shingle_set", posting_budget=50, salt=4
-    )
+    budgeted = top_k_token_join(ra, rb, k=3, tokens_col="shingle_set", posting_budget=50)
     assert budgeted.count() > 0
 
 
