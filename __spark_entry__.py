@@ -102,12 +102,13 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="id", tokens_col="s",
         min_sim=MIN_SIM, max_token_df=MAX_GRAM_DF,
     )
-    # per-doc lang dims re-attach post-agg via broadcast joins against the
-    # tiny doc-dim table (skinny-posting discipline, BENCH.md variant table)
+    # per-doc lang dims re-attach post-agg (skinny-posting discipline,
+    # BENCH.md variant table). No broadcast hint: the dims table has one
+    # row per document; the planner broadcasts it while it is small.
     return (
         pairs
-        .join(F.broadcast(dims.select(F.col("id").alias("a_id"), F.col("lang").alias("a_lang"))), "a_id")
-        .join(F.broadcast(dims.select(F.col("id").alias("b_id"), F.col("lang").alias("b_lang"))), "b_id")
+        .join(dims.select(F.col("id").alias("a_id"), F.col("lang").alias("a_lang")), "a_id")
+        .join(dims.select(F.col("id").alias("b_id"), F.col("lang").alias("b_lang")), "b_id")
         .select(
             "a_id", "b_id", "overlap", "a_size", "b_size",
             "a_lang", "b_lang", "sim_r",
@@ -505,15 +506,13 @@ def q_ann_lsh_portable(spark, sf_dir):
 
 
 def q_ann_ivf_topk(spark, sf_dir):
-    """IVF ANN, deterministic 'seeded' variant: cells from portable
-    id-hash seeds + n_probe nearest-cell search — every step has a DuckDB
-    twin, so this ANN operator is fully value-verified. The KMeans-cell
-    variant (better cells, engine-specific fit) is recall-tested in
-    tests/."""
+    """IVF ANN: cells from portable id-hash seeds + n_probe nearest-cell
+    search — every step has a DuckDB twin, so this ANN operator is fully
+    value-verified."""
     from ertransfer_spark.operators.simsearch import ivf_topk
 
     e = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(e, e, k=5, n_lists=8, n_probe=3, method="seeded")
+    return ivf_topk(e, e, k=5, n_lists=8, n_probe=3)
 
 
 def q_embedding_neardup(spark, sf_dir):

@@ -37,6 +37,7 @@ Also usable via spark-submit (it builds its own session):
 from __future__ import annotations
 
 import argparse
+import csv
 import json
 import sys
 import time
@@ -199,7 +200,12 @@ def cmd_run(args) -> int:
     )
 
     def write_csv(df, name):
-        df.toPandas().to_csv(out / name, index=False)
+        # streamed a partition at a time (the next one prefetched): driver
+        # memory holds two partitions, not the whole result
+        with open(out / name, "w", newline="") as f:
+            w = csv.writer(f, lineterminator="\n")
+            w.writerow(df.columns)
+            w.writerows(df.toLocalIterator(prefetchPartitions=True))
 
     if matches is not None:
         labeled = pipe.catalog.read("labeled")

@@ -9,9 +9,8 @@ both sides; the Winkler boost follows the pinned pure-Python spec
 (``similarity.jaro_winkler``: p=0.1, boost_threshold=0.7, prefix<=4).
 
 Values are IDENTICAL to ``similarity.jaro_winkler`` — parity pinned in
-tests/test_myers.py over random + unicode + the rapidfuzz probe set.
-Rows longer than 64 chars are delegated to the pure-Python scalar (the
-spec), so the public UDF keeps its contract for any input.
+tests/test_myers.py over random + unicode + classic probe pairs. Rows
+longer than 64 chars raise: callers truncate first.
 """
 
 from __future__ import annotations
@@ -36,8 +35,7 @@ def jaro_winkler_batch(
     boost_threshold: float = 0.7,
 ) -> np.ndarray:
     """Exact Jaro-Winkler for paired string lists, all inputs <=64 chars
-    (raise otherwise — callers truncate, or route long rows to the scalar
-    spec as jaro_winkler_udf does)."""
+    (raise otherwise — callers truncate)."""
     P = len(A)
     out = np.zeros(P, dtype=np.float64)
     if P == 0:

@@ -7,7 +7,8 @@ character of ``b`` applied to ALL still-active pairs at once, with per-pair
 pattern bitmask tables (Peq) built once per batch by a single
 ``np.bitwise_or.at`` scatter. Measured ~3.5-7x the JVM expression's
 per-core throughput at the 256-char truncation used by the matcher's
-``levenshtein_sim`` feature (`scripts/exp_myers.py`).
+``levenshtein_sim`` feature (the ``scripts/exp_myers.py`` harness, now in
+git history).
 
 Algorithm: G. Myers, "A fast bit-vector algorithm for approximate string
 matching based on dynamic programming", JACM 46(3), 1999 — public

@@ -8,10 +8,11 @@
   batch Myers kernel (``levenshtein_sim_udf``, functions/myers.py).
 - Jaro-Winkler: Arrow-batched pandas UDF —
   the "Magellan auto feature" analog (methods/magellan/entrypoint.py:81-89)
-  prescribed as a vectorized scalar UDF by the north rule. rapidfuzz is not
-  in the image so Jaro-Winkler is implemented here (pinned spec:
+  prescribed as a vectorized scalar UDF by the north rule, over the
+  bit-parallel kernel in functions/jaro.py (inputs ≤64 chars). The
+  pure-Python ``jaro_winkler`` is the pinned spec it is tested against:
   standard Jaro, Winkler prefix ≤4, p=0.1, boost threshold 0.7 — matches
-  DuckDB's jaro_winkler_similarity so the oracle can check it).
+  DuckDB's jaro_winkler_similarity so the oracle can check it.
 - Dense cosine on array<float> embeddings (methods/embeddings/
   get_similarity.py:4-10): native zip_with/aggregate expression.
 """
@@ -166,66 +167,16 @@ def jaro_winkler(s1: str, s2: str, p: float = 0.1, boost_threshold: float = 0.7)
     return j
 
 
-def _rapidfuzz_jw():
-    """Return rapidfuzz's JaroWinkler.similarity ONLY if it is value-identical
-    to the pure-Python implementation on a fixed probe set (exact equality).
-    rapidfuzz is a C++ implementation of the same published algorithm, so on
-    boxes that carry it this cuts the scoring stage's Python time; the probe
-    guards against any variant semantics (e.g. a missing 0.7 boost threshold)
-    silently changing matcher features."""
-    try:
-        from rapidfuzz.distance import JaroWinkler
-    except ImportError:
-        return None
-    probes = [
-        ("", ""), ("a", ""), ("martha", "marhta"), ("dwayne", "duane"),
-        ("dixon", "dicksonx"), ("abcdef", "abcdef"), ("ab", "ba"),
-        ("prefix match long", "prefix match lung"), ("x", "y"),
-        ("the quick brown fox", "the quick brown fix"),
-        ("low sim", "entirely different"), ("aaaa", "aaab"),
-        # boost-threshold region: common prefix but jaro <= 0.7, so the
-        # Winkler boost must NOT apply (j 0.5556/0.5000, prefix 2). A
-        # variant that boosts unconditionally passes every probe above
-        # (none combine prefix>0 with jaro<=0.7) yet diverges here.
-        ("martha", "massey"), ("abcdxxxx", "abyyzzzz"),
-    ]
-    fn = JaroWinkler.similarity
-    if all(fn(x, y) == jaro_winkler(x, y) for x, y in probes):
-        return fn
-    return None
-
-
-_RF_JW = _rapidfuzz_jw()
-
-
 @F.pandas_udf(DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched Jaro-Winkler. Rows where both sides are <=64 chars —
-    all of them in the featurize hot path, which ships substring(1, 64) —
-    go through the batch-vectorized bit-parallel kernel
-    (functions/jaro.py, value-identical to the pure-Python spec,
-    parity-pinned); longer rows fall back to the scalar spec (or
-    rapidfuzz when present and probe-identical)."""
-    import numpy as np
-
+    """Arrow-batched Jaro-Winkler through the batch-vectorized bit-parallel
+    kernel (functions/jaro.py, value-identical to the pure-Python spec
+    ``jaro_winkler``, parity-pinned). Inputs must be <=64 chars — the
+    featurize hot path ships substring(1, 64) — and a longer row fails the
+    batch loudly."""
     from ertransfer_spark.functions.jaro import jaro_winkler_batch
 
-    av = a.fillna("")
-    bv = b.fillna("")
-    la = np.fromiter((len(x) for x in av), dtype=np.int64, count=len(av))
-    lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=len(bv))
-    short = (la <= 64) & (lb <= 64)
-    out = np.empty(len(av), dtype=np.float64)
-    if short.any():
-        idx = np.nonzero(short)[0]
-        out[idx] = jaro_winkler_batch(
-            [av.iat[i] for i in idx], [bv.iat[i] for i in idx]
-        )
-    if not short.all():
-        fn = _RF_JW or jaro_winkler
-        for i in np.nonzero(~short)[0]:
-            out[i] = fn(av.iat[i], bv.iat[i])
-    return pd.Series(out, index=a.index)
+    return pd.Series(jaro_winkler_batch(a.fillna("").tolist(), b.fillna("").tolist()), index=a.index)
 
 
 @F.pandas_udf(DoubleType())

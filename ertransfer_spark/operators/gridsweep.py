@@ -1,9 +1,18 @@
-"""Side-tagged grouped-map cells — the safe form of a two-sided cogroup.
+"""Block-matrix sweeps: the one code path that turns two ``(id, …)`` sides
+into grid cells scored by one Python kernel each.
 
-All block-matrix sweeps here (``simsearch.brute_force_topk``,
-``simsearch.cosine_neardup_pairs``, and the set-overlap kernel's dense
-grid in ``overlap.overlap_pairs`` behind ``dedup.shingle_jaccard_pairs``
-and ``blocking.token_jaccard_join``) need "for each grid cell (i, j), give one
+:func:`block_sweep` is the sweep behind every exact all-pairs kernel —
+``simsearch.brute_force_topk``, ``simsearch.cosine_neardup_pairs`` and the
+set-overlap kernel's dense grid in ``overlap.overlap_pairs`` (behind
+``dedup.shingle_jaccard_pairs`` and ``blocking.token_jaccard_join``). It
+materializes and counts each side once, sizes the grid with
+:func:`grid_blocks`, buckets rows by ``pmod(xxhash64(id), p)``, replicates
+each side across the other side's block axis (or, for the triangular
+self-grid, across the blocks ≥ / ≤ its own), and hands each cell's rows to
+the caller's numpy body through :func:`grid_cogroup`. Each cell is one
+Arrow-batched Python call, so the Arrow boundary of every sweep lives here.
+
+Every sweep needs "for each grid cell (i, j), give one
 Python kernel the cell's LEFT rows and RIGHT rows". The direct expression
 is ``left.groupBy(keys).cogroup(right.groupBy(keys)).applyInPandas(...)``
 — but when both sides derive from the SAME upstream DataFrame (triangular
@@ -31,6 +40,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,3 +102,55 @@ def grid_cogroup(
         return fn(key, lp, rp)
 
     return u.groupBy(*key_cols).applyInPandas(split_cell, schema=schema)
+
+
+def block_sweep(
+    left: DataFrame,
+    right: DataFrame | None,
+    cell: Callable[[pd.DataFrame, pd.DataFrame, bool], pd.DataFrame],
+    schema: str,
+    rows_per_block: int,
+) -> DataFrame:
+    """Run ``cell(left_pdf, right_pdf, diagonal)`` over every grid cell of
+    ``left`` × ``right`` → ``applyInPandas(schema)`` output.
+
+    Both sides carry an ``id`` column and share a schema; ``right=None`` is
+    the triangular self-grid of ``left``, whose cells (i, j ≥ i) see every
+    unordered row pair exactly once — ``diagonal`` is True on the (i, i)
+    cells, where the body must keep one orientation of each pair. Each side
+    is materialized (``localCheckpoint``) and counted once; a cell with an
+    empty side returns an empty frame of ``schema`` without calling
+    ``cell``."""
+    par = left.sparkSession.sparkContext.defaultParallelism
+    sa = left.localCheckpoint()
+    cols = sa.columns
+
+    def blk(n: int):
+        return F.pmod(F.xxhash64("id"), F.lit(n))
+
+    if right is None:
+        p = grid_blocks(sa.count(), rows_per_block, par, triangular=True)
+        v = sa.withColumn("_b", blk(p))
+        # left of cell (i, j): block i rows for every j >= i; right: block
+        # j rows for every i <= j
+        lrep = v.select(F.col("_b").alias("bi"), F.explode(F.sequence("_b", F.lit(p - 1))).alias("bj"), *cols)
+        rrep = v.select(F.explode(F.sequence(F.lit(0), "_b")).alias("bi"), F.col("_b").alias("bj"), *cols)
+    else:
+        sb = right.localCheckpoint()
+        pl = grid_blocks(sa.count(), rows_per_block, par, triangular=False)
+        pr = grid_blocks(sb.count(), rows_per_block, par, triangular=False)
+        lrep = sa.select(blk(pl).alias("bi"), F.explode(F.sequence(F.lit(0), F.lit(pr - 1))).alias("bj"), *cols)
+        rrep = sb.select(F.explode(F.sequence(F.lit(0), F.lit(pl - 1))).alias("bi"), blk(pr).alias("bj"), *cols)
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    empty = to_arrow_schema(StructType.fromDDL(schema)).empty_table().to_pandas()
+    triangular = right is None
+
+    def run_cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(lpdf) or not len(rpdf):
+            return empty
+        return cell(lpdf, rpdf, triangular and key[0] == key[1])
+
+    return grid_cogroup(lrep, rrep, ("bi", "bj"), run_cell, schema=schema)

@@ -35,9 +35,9 @@ of both sides. It feeds
 **Kernels.** The sparse posting join (token equi-join → ``(a_id, b_id)``
 count) is the web-scale path. The dense grid runs only for set-semantics
 Jaccard calls with ``min_jaccard > 0`` whose capped shared dictionary has
-at most ``dense_dict_max`` tokens: each grid cell computes all pairwise
-overlaps with one binary-matrix float32 matmul over a cell-local
-dictionary, and emits only pairs that can reach ``min_jaccard`` (a
+at most ``dense_dict_max`` tokens: each cell of a ``gridsweep.block_sweep``
+computes all pairwise overlaps with one binary-matrix float32 matmul over
+a cell-local dictionary, and emits only pairs that can reach ``min_jaccard`` (a
 prefilter with a margin; callers apply the authoritative rounded filter).
 That is the regime where every shared token is hot but under the cap and
 the posting join streams near-all-pairs through two shuffles. Both
@@ -192,40 +192,10 @@ def _dense_pairs(
 
     triangular = prep_b is None
     keep_arr = np.sort(np.asarray(keep, dtype=np.int64))
-    par = prep_a.sparkSession.sparkContext.defaultParallelism
     cols = ("id", F.sort_array("hs").alias("gs"), "sz")
-    sa = prep_a.select(*cols).localCheckpoint()
-    if triangular:
-        p = gridsweep.grid_blocks(sa.count(), rows_per_block, par, triangular=True)
-        v = sa.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(p)))
-        left = v.select(
-            F.col("blk").alias("bi"),
-            F.explode(F.sequence(F.col("blk"), F.lit(p - 1))).alias("bj"),
-            "id", "gs", "sz",
-        )
-        right = v.select(
-            F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-            F.col("blk").alias("bj"),
-            "id", "gs", "sz",
-        )
-    else:
-        sb = prep_b.select(*cols).localCheckpoint()
-        qb_n = gridsweep.grid_blocks(sa.count(), rows_per_block, par, triangular=False)
-        cb_n = gridsweep.grid_blocks(sb.count(), rows_per_block, par, triangular=False)
-        left = sa.withColumn("bi", F.pmod(F.xxhash64("id"), F.lit(qb_n))).withColumn(
-            "bj", F.explode(F.sequence(F.lit(0), F.lit(cb_n - 1)))
-        )
-        right = sb.withColumn("bj", F.pmod(F.xxhash64("id"), F.lit(cb_n))).withColumn(
-            "bi", F.explode(F.sequence(F.lit(0), F.lit(qb_n - 1)))
-        )
     t = min_jaccard - 1e-6  # margin: the caller's rounded filter is authoritative
 
-    def overlap_cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {"a_id": [], "b_id": [], "overlap": [], "a_size": [], "b_size": []}
-            ).astype({"a_id": "int64", "b_id": "int64", "overlap": "int64",
-                      "a_size": "int32", "b_size": "int32"})
+    def overlap_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, diagonal: bool) -> pd.DataFrame:
         lg = [np.asarray(v, dtype=np.int64) for v in lpdf["gs"]]
         rg = [np.asarray(v, dtype=np.int64) for v in rpdf["gs"]]
         vocab = np.intersect1d(np.unique(np.concatenate(lg + rg)), keep_arr, assume_unique=True)
@@ -248,9 +218,10 @@ def _dense_pairs(
         sy = np.asarray(rpdf["sz"], dtype=np.int64)
         # J >= t  <=>  O*(1+t) >= t*(sx+sy); evaluated with a margin
         mask = (O > 0) & (O * (1.0 + t) >= t * (sx[:, None] + sy[None, :]) - 1e-6)
-        if triangular and key[0] == key[1]:
+        if diagonal:
             mask &= x[:, None] < y[None, :]
         r, c = np.where(mask)
+        # a triangular grid emits each unordered pair once, in either order
         swap = x[r] > y[c] if triangular else np.zeros(len(r), dtype=bool)
         return pd.DataFrame(
             {
@@ -262,7 +233,8 @@ def _dense_pairs(
             }
         )
 
-    return gridsweep.grid_cogroup(
-        left, right, ("bi", "bj"), overlap_cell,
+    return gridsweep.block_sweep(
+        prep_a.select(*cols), None if triangular else prep_b.select(*cols), overlap_cell,
         schema="a_id long, b_id long, overlap long, a_size int, b_size int",
+        rows_per_block=rows_per_block,
     )

@@ -7,29 +7,33 @@ matmul) and the sentence-BERT similarity scorer
 
 Paths, same contract (query_id, nbr_id, sim_r):
 
-- brute_force_topk / cosine_neardup_pairs — the EXACT baselines,
-  structured as a distributed block-matrix sweep: both sides are
-  hash-bucketed into blocks, the (qblock, cblock) grid is materialized by
-  replication-explode, and each grid cell is scored with ONE numpy float64
-  matmul inside a cogrouped applyInPandas. No driver-side collect, no
-  crossJoin node, executor memory bounded by the block size. The cost is
-  explicitly quadratic (replication factor = block count of the other
-  side) — that is inherent to exact all-pairs; the sublinear scale paths
-  are lsh_topk / ivf_topk below.
-- lsh_topk — random-hyperplane LSH. Each vector is bucketed by the sign
-  pattern of `n_planes` fixed pseudo-random hyperplanes (deterministic,
-  seeded, generated JVM-side from hash(dim_index, plane, seed) — no
-  Python, no model file). Candidates share a bucket in ≥1 of `n_tables`
-  tables; exact cosine re-rank after. Shuffle width O(vectors × tables),
-  candidates ∝ collisions.
-- ivf_topk — inverted-file ANN: corpus partitioned into cells once,
-  queries probe the n_probe nearest cells through an equi-join.
+- brute_force_topk / cosine_neardup_pairs — the EXACT baselines: a
+  rectangular (queries × corpus) or triangular (self) block-matrix sweep,
+  ``gridsweep.block_sweep``, whose cells each run ONE numpy float64
+  matmul. No driver-side collect, no crossJoin node, executor memory
+  bounded by the block size. The cost is explicitly quadratic
+  (replication factor = block count of the other side) — inherent to
+  exact all-pairs; the sublinear scale paths are the ANN paths below.
+- lsh_topk / lsh_topk_portable — random-hyperplane LSH. Each vector is
+  bucketed by the sign pattern of `n_planes` fixed pseudo-random
+  hyperplanes per table (murmur3 planes generated JVM-side, or the pinned
+  portable integer spec); candidates share a bucket in ≥1 of `n_tables`
+  tables. The two differ only in the per-plane bit expression. Shuffle
+  width O(vectors × tables), candidates ∝ collisions.
+- ivf_topk — inverted-file ANN: corpus assigned once to the cells of
+  deterministic id-hash seeds, queries probe the n_probe nearest cells
+  through an equi-join.
 
+Every ANN path ends in the same exact re-rank (``_rerank``): candidates
+join back to their vectors, take the guarded cosine, and keep the top-k.
 Ranking uses ROUNDED similarity (4 dp) with id tie-break so ordering is
 reproducible across engines and float-summation orders.
 """
 
 from __future__ import annotations
+
+import functools
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,18 +63,37 @@ def _normalized(M):
     return (M / scale[:, None]) * (norm > 0)[:, None]
 
 
-def _n_blocks(df: DataFrame, rows_per_block: int, triangular: bool = False) -> int:
-    # parallelism-aware: a sub-4096-row side must not collapse the sweep
-    # into one applyInPandas task (see gridsweep.grid_blocks). The block
-    # count only changes the physical grid, never the emitted rows — the
-    # per-cell top-k prefilter is exact for ANY cell partitioning (a row
-    # dominated by k cell-mates is dominated globally).
-    from ertransfer_spark.operators.gridsweep import grid_blocks
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Keep the k best (query_id, nbr_id, sim_r) rows per query: sim_r
+    descending, nbr_id ascending on ties."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
+    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
 
-    return grid_blocks(
-        df.count(), rows_per_block,
-        df.sparkSession.sparkContext.defaultParallelism, triangular=triangular,
+
+def _rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """Exact cosine re-rank of ``(query_id, nbr_id)`` candidates → the
+    ``round_dp``-rounded top-k (:func:`_top_k`). Both ids keep the caller's
+    id type (string record ids included); a zero-norm vector scores 0.0."""
+    q = with_norm(queries, vec_col).select(
+        F.col(id_col).alias("query_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
     )
+    c = with_norm(corpus, vec_col).select(
+        F.col(id_col).alias("nbr_id"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
+    )
+    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    # guard BOTH norms: a zero norm would otherwise divide by zero
+    # (DIVIDE_BY_ZERO under ANSI sessions)
+    sim_r = F.round(F.when((F.col("qn") > 0) & (F.col("cn") > 0), sim).otherwise(F.lit(0.0)), round_dp)
+    scored = cand.join(q, "query_id").join(c, "nbr_id").select("query_id", "nbr_id", sim_r.alias("sim_r"))
+    return _top_k(scored, k)
 
 
 def brute_force_topk(
@@ -85,52 +108,36 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k → (query_id, nbr_id, sim_r).
 
-    Distributed block-matrix sweep: queries and corpus are hash-bucketed
-    into Pq/Pc blocks of ~``rows_per_block`` vectors, each side is
-    replicated across the other side's block axis, and every (qb, cb) grid
-    cell does ONE float64 numpy matmul inside a cogrouped applyInPandas
-    (the north-rule vectorized-UDF path; the zip_with/aggregate Column
-    form allocates per-pair arrays and is ~10× slower, and a driver-side
-    collect of the query side would OOM at scale). No toPandas, no
-    crossJoin; executor memory is bounded by the block size, cost is
-    explicitly O(|Q|·|C|·d) spread across the grid.
+    A rectangular :func:`gridsweep.block_sweep` of queries × corpus: every
+    grid cell does ONE float64 numpy matmul (the north-rule vectorized-UDF
+    path; the zip_with/aggregate Column form allocates per-pair arrays and
+    is ~10× slower, and a driver-side collect of the query side would OOM
+    at scale). Cost is explicitly O(|Q|·|C|·d) spread across the grid.
 
     Exactness of the per-cell prefilter: a corpus row can only reach the
     global top-k if its sim is within one rounding step of its cell's
     k-th largest sim for that query (k better rows in the same cell
-    already dominate it at the final rounded ranking). The final
-    round+rank happens in Spark expressions so tie-breaks are identical
-    to the SQL oracle. Self-matches (same id) are excluded unless
-    ``exclude_self=False`` (use False when queries and corpus are
-    DIFFERENT tables with overlapping raw id spaces — cross-source
-    blocking — where equal ids are legitimate pairs).
+    already dominate it at the final rounded ranking), so the emitted rows
+    are the same for any block count. The final round+rank happens in
+    Spark expressions so tie-breaks are identical to the SQL oracle.
+    Self-matches (same id) are excluded unless ``exclude_self=False`` (use
+    False when queries and corpus are DIFFERENT tables with overlapping
+    raw id spaces — cross-source blocking — where equal ids are legitimate
+    pairs).
     """
     import numpy as np
     import pandas as pd
 
+    from ertransfer_spark.operators import gridsweep
+
     eps = 10.0 ** (-round_dp)
-    pq = _n_blocks(queries, rows_per_block)
-    pc = _n_blocks(corpus, rows_per_block)
 
-    q = queries.select(
-        F.col(id_col).cast("long").alias("rid"), _as_double(vec_col).alias("v")
-    ).withColumn("qb", F.pmod(F.xxhash64("rid"), F.lit(pq)))
-    c = corpus.select(
-        F.col(id_col).cast("long").alias("rid"), _as_double(vec_col).alias("v")
-    ).withColumn("cb", F.pmod(F.xxhash64("rid"), F.lit(pc)))
-    q_rep = q.withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(pc - 1))))
-    c_rep = c.withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(pq - 1))))
-
-    def score_cell(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame({"query_id": [], "nbr_id": [], "sim": []}).astype(
-                {"query_id": "int64", "nbr_id": "int64", "sim": "float64"}
-            )
+    def score_cell(left: pd.DataFrame, right: pd.DataFrame, diagonal: bool) -> pd.DataFrame:
         Qn = _normalized(np.stack(left["v"].to_numpy()).astype(np.float64))
         Mn = _normalized(np.stack(right["v"].to_numpy()).astype(np.float64))
         S = Mn @ Qn.T  # (corpus_rows, query_rows)
-        qids = np.asarray(left["rid"], dtype=np.int64)
-        nbr = np.asarray(right["rid"], dtype=np.int64)
+        qids = np.asarray(left["id"], dtype=np.int64)
+        nbr = np.asarray(right["id"], dtype=np.int64)
         kk = min(k + 1 if exclude_self else k, len(nbr))  # +1: self-match removed after scoring
         if len(nbr) > kk:
             kth = np.partition(S, -kk, axis=0)[-kk, :]
@@ -142,18 +149,14 @@ def brute_force_topk(
         )
         return out[out["query_id"] != out["nbr_id"]] if exclude_self else out
 
-    from ertransfer_spark.operators.gridsweep import grid_cogroup
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).cast("long").alias("id"), _as_double(vec_col).alias("v"))
 
-    scored = grid_cogroup(
-        q_rep, c_rep, ("qb", "cb"), score_cell,
-        schema="query_id long, nbr_id long, sim double",
-    ).select("query_id", "nbr_id", F.round("sim", round_dp).alias("sim_r"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    scored = gridsweep.block_sweep(
+        side(queries), side(corpus), score_cell,
+        schema="query_id long, nbr_id long, sim double", rows_per_block=rows_per_block,
     )
+    return _top_k(scored.select("query_id", "nbr_id", F.round("sim", round_dp).alias("sim_r")), k)
 
 
 def cosine_neardup_pairs(
@@ -166,15 +169,12 @@ def cosine_neardup_pairs(
 ) -> DataFrame:
     """All pairs (a_id < b_id) with cosine ≥ threshold → (a_id, b_id, sim_r).
 
-    Exact, as a TRIANGULAR block-matrix sweep: vectors are hash-bucketed
-    into P blocks, each unordered block pair (i ≤ j) is one cogrouped
-    applyInPandas cell scored with a single numpy float64 matmul, and the
-    diagonal cell keeps x < y. Every unordered vector pair lands in
-    exactly one cell, so no distinct is needed. Replication is O(n·P/2)
-    rows — inherent to exact all-pairs; no crossJoin node, no unbounded
-    partition, executor memory bounded by the block size. The sublinear
-    alternative at web scale is LSH candidates + exact verify (lsh_topk),
-    which trades guaranteed recall for cost ∝ collisions.
+    Exact, as a TRIANGULAR :func:`gridsweep.block_sweep`: each unordered
+    block pair is one cell scored with a single numpy float64 matmul, and
+    the diagonal cells keep x < y, so every unordered vector pair is scored
+    exactly once and no distinct is needed. The sublinear alternative at
+    web scale is LSH candidates + exact verify (lsh_topk), which trades
+    guaranteed recall for cost ∝ collisions.
 
     Zero-norm vectors score 0.0 against everything (dropped by any
     positive threshold), matching the guarded column-expression form.
@@ -182,55 +182,28 @@ def cosine_neardup_pairs(
     import numpy as np
     import pandas as pd
 
+    from ertransfer_spark.operators import gridsweep
+
     eps = 10.0 ** (-round_dp)
-    p = _n_blocks(vectors, rows_per_block, triangular=True)
 
-    v = vectors.select(
-        F.col(id_col).cast("long").alias("vid"), _as_double(vec_col).alias("v")
-    ).withColumn("blk", F.pmod(F.xxhash64("vid"), F.lit(p)))
-    # left of cell (i, j): block i rows, for every j >= i
-    left = v.select(
-        F.col("blk").alias("bi"),
-        F.explode(F.sequence(F.col("blk"), F.lit(p - 1))).alias("bj"),
-        "vid", "v",
-    )
-    # right of cell (i, j): block j rows, for every i <= j
-    right = v.select(
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-        F.col("blk").alias("bj"),
-        "vid", "v",
-    )
-
-    def score_cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "sim": []}).astype(
-            {"a_id": "int64", "b_id": "int64", "sim": "float64"}
-        )
-        if not len(lpdf) or not len(rpdf):
-            return empty
+    def score_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, diagonal: bool) -> pd.DataFrame:
         An = _normalized(np.stack(lpdf["v"].to_numpy()).astype(np.float64))
         Bn = _normalized(np.stack(rpdf["v"].to_numpy()).astype(np.float64))
         S = An @ Bn.T
-        x = np.asarray(lpdf["vid"], dtype=np.int64)
-        y = np.asarray(rpdf["vid"], dtype=np.int64)
-        if key[0] == key[1]:
-            mask = (S >= threshold - eps) & (x[:, None] < y[None, :])
-        else:
-            mask = S >= threshold - eps
+        x = np.asarray(lpdf["id"], dtype=np.int64)
+        y = np.asarray(rpdf["id"], dtype=np.int64)
+        mask = S >= threshold - eps
+        if diagonal:
+            mask &= x[:, None] < y[None, :]
         r, c = np.where(mask)
         xa, yb = x[r], y[c]
         return pd.DataFrame(
-            {
-                "a_id": np.minimum(xa, yb),
-                "b_id": np.maximum(xa, yb),
-                "sim": S[r, c],
-            }
+            {"a_id": np.minimum(xa, yb), "b_id": np.maximum(xa, yb), "sim": S[r, c]}
         )
 
-    from ertransfer_spark.operators.gridsweep import grid_cogroup
-
-    scored = grid_cogroup(
-        left, right, ("bi", "bj"), score_cell,
-        schema="a_id long, b_id long, sim double",
+    v = vectors.select(F.col(id_col).cast("long").alias("id"), _as_double(vec_col).alias("v"))
+    scored = gridsweep.block_sweep(
+        v, None, score_cell, schema="a_id long, b_id long, sim double", rows_per_block=rows_per_block,
     )
     return scored.select(
         "a_id", "b_id", F.round("sim", round_dp).alias("sim_r")
@@ -318,173 +291,54 @@ def ivf_topk(
     n_probe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     round_dp: int = 4,
-    method: str = "kmeans",
 ) -> DataFrame:
     """IVF-style ANN: partition the corpus into ``n_lists`` cells, probe
     the ``n_probe`` nearest cells per query, exact cosine re-rank within
     the probed cells → (query_id, nbr_id, sim_r), approximate.
 
-    The 100 TB shape: the corpus is clustered ONCE and stored partitioned
-    by cell; each query touches n_probe/n_lists of the data through an
-    equi-join on cell id — no cross join, no full scan. Centroids are tiny
-    and broadcast.
+    The 100 TB shape: the corpus is assigned to cells ONCE; each query
+    touches n_probe/n_lists of the data through an equi-join on cell id —
+    no cross join, no full scan. Centroids are tiny and broadcast.
 
-    ``method``:
-    - ``kmeans`` — Spark ML KMeans centroids (data-parallel Lloyd; best
-      cells, but the fit is engine-specific → rows-only verification).
-    - ``seeded`` — fully deterministic: centroids are the ``n_lists``
-      corpus vectors with the smallest portable polynomial hash of their
-      id (the pinned cross-engine spec from operators/dedup.py), cell =
-      nearest seed by euclidean distance ROUNDED 6 dp with seed-rank
-      tie-break. Every step has an exact SQL twin
-      (:func:`ivf_seeded_duckdb_sql`), so the whole ANN operator is
-      value-verifiable against DuckDB. Random-seed IVF is a standard
-      variant (seeds ≈ a uniform corpus sample); recall at equal n_probe
-      is a bit below the KMeans fit, which tests assert separately.
+    Fully deterministic: the centroids are the ``n_lists`` corpus vectors
+    with the smallest portable polynomial hash of their id (the pinned
+    cross-engine spec from operators/dedup.py), and a vector's cell is its
+    nearest seed by euclidean distance ROUNDED 6 dp with seed-rank
+    tie-break. Every step has an exact SQL twin
+    (:func:`ivf_seeded_duckdb_sql`), so the whole ANN operator is
+    value-verifiable against DuckDB. Random-seed IVF is a standard variant
+    (seeds ≈ a uniform corpus sample).
     """
-    if method == "seeded":
-        return _ivf_topk_seeded(
-            queries, corpus, k=k, n_lists=n_lists, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-        )
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(id_col).cast("long").alias("nbr_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("_feat", array_to_vector("cv"))
-    km = KMeans(k=n_lists, seed=seed, featuresCol="_feat", predictionCol="cell")
-    model = km.fit(c)
-    assigned = model.transform(c).select("nbr_id", "cv", "cell")
-
-    centroids = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())]
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(centroids, "cell int, centroid array<double>")
-
-    q = with_norm(queries, vec_col).select(
-        # cast to long like nbr_id above (and like the seeded variant):
-        # with string ids an uncast query_id vs bigint nbr_id self-match
-        # comparison is NULL and silently drops every candidate row
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col("_v").alias("qv"), F.col("_norm").alias("qn")
-    )
-    qc = q.crossJoin(F.broadcast(cent_df)).withColumn(
-        "cdist",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.asc("cdist"), F.asc("cell"))
-    probes = (
-        qc.withColumn("_pr", F.row_number().over(wprobe))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-
-    cn = F.sqrt(F.aggregate(F.zip_with("cv", "cv", lambda a, b: a * b), F.lit(0.0), lambda x, v: x + v))
-    cand = probes.join(assigned, "cell").filter(F.col("query_id") != F.col("nbr_id"))
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * cn)
-    scored = cand.select(
-        "query_id",
-        "nbr_id",
-        # guard BOTH norms: a zero-norm corpus vector would otherwise
-        # divide by zero (DIVIDE_BY_ZERO under ANSI sessions)
-        F.round(
-            F.when((F.col("qn") > 0) & (cn > 0), sim).otherwise(F.lit(0.0)), round_dp
-        ).alias("sim_r"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def _ivf_topk_seeded(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_lists: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    round_dp: int,
-) -> DataFrame:
-    """Deterministic IVF (see :func:`ivf_topk` method='seeded')."""
     from ertransfer_spark.operators.dedup import _token_hash_expr
 
-    c = corpus.select(
-        F.col(id_col).cast("long").alias("nbr_id"), _as_double(vec_col).alias("cv")
-    )
+    c = corpus.select(F.col(id_col).alias("nbr_id"), _as_double(vec_col).alias("cv"))
     th = F.expr(_token_hash_expr("CAST(nbr_id AS STRING)"))
     seed_rows = c.withColumn("_th", th).orderBy("_th", "nbr_id").limit(n_lists).collect()
     cent = [
         (i + 1, [float(x) for x in r["cv"]])
         for i, r in enumerate(sorted(seed_rows, key=lambda r: (r["_th"], r["nbr_id"])))
     ]
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(cent, "cell int, centroid array<double>")
+    cent_df = F.broadcast(corpus.sparkSession.createDataFrame(cent, "cell int, centroid array<double>"))
 
-    def dist_to(vec_col_name: str):
-        return F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col_name), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            6,
+    def nearest_cells(df: DataFrame, id_name: str, vec: str, n: int) -> DataFrame:
+        """(id_name, cell) for the n cells nearest each row's vector."""
+        d = F.round(F.sqrt(F.aggregate(
+            F.zip_with(F.col(vec), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, v: acc + v,
+        )), 6)
+        w = Window.partitionBy(id_name).orderBy(F.asc("_d"), F.asc("cell"))
+        return (
+            df.crossJoin(cent_df).withColumn("_d", d)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= n).select(id_name, "cell")
         )
 
-    w_assign = Window.partitionBy("nbr_id").orderBy(F.asc("_d"), F.asc("cell"))
-    assigned = (
-        c.crossJoin(F.broadcast(cent_df))
-        .withColumn("_d", dist_to("cv"))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select("nbr_id", "cv", "cell")
-    )
-
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("_d", dist_to("qv"))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-
-    cn = F.sqrt(F.aggregate(F.zip_with("cv", "cv", lambda a, b: a * b), F.lit(0.0), lambda x, v: x + v))
+    assigned = nearest_cells(c, "nbr_id", "cv", 1)
+    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
+    probes = nearest_cells(q, "query_id", "qv", n_probe)
     cand = probes.join(assigned, "cell").filter(F.col("query_id") != F.col("nbr_id"))
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * cn)
-    scored = cand.select(
-        "query_id",
-        "nbr_id",
-        F.round(
-            F.when((F.col("qn") > 0) & (cn > 0), sim).otherwise(F.lit(0.0)), round_dp
-        ).alias("sim_r"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return _rerank(cand.select("query_id", "nbr_id"), queries, corpus, k, id_col, vec_col, round_dp)
 
 
 def ivf_seeded_duckdb_sql(
@@ -495,7 +349,7 @@ def ivf_seeded_duckdb_sql(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB twin of ``ivf_topk(method='seeded')`` — replicates seed
+    """DuckDB twin of :func:`ivf_topk` — replicates seed
     selection (portable polynomial id-hash), 6-dp-rounded euclidean cell
     assignment, n_probe probing, and the 4-dp cosine top-k."""
     th = (
@@ -558,8 +412,7 @@ def lsh_topk_portable(
 ) -> DataFrame:
     """Hyperplane LSH with a fully PORTABLE plane spec → (query_id, nbr_id,
     sim_r) — the value-verifiable sibling of :func:`lsh_topk` (murmur3
-    planes, the throughput path), the way ``ivf_topk(method='seeded')`` is
-    the verifiable sibling of the KMeans IVF.
+    planes, the throughput path).
 
     Pinned spec (every step exact integer arithmetic, so bucket bits are
     bit-identical in any engine — no float-summation-order hazard):
@@ -588,82 +441,59 @@ def lsh_topk_portable(
     if first is None:
         # empty corpus (or all-null vec_col): no plane dimension to derive
         # — return the schema-stable empty result like the other topk ops
-        return (
-            queries.select(
-                F.col(id_col).cast("long").alias("query_id"),
-                F.col(id_col).cast("long").alias("nbr_id"),
-                F.lit(0.0).alias("sim_r"),
-            ).limit(0)
-        )
+        return queries.select(
+            F.col(id_col).alias("query_id"), F.col(id_col).alias("nbr_id"), F.lit(0.0).alias("sim_r")
+        ).limit(0)
     dim = len(first["v"])
-    total_planes = n_tables * n_planes
     weights = [
         [_poly_hash(f"pl:{p}:{i}") % 2001 - 1000 for i in range(dim)]
-        for p in range(total_planes)
+        for p in range(n_tables * n_planes)
     ]
 
-    def bucketed(df: DataFrame, side: str) -> DataFrame:
-        qv = F.transform(
-            _as_double(vec_col), lambda x: F.round(x * 1e6).cast("long")
-        )
-        out = df.select(F.col(id_col).cast("long").alias(f"{side}_id"), qv.alias("_q"))
-        tables = []
-        for t in range(n_tables):
-            bits = []
-            for p in range(n_planes):
-                w = F.array(*[F.lit(x) for x in weights[t * n_planes + p]])
-                dot = F.aggregate(
-                    F.zip_with(F.col("_q"), w, lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                )
-                bits.append((dot > 0).cast("int").cast("string"))
-            tables.append(
-                out.select(
-                    f"{side}_id",
-                    F.lit(t).alias("tbl"),
-                    F.concat_ws("", *bits).alias("bucket"),
-                )
-            )
-        res = tables[0]
-        for x in tables[1:]:
-            res = res.unionByName(x)
-        return res
+    def bit(q: Column, plane: int) -> Column:
+        w = F.array(*[F.lit(x) for x in weights[plane]])
+        dot = F.aggregate(F.zip_with(q, w, lambda a, b: a * b), F.lit(0).cast("long"), lambda acc, x: acc + x)
+        return (dot > 0).cast("int")
 
-    cand = (
-        bucketed(queries, "q")
-        .join(bucketed(corpus, "c"), ["tbl", "bucket"])
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("nbr_id"))
-        .filter(F.col("query_id") != F.col("nbr_id"))
-        .distinct()
+    quantized = F.transform(_as_double(vec_col), lambda x: F.round(x * 1e6).cast("long"))
+    cand = _bucket_candidates(queries, corpus, id_col, quantized, bit, n_planes, n_tables, True)
+    return _rerank(cand, queries, corpus, k, id_col, vec_col, round_dp)
+
+
+def _bucket_candidates(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec: Column,
+    bit: Callable[[Column, int], Column],
+    n_planes: int,
+    n_tables: int,
+    exclude_self: bool,
+) -> DataFrame:
+    """Distinct ``(query_id, nbr_id)`` pairs that share a bucket in at least
+    one of ``n_tables`` hyperplane-LSH tables. Table t's bucket key is the
+    0/1 ``bit(vec, plane)`` of planes [t·n_planes, (t+1)·n_planes)
+    concatenated; ``exclude_self`` drops query_id == nbr_id."""
+    def bucketed(df: DataFrame, side: str) -> DataFrame:
+        out = df.select(F.col(id_col).alias(f"{side}_id"), vec.alias("_v"))
+        tables = [
+            out.select(
+                f"{side}_id",
+                F.lit(t).alias("tbl"),
+                F.concat_ws(
+                    "", *[bit(F.col("_v"), t * n_planes + p).cast("string") for p in range(n_planes)]
+                ).alias("bucket"),
+            )
+            for t in range(n_tables)
+        ]
+        return functools.reduce(DataFrame.unionByName, tables)
+
+    cand = bucketed(queries, "q").join(bucketed(corpus, "c"), ["tbl", "bucket"]).select(
+        F.col("q_id").alias("query_id"), F.col("c_id").alias("nbr_id")
     )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col("_v").alias("qv"), F.col("_norm").alias("qn"),
-    )
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).cast("long").alias("nbr_id"),
-        F.col("_v").alias("cv"), F.col("_norm").alias("cn"),
-    )
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "nbr_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(
-                F.when((F.col("qn") > 0) & (F.col("cn") > 0), sim).otherwise(F.lit(0.0)),
-                round_dp,
-            ).alias("sim_r"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    if exclude_self:
+        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
+    return cand.distinct()
 
 
 def _poly_hash(s: str, mod: int = 2147483647, seed: int = 7) -> int:
@@ -773,53 +603,6 @@ def lsh_topk(
     queries and corpus are DIFFERENT tables whose raw id spaces overlap
     (cross-source blocking): there (5, 5) is a legitimate candidate pair.
     """
-    def bucketed(df: DataFrame, side: str) -> DataFrame:
-        v = _as_double(vec_col)
-        out = df.select(F.col(id_col).alias(f"{side}_id"), v.alias("_v"))
-        tables = []
-        for t in range(n_tables):
-            bits = [
-                _hyperplane_sign(F.col("_v"), t * n_planes + p, seed) for p in range(n_planes)
-            ]
-            key = F.concat_ws("", *[b.cast("string") for b in bits])
-            tables.append(
-                out.select(
-                    f"{side}_id", F.lit(t).alias("tbl"), key.alias("bucket")
-                )
-            )
-        res = tables[0]
-        for x in tables[1:]:
-            res = res.unionByName(x)
-        return res
-
-    bq = bucketed(queries, "q")
-    bc = bucketed(corpus, "c")
-    cand = (
-        bq.join(bc, ["tbl", "bucket"])
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("nbr_id"))
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-    cand = cand.distinct()
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
-    )
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("nbr_id"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
-    )
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "nbr_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(F.when((F.col("qn") > 0) & (F.col("cn") > 0), sim).otherwise(F.lit(0.0)), round_dp).alias("sim_r"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_r"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    bit = functools.partial(_hyperplane_sign, seed=seed)
+    cand = _bucket_candidates(queries, corpus, id_col, _as_double(vec_col), bit, n_planes, n_tables, exclude_self)
+    return _rerank(cand, queries, corpus, k, id_col, vec_col, round_dp)

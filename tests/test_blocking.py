@@ -297,3 +297,27 @@ def test_df_cap_broadcasts_only_the_hot_set(records):
         assert filters, hint.toString()
         cond = filters[0].condition().sql()
         assert ">" in cond and "<=" not in cond, cond
+
+
+def test_scored_pairs_does_not_force_broadcast_doc_dims(spark, tmp_path):
+    """The contract's scored pairs re-attach the per-document (id, lang)
+    table after the join. It has one row per document, so no broadcast
+    hint may sit on it; the planner still broadcasts it while it is small."""
+    import __spark_entry__ as entry
+
+    docs = pd.DataFrame({
+        "doc_id": list(range(8)),
+        "lang": ["en", "de"] * 4,
+        "text": ["the quick brown fox jumps over the lazy dog"] * 4
+        + ["a slow green turtle crawls under the lazy dog"] * 4,
+    })
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    pairs = entry._scored_pairs(spark, str(tmp_path))
+    for hint in _plan_nodes(pairs._jdf.queryExecution().analyzed()):
+        if hint.nodeName() == "ResolvedHint" and "broadcast" in hint.hints().toString():
+            out = hint.output()
+            names = {out.apply(i).name() for i in range(out.size())}
+            assert not names & {"lang", "a_lang", "b_lang"}, names
+    executed = pairs._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("BroadcastHashJoin") >= 2, executed
+    assert pairs.count() > 0

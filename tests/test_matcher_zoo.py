@@ -352,54 +352,3 @@ def test_tfidf_cosine_max_df_cap(spark):
     # vocab; a2/b2 share nothing below the cap → 0
     assert out[("a1", "b1")] == pytest.approx(1.0)
     assert out[("a2", "b2")] == 0.0
-
-
-def test_rapidfuzz_guard_parity():
-    """The rapidfuzz fast path is import-guarded by an exact-equality probe
-    (_rapidfuzz_jw): it may only be active when value-identical to the
-    pure-Python jaro_winkler. When rapidfuzz is absent the guard returns
-    None and the fallback runs; when present, assert full parity on a
-    broader vector than the probe set (tolerance 0 — same algorithm)."""
-    from ertransfer_spark.functions.similarity import _RF_JW, _rapidfuzz_jw, jaro_winkler
-
-    assert _rapidfuzz_jw() == _RF_JW  # deterministic guard
-    try:
-        from rapidfuzz.distance import JaroWinkler
-    except ImportError:
-        assert _RF_JW is None
-        pytest.skip("rapidfuzz not installed — fallback path in use")
-    if _RF_JW is None:
-        pytest.skip("rapidfuzz present but diverges from pinned algorithm; fallback in use")
-    import itertools
-    words = ["", "a", "ab", "martha", "marhta", "dwayne", "duane", "jones",
-             "johnson", "massey", "massie", "abroms", "abrams", "prefix one",
-             "prefix two", "the quick brown fox jumps", "entirely unrelated"]
-    for x, y in itertools.product(words, repeat=2):
-        assert JaroWinkler.similarity(x, y) == jaro_winkler(x, y), (x, y)
-
-
-def test_rapidfuzz_probe_covers_boost_threshold():
-    """The probe set must contain a pair with a common prefix AND
-    jaro <= 0.7: that is the only input region where the 0.7 Winkler
-    boost-threshold is observable, so without such a probe a variant
-    that boosts unconditionally would pass the guard bit-for-bit and
-    silently change matcher features on real data."""
-    import inspect
-
-    from ertransfer_spark.functions import similarity as sim
-
-    src = inspect.getsource(sim._rapidfuzz_jw)
-    # re-evaluate the literal probe list from the guard's source
-    probes = eval(src.split("probes = ")[1].split("]")[0] + "]")  # noqa: S307
-    def prefix(a, b):
-        p = 0
-        for x, y in zip(a[:4], b[:4]):
-            if x != y:
-                break
-            p += 1
-        return p
-    assert any(prefix(a, b) > 0 and sim.jaro(a, b) <= 0.7 for a, b in probes)
-    # and an unconditional-boost variant must FAIL the probe set
-    def jw_no_threshold(a, b):
-        return sim.jaro_winkler(a, b, boost_threshold=-1.0)
-    assert not all(jw_no_threshold(a, b) == sim.jaro_winkler(a, b) for a, b in probes)

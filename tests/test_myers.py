@@ -70,7 +70,7 @@ def test_myers_chunking_invariant():
 
 def test_jaro_winkler_batch_matches_scalar_spec():
     """jaro_winkler_batch == the pinned pure-Python jaro_winkler exactly,
-    including the rapidfuzz probe set and the boost-threshold boundary."""
+    including classic probe pairs and the boost-threshold boundary."""
     from ertransfer_spark.functions.jaro import jaro_winkler_batch
     from ertransfer_spark.functions.similarity import jaro_winkler
 
@@ -95,25 +95,30 @@ def test_jaro_winkler_batch_matches_scalar_spec():
         assert got[i] == jaro_winkler(a, b), (i, a, b)
 
 
-def test_jaro_winkler_udf_long_rows_fall_back(spark):
-    """Mixed batches with >64-char rows route those rows to the scalar
-    spec; all rows must equal the pure-Python value."""
+def test_jaro_winkler_udf_long_rows_raise(spark):
+    """The UDF runs the <=64-char batch kernel only: short rows (NULLs and
+    the 64-char boundary included) equal the pure-Python spec, and a row
+    over 64 chars fails the query loudly instead of being scored another
+    way."""
     from ertransfer_spark.functions.similarity import jaro_winkler, jaro_winkler_udf
 
+    schema = "id long, a string, b string"
     rows = [
         (0, "short one", "short two"),
-        (1, "x" * 100, "x" * 99 + "y"),
         (2, None, "abc"),
         (3, "a" * 64, "a" * 63 + "b"),
-        (4, "pneumonoultramicroscopicsilicovolcanoconiosis" * 3, "pneumono"),
     ]
-    df = spark.createDataFrame(rows, "id long, a string, b string")
+    df = spark.createDataFrame(rows, schema)
     got = {
         r["id"]: r["jw"]
         for r in df.select("id", jaro_winkler_udf("a", "b").alias("jw")).collect()
     }
     for i, a, b in rows:
         assert got[i] == jaro_winkler(a or "", b or ""), (i,)
+    for a, b in (("x" * 65, "x"), ("short", "y" * 100)):
+        long_row = spark.createDataFrame([(1, a, b)], schema)
+        with pytest.raises(Exception, match="64-char"):
+            long_row.select(jaro_winkler_udf("a", "b")).collect()
 
 
 @pytest.mark.usefixtures("spark")

@@ -1,10 +1,14 @@
 """Property tests (SURVEY §5e): permutation invariance of input row order,
-determinism of every seeded operator, and the set-overlap kernel's
-dense-equals-sparse and top-K-equals-oracle invariants on generated inputs."""
+determinism of every seeded operator, the set-overlap kernel's
+dense-equals-sparse and top-K-equals-oracle invariants, and the exact
+vector sweeps against a numpy spec, on generated inputs."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -184,3 +188,70 @@ def test_top_k_equals_bruteforce_oracle(spark, a, b, k):
     assert set(got) == set(zip(want["a_id"], want["b_id"]))
     for r in want.itertuples(index=False):
         assert abs(got[(r.a_id, r.b_id)] - r.sim) < 1e-12
+
+
+# Small-integer vectors: cosines are m/sqrt(N) with N <= 144, never on a
+# 4-dp rounding boundary, so the spec's rounding equals Spark's for any
+# float summation order. Each case also carries a zero-norm vector, an
+# exact duplicate and a scaled copy of its first vector: equal sims up to
+# float noise, so the nbr_id tie-break and the cells' rounding-step margin
+# are exercised on every case.
+_vectors = st.lists(st.lists(st.integers(-2, 2), min_size=3, max_size=3), min_size=1, max_size=14)
+# 5 directions x 4 members (the `vectors` fixture of test_dedup_textstats)
+_DIRECTION_GROUPS = [
+    [math.cos((i % 5) * 0.5), math.sin((i % 5) * 0.5), (i % 5) * 0.01] for i in range(20)
+]
+
+
+def _round_dp4(x: float) -> float:
+    """Spark's round(x, 4) for a double: HALF_UP on its shortest decimal."""
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
+
+
+def _cosine_spec(vecs):
+    import numpy as np
+
+    M = np.asarray(vecs, dtype=np.float64)
+    norm = np.sqrt((M * M).sum(axis=1))
+    U = M / np.where(norm > 0, norm, 1.0)[:, None]
+    S = U @ U.T
+    return [[_round_dp4(x) for x in row] for row in S]
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(
+    vecs=_vectors,
+    k=st.integers(1, 4),
+    threshold=st.sampled_from([0.0, 0.25, 0.5, 0.7071, 0.9]),
+    rows_per_block=st.sampled_from([1, 2, 3, 4096]),
+)
+@example(vecs=_DIRECTION_GROUPS, k=3, threshold=0.8, rows_per_block=4096)
+@example(vecs=_DIRECTION_GROUPS, k=3, threshold=0.8, rows_per_block=3)
+def test_vector_sweeps_equal_numpy_spec(spark, vecs, k, threshold, rows_per_block):
+    """brute_force_topk (rectangular grid: even-id queries x all vectors)
+    and cosine_neardup_pairs (triangular self-grid) equal a brute-force
+    numpy spec — the same rows for one block or many, including the
+    rounded similarities, the nbr_id tie-break and zero-norm vectors."""
+    from ertransfer_spark.operators.simsearch import brute_force_topk, cosine_neardup_pairs
+
+    vecs = [list(map(float, v)) for v in vecs]
+    vecs = vecs + [vecs[0], [2.0 * x for x in vecs[0]], [0.0, 0.0, 0.0]]
+    S = _cosine_spec(vecs)
+    n = len(vecs)
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+
+    got = sorted(map(tuple, brute_force_topk(
+        df.filter(F.col("vec_id") % 2 == 0), df, k=k, rows_per_block=rows_per_block
+    ).collect()))
+    want = sorted(
+        (q, j, S[q][j])
+        for q in range(0, n, 2)
+        for j in sorted((j for j in range(n) if j != q), key=lambda j: (-S[q][j], j))[:k]
+    )
+    assert got == want
+
+    got = sorted(map(tuple, cosine_neardup_pairs(
+        df, threshold=threshold, rows_per_block=rows_per_block
+    ).collect()))
+    want = [(i, j, S[i][j]) for i in range(n) for j in range(i + 1, n) if S[i][j] >= threshold]
+    assert got == want
