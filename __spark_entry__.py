@@ -239,15 +239,15 @@ def q_topk_rare_union(spark, sf_dir):
 
 
 def q_reciprocal_top1(spark, sf_dir):
-    """W3/A3/A4 (exact clustering): mutual-best pairs above threshold."""
-    s = _scored_pairs(spark, sf_dir).filter(F.col("sim_r") > EC_THRESHOLD)
-    wa = Window.partitionBy("a_id").orderBy(F.desc("sim_r"), F.asc("b_id"))
-    wb = Window.partitionBy("b_id").orderBy(F.desc("sim_r"), F.asc("a_id"))
-    top_a = s.withColumn("r", F.row_number().over(wa)).filter(F.col("r") == 1).drop("r")
-    top_b = s.withColumn("r", F.row_number().over(wb)).filter(F.col("r") == 1).drop("r")
-    return top_a.join(top_b.select("a_id", "b_id"), ["a_id", "b_id"]).select(
-        "a_id", "b_id", "sim_r"
+    """W3/A3/A4 (exact clustering): mutual-best pairs above threshold,
+    through the real operator (``clustering.exact_clusters``), so the
+    DuckDB oracle checks it."""
+    from ertransfer_spark.operators.clustering import exact_clusters
+
+    out = exact_clusters(
+        _scored_pairs(spark, sf_dir), threshold=EC_THRESHOLD, limit=1, prob_col="sim_r"
     )
+    return out.withColumnRenamed("prob", "sim_r")
 
 
 def q_snm_blocking(spark, sf_dir):

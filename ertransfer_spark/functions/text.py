@@ -166,6 +166,33 @@ DUCKDB_TRIGRAMS_SQL = (
 )
 
 
+# --- the pinned polynomial string hash --------------------------------------
+# th(s) = fold over the chars of s of (h*31 + ascii(c)) mod 2^31-1, seed 7.
+# Integer arithmetic only, so Spark, DuckDB and Python agree bit-for-bit:
+# the portable MinHash, SimHash, document fingerprints, the seeded IVF cells
+# and the portable LSH planes all hash with it. Spark's sequence(1, 0) is
+# descending, so its template guards '' (→ 7, as DuckDB's empty fold gives).
+POLY_HASH_MOD = 2147483647
+SPARK_POLY_HASH_SQL = (
+    "case when length({s}) = 0 then 7L else "
+    "aggregate(sequence(1, length({s})), 7L, "
+    f"(h, i) -> (h * 31 + ascii(substring({{s}}, i, 1))) % {POLY_HASH_MOD}L) end"
+)
+DUCKDB_POLY_HASH_SQL = (
+    "list_reduce(list_prepend(CAST(7 AS BIGINT), "
+    "list_transform(range(1, 1 + length({s})), i -> CAST(ascii(substr({s}, i, 1)) AS BIGINT))), "
+    f"(h, c) -> (h * 31 + c) % {POLY_HASH_MOD})"
+)
+
+
+def poly_hash(s: str) -> int:
+    """Python twin of ``SPARK_POLY_HASH_SQL`` / ``DUCKDB_POLY_HASH_SQL``."""
+    h = 7
+    for ch in s:
+        h = (h * 31 + ord(ch)) % POLY_HASH_MOD
+    return h
+
+
 def word_shingles(text_col: str, n: int = 2) -> Column:
     """Distinct word n-gram shingles of a text column (n ∈ {2, 3}).
 

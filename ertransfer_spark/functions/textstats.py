@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ertransfer_spark.functions.text import DUCKDB_NORM, DUCKDB_TOKENS, normalize, tokens
+from ertransfer_spark.functions.text import (
+    DUCKDB_NORM,
+    DUCKDB_POLY_HASH_SQL,
+    DUCKDB_TOKENS,
+    SPARK_POLY_HASH_SQL,
+    normalize,
+    tokens,
+)
 
 # Pinned per-language function-word lists (tiny, public, deterministic).
 LANG_MARKERS = {
@@ -150,13 +157,10 @@ TOKEN_COUNTS_DUCKDB = {
     ),
 }
 
-_HASH_MOD = 2147483647
-
 
 def doc_fingerprint(text_col: str) -> Column:
-    """Polynomial rolling hash of the normalized text (document
-    fingerprint). Portable: fold of (h*31 + ascii(char)) mod 2^31-1, seed 7.
-    Empty text → 7."""
+    """Pinned polynomial hash (``functions.text.SPARK_POLY_HASH_SQL``) of
+    the normalized text (document fingerprint). Empty text → 7."""
     norm_sql = (
         f"trim(regexp_replace(lower(coalesce({text_col}, '')), '[^a-z0-9]+', ' '))"
     )
@@ -164,26 +168,8 @@ def doc_fingerprint(text_col: str) -> Column:
     # does no CSE inside lambda bodies, so substituting {norm_sql} into the
     # fold re-runs the regex normalization once PER CHARACTER (O(len²)/row).
     # Values identical; normalization evaluates once per row.
-    expr = f"""
-      transform(array({norm_sql}), s ->
-        case when length(s) = 0 then 7L else
-          aggregate(
-            sequence(1, length(s)),
-            7L,
-            (h, i) -> (h * 31 + ascii(substring(s, i, 1))) % {_HASH_MOD}L
-          )
-        end
-      )[0]
-    """
-    return F.expr(expr)
+    return F.expr(f"transform(array({norm_sql}), s -> {SPARK_POLY_HASH_SQL.format(s='s')})[0]")
 
 
 def doc_fingerprint_duckdb(col: str) -> str:
-    norm = DUCKDB_NORM.format(col=col)
-    return (
-        f"CASE WHEN length({norm}) = 0 THEN 7 ELSE "
-        f"list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        f"list_transform(range(1, 1 + length({norm})), "
-        f"i -> CAST(ascii(substr({norm}, i, 1)) AS BIGINT))), "
-        f"(h, c) -> (h * 31 + c) % {_HASH_MOD}) END"
-    )
+    return DUCKDB_POLY_HASH_SQL.format(s=DUCKDB_NORM.format(col=col))

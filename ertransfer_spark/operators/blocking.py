@@ -12,6 +12,11 @@ filters over the one set-overlap kernel in ``operators.overlap``
   counts → top-K (``top_k_token_join``) or rounded-Jaccard threshold
   (``token_jaccard_join``)
 
+``minhash_lsh_join`` is the sublinear alternative: the murmur3 family of
+the one MinHash-LSH in ``operators.minhash`` (band keys → bucket join on
+(band_idx, band_hash) → exact-Jaccard verify), candidates ∝ band
+collisions instead of shared tokens.
+
 Skew controls (north rule, explicit):
 - **document-frequency pruning**: a token appearing in dfA×dfB records
   generates dfA·dfB candidate pairs; tokens with df above ``max_token_df``
@@ -36,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ertransfer_spark.functions.similarity import overlap_to_sim
+from ertransfer_spark.operators.minhash import minhash_pairs
 from ertransfer_spark.operators.overlap import jaccard_at_least, overlap_pairs
 
 
@@ -192,57 +198,6 @@ def block_histogram(records: DataFrame, tokens_col: str = "token_set") -> DataFr
 # MinHash-LSH blocking (scale path; J2 analog of DeepBlocker's vector top-K)
 # --------------------------------------------------------------------------
 
-def minhash_signature(tokens_col, n_hashes: int = 64):
-    """Native minhash signature: sig[j] = min over tokens of hash(token, j).
-
-    Uses Spark's murmur3 ``F.hash`` with the permutation index mixed in —
-    entirely JVM-side, no UDF, no Spark-ML VectorUDT detour. NOTE: only for
-    small/derived columns — the join below uses the columnar-aggregate form
-    instead (nested transform trees blow up codegen when a downstream
-    posexplode duplicates them per band)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda j: F.array_min(F.transform(tokens_col, lambda t: F.hash(t, j))),
-    )
-
-
-def minhash_band_keys(
-    records: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    n_hashes: int,
-    bands: int,
-    side: str = "a",
-) -> DataFrame:
-    """({side}_id, band_idx, band_hash) LSH band keys for each record.
-
-    The columnar-aggregate signature form (explode once, n_hashes
-    ``min(hash(tok, j))`` partial-aggregable columns in one groupBy — see
-    :func:`minhash_lsh_join`). Standalone so incremental/streaming callers
-    can sign ONLY a new batch and bucket-join it against previously
-    persisted band keys (cost O(|batch|), never O(corpus))."""
-    if n_hashes % bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be divisible by bands={bands}: "
-            "a silent remainder would compute hashes that never feed a "
-            "band, changing the effective LSH S-curve"
-        )
-    rows = n_hashes // bands
-    posts = records.select(
-        F.col(id_col).alias(f"{side}_id"), F.explode(tokens_col).alias("tok")
-    )
-    sig = posts.groupBy(f"{side}_id").agg(
-        *[F.min(F.hash("tok", F.lit(j))).alias(f"h{j}") for j in range(n_hashes)]
-    )
-    band_cols = [
-        F.hash(*[F.col(f"h{b * rows + r}") for r in range(rows)]) for b in range(bands)
-    ]
-    return sig.select(
-        f"{side}_id",
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"),
-    )
-
-
 def minhash_lsh_join(
     records_a: DataFrame,
     records_b: DataFrame,
@@ -253,55 +208,17 @@ def minhash_lsh_join(
     min_jaccard: float = 0.5,
     self_join: bool = False,
 ) -> DataFrame:
-    """LSH candidate generation + exact-jaccard verification.
-
-    → (a_id, b_id, sim). With bands=32 × rows=3 over 96 hashes the S-curve
-    gives ~0.99 collision probability at jaccard 0.5 (and ~0.75 at 0.35 —
-    extra candidates are cheap because verification is exact, so precision
-    is 1 wrt ``min_jaccard`` and only recall depends on the banding).
-
-    Signature computation is the columnar-aggregate form: explode tokens
-    ONCE, then n_hashes partial-aggregable ``min(hash(token, j))`` columns
-    in a single groupBy — one pass over postings, map-side combined, no
-    nested-lambda expression tree (which codegen would otherwise duplicate
-    per band slice).
-
-    Shuffles: one on id (the signature agg), one on (band_idx, band_hash)
-    (the bucket join), one on the verify join key. Bucket skew (many
-    records sharing a band hash) is the LSH analog of a hot token; AQE
-    skew-join splits it. Records with empty token sets produce no
-    signature and no candidates.
+    """MinHash-LSH join → (a_id, b_id, sim), kept when round(sim, 6) ≥
+    ``min_jaccard``: the murmur3 family of
+    :func:`~ertransfer_spark.operators.minhash.minhash_pairs` (exact
+    verify, so precision is 1; the banding sets recall: 32 bands × 3 rows
+    collide with probability ~0.99 at Jaccard 0.5). ``self_join=True``
+    pairs ``records_a`` with itself, each pair once with a_id < b_id.
     """
-    ba = minhash_band_keys(records_a, id_col, tokens_col, n_hashes, bands, "a")
-    bb = minhash_band_keys(records_b, id_col, tokens_col, n_hashes, bands, "b")
-    cand = ba.join(bb, ["band_idx", "band_hash"]).select("a_id", "b_id")
-    if self_join:
-        cand = cand.filter(F.col("a_id") < F.col("b_id"))
-    cand = cand.distinct()
-
-    # verify ships xxhash64(token) long arrays instead of the token strings
-    # (~3× smaller join rows, long-vs-string intersect) — sim is a COUNT
-    # ratio, so values are identical (64-bit in-doc collision P ≈ n²/2⁶⁵,
-    # the same accepted risk as the posting-key hashing elsewhere); the
-    # intersection is computed ONCE per row, not once per use
-    ht = lambda c: F.transform(F.col(c), lambda t: F.xxhash64(t))  # noqa: E731
-    ta = records_a.select(F.col(id_col).alias("a_id"), ht(tokens_col).alias("a_toks"))
-    tb = records_b.select(F.col(id_col).alias("b_id"), ht(tokens_col).alias("b_toks"))
-    verified = (
-        cand.join(ta, "a_id")
-        .join(tb, "b_id")
-        .withColumn(
-            "_inter", F.size(F.array_intersect("a_toks", "b_toks")).cast("double")
-        )
-        .withColumn(
-            "sim",
-            F.col("_inter")
-            / (F.size("a_toks") + F.size("b_toks") - F.col("_inter")),
-        )
-        .filter(F.col("sim") >= min_jaccard)
-        .select("a_id", "b_id", "sim")
+    return minhash_pairs(
+        records_a, None if self_join else records_b, id_col, tokens_col,
+        n_hashes, bands, min_jaccard,
     )
-    return verified
 
 
 # --------------------------------------------------------------------------

@@ -11,11 +11,13 @@ is the exact-dup case). Here each flavor is a standalone operator:
 - n-gram:  q-gram / word-shingle Jaccard self-join over the set-overlap
            kernel (operators.overlap), df-pruned so a hot gram cannot
            explode the join.
-- minhash: JVM-native MinHash+LSH banding (blocking.minhash_lsh_join) —
-           the 100 TB path: candidates ∝ true near-dups, not |corpus|².
-- simhash: 32-bit SimHash fingerprint from a pinned polynomial token hash
-           (portable: the same hash is expressible in any engine, so the
-           DuckDB oracle can verify it bit-for-bit).
+- minhash: MinHash+LSH banding (operators.minhash), the 100 TB path
+           (candidates ∝ true near-dups, not |corpus|²): murmur3 for
+           throughput, portable for the DuckDB-verified twin.
+- simhash: 32-bit SimHash fingerprint from the pinned polynomial token
+           hash (``functions.text.SPARK_POLY_HASH_SQL``: the same hash is
+           expressible in any engine, so the DuckDB oracle can verify it
+           bit-for-bit).
 
 All pure Column expressions except the n-gram join's dense grid kernel
 (one numpy matmul per grid cell).
@@ -26,7 +28,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ertransfer_spark.functions.text import tokens
+from ertransfer_spark.functions.text import (
+    DUCKDB_BIGRAMS_SQL,
+    DUCKDB_POLY_HASH_SQL,
+    DUCKDB_TOKENS,
+    DUCKDB_TOKENS_SQL,
+    POLY_HASH_MOD,
+    SPARK_POLY_HASH_SQL,
+    tokens,
+    word_shingles,
+)
+from ertransfer_spark.operators.minhash import BAND_MUL, MH_MUL, minhash_pairs, rows_per_band
 from ertransfer_spark.operators.overlap import jaccard_at_least, overlap_pairs
 
 
@@ -89,6 +101,12 @@ def shingle_jaccard_pairs(
     return jaccard_at_least(pairs, threshold).select("a_id", "b_id", "sim_r")
 
 
+def _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, family):
+    recs = docs.select(F.col(id_col).cast("long").alias("id"), tok.alias("s"))
+    out = minhash_pairs(recs, None, "id", "s", n_hashes, bands, min_jaccard, family)
+    return out.select("a_id", "b_id", F.round("sim", 6).alias("sim_r"))
+
+
 def minhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -98,64 +116,18 @@ def minhash_dedup(
     min_jaccard: float = 0.5,
     shingle: int = 2,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs → (a_id, b_id, sim_r), a_id < b_id.
-
-    Delegates to blocking.minhash_lsh_join in self-join mode: JVM murmur3
-    signatures, banding bucket-join, exact-jaccard verification. The scale
-    path — shuffle width is O(docs × bands), candidates only where bands
-    collide. Non-portable hash → verified by the rows-only driver check
-    plus the engine-side recall test against exact Jaccard.
-
-    ``shingle``: word n-gram size for the token set (1 = raw tokens).
-    Shingles ≥2 are essential on small-vocabulary corpora where unigram
-    sets are near-identical across documents.
+    """MinHash+LSH near-dup pairs → (a_id, b_id, sim_r), a_id < b_id: the
+    murmur3 family of :func:`~ertransfer_spark.operators.minhash.minhash_pairs`,
+    the throughput path (rows-only oracle check; recall is tested against
+    exact Jaccard). ``shingle``: word n-gram size of the token set (1 = raw
+    tokens); shingles ≥ 2 keep small-vocabulary corpora selective.
     """
-    from ertransfer_spark.functions.text import word_shingles
-    from ertransfer_spark.operators.blocking import minhash_lsh_join
-
     tok = (
         F.array_distinct(tokens(F.col(text_col)))
         if shingle <= 1
         else word_shingles(text_col, n=shingle)
     )
-    recs = docs.select(F.col(id_col).cast("long").alias("id"), tok.alias("token_set"))
-    out = minhash_lsh_join(
-        recs,
-        recs,
-        id_col="id",
-        tokens_col="token_set",
-        n_hashes=n_hashes,
-        bands=bands,
-        min_jaccard=min_jaccard,
-        self_join=True,
-    )
-    return out.select("a_id", "b_id", F.round("sim", 6).alias("sim_r"))
-
-
-# --------------------------------------------------------------------------
-# SimHash — portable 32-bit fingerprint
-# --------------------------------------------------------------------------
-
-# Pinned polynomial token hash: h = fold over chars of (h*31 + ascii) mod M,
-# seeded 7. Expressible identically in Spark SQL and DuckDB (ascii/substr/
-# aggregate vs list_reduce), which is what makes the oracle exact.
-_HASH_MOD = 2147483647
-
-
-def _token_hash_expr(tok: str) -> str:
-    return (
-        f"aggregate(sequence(1, length({tok})), 7L, "
-        f"(h, i) -> (h * 31 + ascii(substring({tok}, i, 1))) % {_HASH_MOD}L)"
-    )
-
-
-# --------------------------------------------------------------------------
-# Portable MinHash+LSH — polynomial hashes, exactly reproducible in any
-# engine, so the DuckDB oracle can verify the FULL banding+verify pipeline
-# --------------------------------------------------------------------------
-
-_MH_MUL = 99991        # j-th permutation: h_j(t) = (th(t)*(2j+1) + j*_MH_MUL) mod M
-_BAND_MUL = 1000003    # band key: fold (acc*_BAND_MUL + h) mod M over the band's rows
+    return _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, "murmur3")
 
 
 def minhash_dedup_portable(
@@ -167,60 +139,15 @@ def minhash_dedup_portable(
     min_jaccard: float = 0.5,
     shingle: int = 2,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs with PORTABLE hashes → (a_id, b_id, sim_r).
-
-    Same algorithm as :func:`minhash_dedup` (columnar min-agg signatures,
-    banding bucket join, exact-jaccard verification) but every hash is the
-    pinned polynomial spec — th(t) = fold (h*31+ascii) mod 2^31-1 — so the
-    whole operator has an exact SQL twin (:func:`minhash_portable_duckdb_sql`).
-    Murmur3 (:func:`minhash_dedup`) stays the throughput path; this one is
-    the verifiable path.
+    """MinHash+LSH near-dup pairs → (a_id, b_id, sim_r), a_id < b_id: the
+    portable family of :func:`~ertransfer_spark.operators.minhash.minhash_pairs`,
+    whose band keys have an exact SQL twin
+    (:func:`minhash_portable_duckdb_sql`; it verifies on the shingle
+    strings, the shared verify on their xxhash64s — equal barring a 64-bit
+    in-pair collision).
     """
-    from ertransfer_spark.functions.text import word_shingles
-
-    if n_hashes % bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be divisible by bands={bands}: "
-            "a silent remainder would compute hashes that never feed a "
-            "band, changing the effective LSH S-curve"
-        )
-    rows = n_hashes // bands
     tok = word_shingles(text_col, n=shingle)
-    recs = docs.select(F.col(id_col).cast("long").alias("id"), tok.alias("s"))
-    posts = recs.select("id", F.explode("s").alias("g"))
-    th = F.expr(_token_hash_expr("g"))
-    posts = posts.withColumn("th", th)
-    sig = posts.groupBy("id").agg(
-        *[
-            F.min((F.col("th") * (2 * j + 1) + j * _MH_MUL) % _HASH_MOD).alias(f"h{j}")
-            for j in range(n_hashes)
-        ]
-    )
-    band_cols = []
-    for b in range(bands):
-        acc = F.lit(0)
-        for r in range(rows):
-            acc = (acc * _BAND_MUL + F.col(f"h{b * rows + r}")) % _HASH_MOD
-        band_cols.append(acc)
-    banded = sig.select("id", F.posexplode(F.array(*band_cols)).alias("bi", "bh"))
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["bi", "bh"])
-        .select(F.col("x.id").alias("a_id"), F.col("y.id").alias("b_id"))
-        .filter(F.col("a_id") < F.col("b_id"))
-        .distinct()
-    )
-    sa = recs.select(F.col("id").alias("a_id"), F.col("s").alias("sa"))
-    sb = recs.select(F.col("id").alias("b_id"), F.col("s").alias("sb"))
-    o = F.size(F.array_intersect("sa", "sb"))
-    sim = o / (F.size("sa") + F.size("sb") - o).cast("double")
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn("sim_r", F.round(sim, 6))
-        .filter(F.col("sim_r") >= min_jaccard)
-        .select("a_id", "b_id", "sim_r")
-    )
+    return _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, "portable")
 
 
 def minhash_portable_duckdb_sql(
@@ -232,31 +159,19 @@ def minhash_portable_duckdb_sql(
     min_jaccard: float = 0.5,
 ) -> str:
     """DuckDB query mirroring :func:`minhash_dedup_portable` hash-for-hash."""
-    from ertransfer_spark.functions.text import DUCKDB_BIGRAMS_SQL, DUCKDB_TOKENS_SQL
-
-    if n_hashes % bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be divisible by bands={bands}: "
-            "a silent remainder would compute hashes that never feed a "
-            "band, changing the effective LSH S-curve"
-        )
-    rows = n_hashes // bands
+    rows = rows_per_band(n_hashes, bands)
     toks = DUCKDB_TOKENS_SQL.format(col=text_col)
     sh = DUCKDB_BIGRAMS_SQL.format(ts=toks)
-    th = (
-        "list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        "list_transform(range(1, 1 + length(g)), i -> CAST(ascii(substr(g, i, 1)) AS BIGINT))), "
-        f"(h, c) -> (h * 31 + c) % {_HASH_MOD})"
-    )
+    th = DUCKDB_POLY_HASH_SQL.format(s="g")
     hmins = ", ".join(
-        f"min((th * {2 * j + 1} + {j * _MH_MUL}) % {_HASH_MOD}) AS h{j}"
+        f"min((th * {2 * j + 1} + {j * MH_MUL}) % {POLY_HASH_MOD}) AS h{j}"
         for j in range(n_hashes)
     )
     band_exprs = []
     for b in range(bands):
         acc = "CAST(0 AS BIGINT)"
         for r in range(rows):
-            acc = f"((({acc}) * {_BAND_MUL} + h{b * rows + r}) % {_HASH_MOD})"
+            acc = f"((({acc}) * {BAND_MUL} + h{b * rows + r}) % {POLY_HASH_MOD})"
         band_exprs.append(f"{acc} AS b{b}")
     band_eq = " OR ".join(f"x.b{b} = y.b{b}" for b in range(bands))
     return f"""
@@ -290,7 +205,7 @@ def minhash_portable_duckdb_sql(
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash32) — portable SimHash over distinct tokens."""
-    th = _token_hash_expr("t")
+    th = SPARK_POLY_HASH_SQL.format(s="t")
     # LET-BIND the per-token hash array: `hs` is referenced once textually,
     # so CollapseProject inlines the transform into the 32-iteration outer
     # fold — re-hashing every token 32× per row (measured 13× the stage).
@@ -320,14 +235,8 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 
 def simhash_duckdb_sql(text_col: str, id_col: str = "doc_id", table: str = "documents") -> str:
     """DuckDB query mirroring :func:`simhash` bit-for-bit."""
-    from ertransfer_spark.functions.text import DUCKDB_TOKENS
-
     toks = DUCKDB_TOKENS.format(col=text_col)
-    th = (
-        "list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        "list_transform(range(1, 1 + length(t)), i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))), "
-        f"(h, c) -> (h * 31 + c) % {_HASH_MOD})"
-    )
+    th = DUCKDB_POLY_HASH_SQL.format(s="t")
     return f"""
       WITH toks AS (
         SELECT CAST({id_col} AS BIGINT) AS doc_id,

@@ -38,6 +38,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ertransfer_spark.functions.text import DUCKDB_POLY_HASH_SQL, SPARK_POLY_HASH_SQL, poly_hash
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -303,17 +305,15 @@ def ivf_topk(
 
     Fully deterministic: the centroids are the ``n_lists`` corpus vectors
     with the smallest portable polynomial hash of their id (the pinned
-    cross-engine spec from operators/dedup.py), and a vector's cell is its
-    nearest seed by euclidean distance ROUNDED 6 dp with seed-rank
-    tie-break. Every step has an exact SQL twin
+    cross-engine spec, ``functions.text.SPARK_POLY_HASH_SQL``), and a
+    vector's cell is its nearest seed by euclidean distance ROUNDED 6 dp
+    with seed-rank tie-break. Every step has an exact SQL twin
     (:func:`ivf_seeded_duckdb_sql`), so the whole ANN operator is
     value-verifiable against DuckDB. Random-seed IVF is a standard variant
     (seeds ≈ a uniform corpus sample).
     """
-    from ertransfer_spark.operators.dedup import _token_hash_expr
-
     c = corpus.select(F.col(id_col).alias("nbr_id"), _as_double(vec_col).alias("cv"))
-    th = F.expr(_token_hash_expr("CAST(nbr_id AS STRING)"))
+    th = F.expr(SPARK_POLY_HASH_SQL.format(s="CAST(nbr_id AS STRING)"))
     seed_rows = c.withColumn("_th", th).orderBy("_th", "nbr_id").limit(n_lists).collect()
     cent = [
         (i + 1, [float(x) for x in r["cv"]])
@@ -352,12 +352,7 @@ def ivf_seeded_duckdb_sql(
     """DuckDB twin of :func:`ivf_topk` — replicates seed
     selection (portable polynomial id-hash), 6-dp-rounded euclidean cell
     assignment, n_probe probing, and the 4-dp cosine top-k."""
-    th = (
-        "list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        "list_transform(range(1, 1 + length(CAST(id AS VARCHAR))), "
-        "i -> CAST(ascii(substr(CAST(id AS VARCHAR), i, 1)) AS BIGINT))), "
-        "(h, c) -> (h * 31 + c) % 2147483647)"
-    )
+    th = DUCKDB_POLY_HASH_SQL.format(s="CAST(id AS VARCHAR)")
     dist = (
         "round(sqrt(list_sum(list_transform(range(1, 1 + len(x.v)), "
         "i -> (x.v[i] - s.sv[i]) * (x.v[i] - s.sv[i])))), 6)"
@@ -418,7 +413,7 @@ def lsh_topk_portable(
     bit-identical in any engine — no float-summation-order hazard):
 
     - plane weight w[P][i] = th(``pl:{P}:{i}``) % 2001 - 1000, where th is
-      the pinned polynomial hash (operators/dedup.py: fold (h*31+ascii)
+      the pinned polynomial hash (functions/text.py: fold (h*31+ascii)
       mod 2^31-1, seed 7) — integers in [-1000, 1000];
     - quantized vector q[i] = CAST(round(v[i] * 1e6) AS BIGINT);
     - bit(P) = 1 iff Σ_i q[i]·w[P][i] > 0 (exact BIGINT dot);
@@ -446,7 +441,7 @@ def lsh_topk_portable(
         ).limit(0)
     dim = len(first["v"])
     weights = [
-        [_poly_hash(f"pl:{p}:{i}") % 2001 - 1000 for i in range(dim)]
+        [poly_hash(f"pl:{p}:{i}") % 2001 - 1000 for i in range(dim)]
         for p in range(n_tables * n_planes)
     ]
 
@@ -473,20 +468,19 @@ def _bucket_candidates(
     """Distinct ``(query_id, nbr_id)`` pairs that share a bucket in at least
     one of ``n_tables`` hyperplane-LSH tables. Table t's bucket key is the
     0/1 ``bit(vec, plane)`` of planes [t·n_planes, (t+1)·n_planes)
-    concatenated; ``exclude_self`` drops query_id == nbr_id."""
+    concatenated; ``exclude_self`` drops query_id == nbr_id.
+
+    Each side is one projection whose array of per-table keys is
+    posexploded, so its input lineage runs once, not once per table."""
+    keys = F.array(*[
+        F.concat_ws("", *[bit(F.col("_v"), t * n_planes + p).cast("string")
+                          for p in range(n_planes)])
+        for t in range(n_tables)
+    ])
+
     def bucketed(df: DataFrame, side: str) -> DataFrame:
         out = df.select(F.col(id_col).alias(f"{side}_id"), vec.alias("_v"))
-        tables = [
-            out.select(
-                f"{side}_id",
-                F.lit(t).alias("tbl"),
-                F.concat_ws(
-                    "", *[bit(F.col("_v"), t * n_planes + p).cast("string") for p in range(n_planes)]
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-        return functools.reduce(DataFrame.unionByName, tables)
+        return out.select(f"{side}_id", F.posexplode(keys).alias("tbl", "bucket"))
 
     cand = bucketed(queries, "q").join(bucketed(corpus, "c"), ["tbl", "bucket"]).select(
         F.col("q_id").alias("query_id"), F.col("c_id").alias("nbr_id")
@@ -494,14 +488,6 @@ def _bucket_candidates(
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
     return cand.distinct()
-
-
-def _poly_hash(s: str, mod: int = 2147483647, seed: int = 7) -> int:
-    """Driver-side twin of operators/dedup._token_hash_expr (pinned spec)."""
-    h = seed
-    for ch in s:
-        h = (h * 31 + ord(ch)) % mod
-    return h
 
 
 def lsh_portable_duckdb_sql(
@@ -517,14 +503,8 @@ def lsh_portable_duckdb_sql(
     the cross-engine spec, not driver-shipped literals), quantizes vectors
     the same way, and replays bucketing + exact cosine top-k."""
     total = n_tables * n_planes
-    th = (
-        "list_reduce(list_prepend(CAST(7 AS BIGINT), "
-        "list_transform(range(1, 1 + length({G})), "
-        "i -> CAST(ascii(substr({G}, i, 1)) AS BIGINT))), "
-        "(h, c) -> (h * 31 + c) % 2147483647)"
-    )
-    w_expr = th.format(
-        G="('pl:' || CAST(p.p AS VARCHAR) || ':' || CAST(d.i AS VARCHAR))"
+    w_expr = DUCKDB_POLY_HASH_SQL.format(
+        s="('pl:' || CAST(p.p AS VARCHAR) || ':' || CAST(d.i AS VARCHAR))"
     )
     return f"""
       WITH e AS (

@@ -72,17 +72,12 @@ class PipelineConfig:
     posting_budget: int | None = None
     min_sim: float = 0.0
     algorithm: str = "logreg"
-    local_train: bool = True         # logreg only: capped driver-IRLS fit
-                                     # (coefficients become plan literals)
-                                     # instead of Spark ML LBFGS, whose
-                                     # maxIter tree-aggregate jobs are a
-                                     # 10-200 s fixed floor that scales
-                                     # with nothing (BENCH.md r2; boundary
-                                     # parity in tests/test_scaling_path.py)
-    train_sample_cap: int = 100_000  # local-train deterministic hash-sample
-                                     # cap — bounds driver memory at any SF
+    train_sample_cap: int = 100_000  # logreg driver-IRLS fit: deterministic
+                                     # hash-sample cap — bounds driver
+                                     # memory at any SF
     train_params: dict | None = None  # estimator hyperparameter overrides,
-                                     # e.g. {"numTrees": 100, "maxDepth": 16}
+                                     # e.g. {"numTrees": 100, "maxDepth": 16};
+                                     # set, they select the Spark ML fit
                                      # (RF capacity is the measured lever on
                                      # hard-textual corpora: d3 0.70→0.79)
     clustering: str = "umc"          # umc | ec
@@ -248,8 +243,11 @@ class ERPipeline:
                 # the split hash reads only (a_id, b_id), so it selects the
                 # same train rows from the featurized frame as from labeled
                 train_ft = stratified_split(ft, cfg.split_weights, cfg.seed)["train"]
-                if (cfg.algorithm == "logreg" and cfg.local_train
-                        and not cfg.train_params):
+                # logreg fits by driver IRLS (coefficients become plan
+                # literals): Spark ML LBFGS's maxIter tree-aggregate jobs
+                # are a 10-200 s fixed floor that scales with nothing
+                # (BENCH.md r2); train_params select the Spark ML fit
+                if cfg.algorithm == "logreg" and not cfg.train_params:
                     from ertransfer_spark.operators.matcher import (
                         train_matcher_local,
                     )

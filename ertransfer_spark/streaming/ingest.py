@@ -43,6 +43,17 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 
+def _start(stream: DataFrame, batch_fn, checkpoint_dir: str | None, trigger_available_now: bool):
+    """Start ``stream`` in append mode with ``batch_fn`` as its foreachBatch
+    sink; ``trigger_available_now`` drains the source and stops."""
+    writer = stream.writeStream.foreachBatch(batch_fn).outputMode("append")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def read_turn_stream(
     spark: SparkSession,
     path: str,
@@ -112,12 +123,7 @@ def stream_to_catalog(
             ]
         )
 
-    writer = turns_stream.writeStream.foreachBatch(commit_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(turns_stream, commit_batch, checkpoint_dir, trigger_available_now)
 
 
 def incremental_dedup_stream(
@@ -154,77 +160,35 @@ def incremental_dedup_stream(
       a key-value/Iceberg table keyed by (band_idx, band_hash) and the
       probe is itself a point lookup.
 
-    Pair orientation: a pair {existing, new} may arrive in either id
-    order, so pairs are canonicalized with least/greatest BEFORE the
-    self-pair filter — never ``a_id < b_id`` on the join output, which
-    would silently drop cross-batch duplicates whose existing id sorts
-    after the new one's. Union of per-batch outputs over any batch
-    sequence equals the batch-mode ``minhash_lsh_join(corpus, corpus,
-    self_join=True)`` on the final corpus (asserted in tests): cross-batch
-    pairs are found when the later record arrives, same-batch pairs by the
-    batch's self-join, and earlier-batch pairs were already emitted.
+    Candidates are one ``operators.minhash`` self-join of the batch's band
+    keys against batch ∪ index (its least/greatest orientation keeps a
+    pair {existing, new} whichever id sorts first), verified by the shared
+    exact-Jaccard verify over the bucket-pruned lookup. The union of
+    per-batch outputs equals the batch-mode ``minhash_lsh_join(corpus,
+    corpus, self_join=True)`` on the final corpus (asserted in tests).
     """
-    from ertransfer_spark.operators.blocking import minhash_band_keys
     from ertransfer_spark.operators.canonicalize import canonicalize
+    from ertransfer_spark.operators.minhash import band_keys, candidate_pairs, verify
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         new = canonicalize(batch_df).select("conv_id", "agValue", "shingle_set")
         new = new.localCheckpoint()
-        new_bands = minhash_band_keys(
-            new, "conv_id", "shingle_set", n_hashes, bands, side="n"
-        ).localCheckpoint()
-
+        new_bands = band_keys(new, "conv_id", "shingle_set", n_hashes, bands).localCheckpoint()
         try:
-            committed_bands = catalog.read(bands_table)
+            index = new_bands.unionByName(
+                catalog.read(bands_table).withColumnRenamed("n_id", "id")
+            )
         except FileNotFoundError:
-            committed_bands = None
-
-        # candidates: new × committed (cross-batch) ∪ new × new (in-batch)
-        nb = new_bands.select(
-            F.col("n_id").alias("x_id"), "band_idx", "band_hash"
-        )
-        cand = (
-            nb.withColumnRenamed("x_id", "u")
-            .join(
-                new_bands.select(F.col("n_id").alias("v"), "band_idx", "band_hash"),
-                ["band_idx", "band_hash"],
-            )
-            .filter(F.col("u") < F.col("v"))  # in-batch: both orders present
-            .select("u", "v")
-        )
-        if committed_bands is not None:
-            cross = (
-                nb.withColumnRenamed("x_id", "u")
-                .join(
-                    committed_bands.select(
-                        F.col("n_id").alias("v"), "band_idx", "band_hash"
-                    ),
-                    ["band_idx", "band_hash"],
-                )
-                .select("u", "v")
-            )
-            cand = cand.unionByName(cross)
-        # canonical orientation FIRST (least/greatest), then self/dup drop —
-        # a_id < b_id on the raw join would lose {existing, new} pairs whose
-        # existing id sorts after the new id
-        cand = (
-            cand.select(
-                F.least("u", "v").alias("a_id"), F.greatest("u", "v").alias("b_id")
-            )
-            .filter(F.col("a_id") != F.col("b_id"))
-            .distinct()
-            .localCheckpoint()
-        )
+            index = new_bands
+        cand = candidate_pairs(new_bands, index, self_join=True).localCheckpoint()
         n_cand = cand.count()
 
         # verify: fetch ONLY records named by a candidate pair, reading
         # ONLY the corpus buckets those ids hash into (partition-pruned —
         # the distinct-bucket collect is bounded by n_buckets, not rows)
-        need = cand.select(F.col("a_id").alias("conv_id")).unionByName(
-            cand.select(F.col("b_id").alias("conv_id"))
-        ).distinct()
+        need = cand.select(F.explode(F.array("a_id", "b_id")).alias("conv_id")).distinct()
         hit_buckets = [
             r[0]
             for r in need.select(
@@ -241,17 +205,7 @@ def incremental_dedup_stream(
             old.unionByName(new.select("conv_id", "shingle_set"))
             .join(need, "conv_id", "left_semi")
         )
-        sa = lookup.select(F.col("conv_id").alias("a_id"), F.col("shingle_set").alias("sa"))
-        sb = lookup.select(F.col("conv_id").alias("b_id"), F.col("shingle_set").alias("sb"))
-        o = F.size(F.array_intersect("sa", "sb"))
-        sim = o / (F.size("sa") + F.size("sb") - o).cast("double")
-        pairs = (
-            cand.join(sa, "a_id")
-            .join(sb, "b_id")
-            .withColumn("sim", sim)
-            .filter(F.col("sim") >= min_jaccard)
-            .select("a_id", "b_id", "sim")
-        )
+        pairs = verify(cand, lookup, lookup, "conv_id", "shingle_set", min_jaccard)
 
         catalog.append(
             corpus_table,
@@ -262,7 +216,7 @@ def incremental_dedup_stream(
         )
         catalog.append(
             bands_table,
-            new_bands.select("n_id", "band_idx", "band_hash"),
+            new_bands.withColumnRenamed("id", "n_id"),
             meta={"batch_id": batch_id},
         )
         stage = f"{dup_table}_batch_{batch_id:05d}"
@@ -283,12 +237,7 @@ def incremental_dedup_stream(
             ]
         )
 
-    writer = turns_stream.writeStream.foreachBatch(process_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(turns_stream, process_batch, checkpoint_dir, trigger_available_now)
 
 
 # --------------------------------------------------------------------------
@@ -427,9 +376,4 @@ def stateful_canonicalize_to_catalog(
             return
         catalog.append(table, batch_df, meta={"batch_id": batch_id})
 
-    writer = records.writeStream.foreachBatch(commit_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(records, commit_batch, checkpoint_dir, trigger_available_now)

@@ -194,6 +194,26 @@ def test_vector_blocking_keeps_overlapping_raw_ids(spark):
     assert all(abs(r["sim"] - 1.0) < 1e-9 for r in same)
 
 
+def test_vector_blocking_lsh_tables_are_one_projection(spark):
+    """The n_tables LSH bucket keys of each side come from one projection:
+    the executed plan holds each side's embedding aggregation once under
+    the bucket join and once under the exact re-rank, never once per
+    table."""
+    import re
+
+    from ertransfer_spark.operators.simsearch import vector_blocking
+
+    rows = [(i, [f"tok{(i * 7 + j) % 30}" for j in range(5)]) for i in range(20)]
+    schema = "conv_id long, token_set array<string>"
+    ta = spark.createDataFrame(rows, schema)
+    tb = spark.createDataFrame([(100 + i, t) for i, t in rows], schema)
+    out = vector_blocking(ta, tb, k=2, dim=64, n_tables=12)
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    final_aggs = re.findall(r"ObjectHashAggregate\(keys=\[_id#\w+\], functions=\[collect_list\(", plan)
+    assert len(final_aggs) == 2 * 2, plan
+
+
 def test_lsh_topk_self_join_still_excludes_self(spark, vectors):
     from ertransfer_spark.operators.simsearch import lsh_topk
 
@@ -213,18 +233,18 @@ def test_lsh_topk_portable_empty_corpus(spark, vectors):
 def test_minhash_bands_divisibility_raises(spark, docs):
     import pytest as _pytest
 
-    from ertransfer_spark.operators.blocking import minhash_band_keys
     from ertransfer_spark.operators.dedup import (
         minhash_dedup_portable,
         minhash_portable_duckdb_sql,
     )
+    from ertransfer_spark.operators.minhash import band_keys
 
     with _pytest.raises(ValueError, match="divisible"):
         minhash_dedup_portable(docs, n_hashes=100, bands=32)
     with _pytest.raises(ValueError, match="divisible"):
         minhash_portable_duckdb_sql(n_hashes=100, bands=32)
     with _pytest.raises(ValueError, match="divisible"):
-        minhash_band_keys(
+        band_keys(
             docs.select(F.col("doc_id"), F.split("text", " ").alias("token_set")),
             "doc_id",
             "token_set",

@@ -1,13 +1,15 @@
 """Property tests (SURVEY §5e): permutation invariance of input row order,
 determinism of every seeded operator, the set-overlap kernel's
-dense-equals-sparse and top-K-equals-oracle invariants, and the exact
-vector sweeps against a numpy spec, on generated inputs."""
+dense-equals-sparse and top-K-equals-oracle invariants, MinHash-LSH
+against the exact-Jaccard spec, and the exact vector sweeps against a
+numpy spec, on generated inputs."""
 
 from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -159,6 +161,41 @@ def test_overlap_kernel_dense_equals_sparse_triangular(spark, docs, t, cap):
     dense = _kernel_rows(d, None, t, cap, 100000)
     assert dense == _kernel_rows(d, None, t, cap, 0)
     assert all(r[0] < r[1] for r in dense)
+
+
+def _round6(x: float) -> float:
+    """Spark's round(x, 6) for a double: HALF_UP on its shortest decimal."""
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+@pytest.mark.parametrize("family", ["murmur3", "portable"])
+@settings(max_examples=5, deadline=None, derandomize=True)
+@given(
+    docs=_corpus,
+    t=_threshold,
+    banding=st.sampled_from([(4, 2), (6, 3), (8, 8), (12, 4)]),
+)
+def test_minhash_pairs_equal_exact_jaccard_spec(spark, family, docs, t, banding):
+    """For both hash families and any banding, the MinHash self-join's rows
+    are exact-Jaccard rows (round(J, 6) ≥ t, with J's value), come once
+    each with a_id < b_id, and include every pair of identical sets (whose
+    min-hashes all agree, so every band collides)."""
+    from ertransfer_spark.operators.minhash import minhash_pairs
+
+    docs = docs + [docs[0]]
+    d = spark.createDataFrame(list(enumerate(docs)), "id long, s array<string>")
+    n_hashes, bands = banding
+    rows = [tuple(r) for r in minhash_pairs(d, None, "id", "s", n_hashes, bands, t, family).collect()]
+    ids = [(a, b) for a, b, _ in rows]
+    assert len(ids) == len(set(ids))
+    for a, b, sim in rows:
+        assert a < b
+        sa, sb = set(docs[a]), set(docs[b])
+        j = len(sa & sb) / len(sa | sb)
+        assert _round6(j) >= t and abs(sim - j) < 1e-12, (a, b, sim, j)
+    same = {(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))
+            if set(docs[a]) == set(docs[b])}
+    assert same <= set(ids)
 
 
 @settings(max_examples=6, deadline=None, derandomize=True)

@@ -224,10 +224,64 @@ def test_d3_amazon_google_end_to_end(spark):
 # two datasets whose tableB.csv is not committed (d9, d11). NOTE these
 # committed splits carry randomly-sampled negatives (easier than the
 # curated DeepMatcher-paper benchmarks); floors are set just under the
-# measured values (scripts/exp_matcher_splits.py, 2026-08-18):
+# measured values (the matcher_split_eval below, 2026-08-18):
 # d2 0.930, d5 0.987, d6 0.984, d7 0.995, d8 0.988, d9 0.998, d10 0.895
 # (title + blob; a starring<->'actor name' schema-mapped attr added
 # nothing), d11 0.987, d12 0.905.
+# per-dataset attribute lists (the non-id columns of each pair file's
+# sides). d5-d7/d10 sides have ASYMMETRIC schemas; listed attrs are the
+# shared ones (intersection enforced in matcher_split_eval). d5's URI
+# headers normalize to local names in read_pair_split.
+_SPLIT_ATTRS = {
+    "d2_abt_buy": ["name", "description", "price"],
+    "d5_imdb_tmdb": ["title", "name", "episodeNumber", "seasonNumber", "genre_list"],
+    "d6_imdb_tvdb": ["title", "name", "episodeNumber", "seasonNumber"],
+    "d7_tmdb_tvdb": ["title", "name", "abstract", "episodeNumber", "seasonNumber", "releaseDate"],
+    "d10_imdb_dbpedia": ["title"],
+    "d8_amazon_walmart": ["title", "modelno", "price", "brand"],
+    "d9_dblp_scholar": ["title", "authors", "venue", "year"],
+    "d11_itunes_amazon": [
+        "Song_Name", "Artist_Name", "Album_Name", "Genre", "Price", "Time", "Released",
+    ],
+    "d12_beeradvo_ratebeer": ["Beer_Name", "Brew_Factory_Name", "Style", "ABV"],
+}
+
+
+def matcher_split_eval(spark, name: str) -> dict:
+    """Train an RF matcher on the committed train.csv pairs and report
+    classification metrics at threshold 0.5 on test.csv."""
+    from ertransfer_spark.operators.canonicalize import canonicalize_table
+    from ertransfer_spark.operators.matcher import (
+        FEATURES,
+        attach_pair_text,
+        attr_features,
+        evaluate_predictions,
+        featurize,
+        score,
+        train_matcher,
+    )
+    from ertransfer_spark.sources.normalizer import read_pair_split
+
+    d = DATASETS / name
+    tr_pairs, tra, trb = read_pair_split(spark, str(d / "train.csv"))
+    te_pairs, tea, teb = read_pair_split(spark, str(d / "test.csv"))
+    raw_a = tra.unionByName(tea).dropDuplicates(["id"]).localCheckpoint()
+    raw_b = trb.unionByName(teb).dropDuplicates(["id"]).localCheckpoint()
+    attrs = [c for c in _SPLIT_ATTRS[name] if c in raw_a.columns and c in raw_b.columns]
+    rec_a = canonicalize_table(raw_a, id_col="id").localCheckpoint()
+    rec_b = canonicalize_table(raw_b, id_col="id").localCheckpoint()
+
+    def feats(pairs):
+        f = featurize(attach_pair_text(pairs, rec_a, rec_b))
+        return attr_features(f, raw_a, raw_b, attrs)
+
+    ftr, names = feats(tr_pairs)
+    fte, _ = feats(te_pairs)
+    model = train_matcher(ftr.localCheckpoint(), algorithm="rf", feature_cols=FEATURES + names)
+    preds = score(model, fte.localCheckpoint())
+    return evaluate_predictions(preds, threshold=0.5)
+
+
 @pytest.mark.parametrize(
     "name,floor",
     [
@@ -243,11 +297,6 @@ def test_d3_amazon_google_end_to_end(spark):
     ],
 )
 def test_matcher_on_committed_splits(spark, name, floor):
-    import sys
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from exp_matcher_splits import matcher_split_eval
-
     m = matcher_split_eval(spark, name)
     assert m["f1"] >= floor, (name, m)
 
@@ -472,11 +521,12 @@ def _pipeline_eval(spark, name: str, algorithm: str = "rf") -> dict:
         # pairs span DIFFERENT remixes (durations differ) while candidate
         # distractors are other versions of the same song — measured 0.25
         # at k=10 (0.22-0.26 across feature configs); matcher-split is 0.99.
-        # r5 ceiling proof (exp_d11_ceiling.py): only 86/132 golden partners
-        # are lexical rank-1; 46 are strictly dominated by a same-song
-        # distractor, so monotone-lexical matching + mutual-best caps recall
-        # ~0.65 before label scarcity enters; the date/price/duration
-        # tie-breakers are the attrs that DIFFER across remixes.
+        # r5 ceiling proof (exp_d11_ceiling.py, in git history): only
+        # 86/132 golden partners are lexical rank-1; 46 are strictly
+        # dominated by a same-song distractor, so monotone-lexical
+        # matching + mutual-best caps recall ~0.65 before label scarcity
+        # enters; the date/price/duration tie-breakers are the attrs that
+        # DIFFER across remixes.
         ("d11_itunes_amazon", 0.15),
         ("d12_beeradvo_ratebeer", 0.45),
     ],
