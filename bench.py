@@ -9,19 +9,28 @@ SF. Prints ONE JSON line:
    "er_turns": N, "er_turns_per_sec": T, "cpus": C}
 
 Each query is forced end-to-end with the noop sink (full materialization,
-no driver collect, no disk write). If any query fails, the run prints no
+no driver collect, no disk write). One untimed warm-up pass over the same
+queries and the pipeline runs first, so JVM start-up, class loading and
+codegen do not land on the first query timed.
+``--reps N`` runs N timed passes and keeps each query's best time; the
+value is the sum of the bests, and ``"reps"`` in the result line says how
+many passes it took them from. If any query fails, the run prints no
 result line and exits non-zero. Run with SPARK_GRAFT_CPUS=8 and =32 on
 the same input to evidence the N→4N scaling rule (see BENCH.md).
+
+    SPARK_GRAFT_CPUS=4 python bench.py --reps 3
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
+from collections.abc import Sequence
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -83,7 +92,13 @@ def run_er_pipeline(spark, sf: float) -> tuple[int, float]:
     return turns, wall
 
 
-def main() -> None:
+def main(argv: Sequence[str] = ()) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--reps", type=int, default=1, help="timed passes; each query keeps its best")
+    args = ap.parse_args(list(argv))
+    if args.reps < 1:
+        ap.error("--reps must be at least 1")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     try:
@@ -97,6 +112,37 @@ def main() -> None:
 
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=max(cpus, 16))
     qs = entrymod.queries()
+    best: dict[str, float] = {}
+    for timed in [False] + [True] * args.reps:   # warm-up, then the timed passes
+        times = run_headline(spark, qs, sf_dir)
+        er_turns, er_wall = run_er_pipeline(spark, sf)
+        times["er_pipeline"] = round(er_wall, 3)
+        if timed:
+            best = {k: min(v, best.get(k, v)) for k, v in times.items()}
+
+    total = round(sum(best.values()), 3)
+    er_wall = best["er_pipeline"]
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_plus_er_pipeline_wall",
+                "value": total,
+                "unit": "sec",
+                "queries": best,
+                "sf": sf,
+                "cpus": cpus,
+                "reps": args.reps,
+                "er_turns": er_turns,
+                "er_turns_per_sec": round(er_turns / er_wall, 1) if er_wall > 0 else 0.0,
+            }
+        )
+    )
+    spark.stop()
+
+
+def run_headline(spark, qs, sf_dir: str) -> dict[str, float]:
+    """One pass over HEADLINE → {name: seconds}. Exits non-zero, with no
+    result line, if any query fails."""
     times: dict[str, float] = {}
     failed: list[str] = []
     for name in HEADLINE:
@@ -111,27 +157,8 @@ def main() -> None:
         # a failed query has no time: a total without it would look faster
         spark.stop()
         sys.exit(f"# bench: {len(failed)} of {len(HEADLINE)} queries failed ({', '.join(failed)}); no value")
-
-    er_turns, er_wall = run_er_pipeline(spark, sf)
-    times["er_pipeline"] = round(er_wall, 3)
-
-    total = round(sum(times.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_plus_er_pipeline_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "sf": sf,
-                "cpus": cpus,
-                "er_turns": er_turns,
-                "er_turns_per_sec": round(er_turns / er_wall, 1) if er_wall > 0 else 0.0,
-            }
-        )
-    )
-    spark.stop()
+    return times
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

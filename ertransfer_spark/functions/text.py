@@ -144,21 +144,28 @@ def qgrams(col: Column | str, q: int = 3, multiset: bool = False) -> Column:
 # --- word n-gram shingles (the blocking token for repetitive corpora) ------
 # Spark SQL array indexing is 0-based; DuckDB list indexing is 1-based —
 # both expressions below emit exactly size-1 bigrams / size-2 trigrams.
+# The Spark templates LET-BIND their token array ({ts} appears once, in
+# ``transform(array({ts}), _ts -> …)[0]``): Catalyst has no common-
+# subexpression elimination inside lambda bodies, and when the shingles feed
+# an ``explode`` the inferred ``size(…) > 0`` filter is pushed below the
+# projection that names the tokens, which substitutes the whole tokenizer
+# into the per-shingle lambda — ~2·n_tokens tokenizations per row. Bound to
+# a lambda variable, the tokens are computed once per row, whatever {ts} is.
 SPARK_TOKENS_SQL = "filter(split(lower(coalesce({col}, '')), '[^a-z0-9]+'), t -> t != '')"
 DUCKDB_TOKENS_SQL = (
     "list_filter(regexp_split_to_array(lower(coalesce({col}, '')), '[^a-z0-9]+'), t -> t <> '')"
 )
 SPARK_BIGRAMS_SQL = (
-    "array_distinct(if(size({ts}) < 2, slice({ts}, 1, 0), "
-    "transform(sequence(1, size({ts}) - 1), i -> concat({ts}[i-1], ' ', {ts}[i]))))"
+    "transform(array({ts}), _ts -> array_distinct(if(size(_ts) < 2, slice(_ts, 1, 0), "
+    "transform(sequence(1, size(_ts) - 1), i -> concat(_ts[i-1], ' ', _ts[i])))))[0]"
 )
 DUCKDB_BIGRAMS_SQL = (
     "list_distinct(list_transform(range(1, greatest(len({ts}), 1)), "
     "i -> {ts}[i] || ' ' || {ts}[i+1]))"
 )
 SPARK_TRIGRAMS_SQL = (
-    "array_distinct(if(size({ts}) < 3, slice({ts}, 1, 0), "
-    "transform(sequence(1, size({ts}) - 2), i -> concat({ts}[i-1], ' ', {ts}[i], ' ', {ts}[i+1]))))"
+    "transform(array({ts}), _ts -> array_distinct(if(size(_ts) < 3, slice(_ts, 1, 0), "
+    "transform(sequence(1, size(_ts) - 2), i -> concat(_ts[i-1], ' ', _ts[i], ' ', _ts[i+1])))))[0]"
 )
 DUCKDB_TRIGRAMS_SQL = (
     "list_distinct(list_transform(range(1, greatest(len({ts}) - 1, 1)), "
@@ -201,18 +208,12 @@ def word_shingles(text_col: str, n: int = 2) -> Column:
     near-identical across documents, so blocking/dedup tokens must be
     shingles to stay selective.
 
-    The tokenize expression is LET-BOUND (``transform(array(toks), ts ->
-    shingles)[0]``) instead of textually substituted into the shingle
-    template: the template references ``{ts}`` five times, two of them
-    inside the per-shingle lambda, and Catalyst performs no common-
-    subexpression elimination across lambda boundaries — direct
-    substitution re-runs the full split/filter tokenization ~2·n_tokens
-    times per row (measured 2× the whole stage at sf0.1). Values are
-    identical; the bound form evaluates tokenization once per row."""
+    The tokenize expression is substituted into the shingle template
+    directly: the template let-binds its token array itself, so the
+    tokenization runs once per row."""
     toks = SPARK_TOKENS_SQL.format(col=text_col)
     tpl = {2: SPARK_BIGRAMS_SQL, 3: SPARK_TRIGRAMS_SQL}[n]
-    body = tpl.format(ts="ts")
-    return F.expr(f"transform(array({toks}), ts -> {body})[0]")
+    return F.expr(tpl.format(ts=toks))
 
 
 def serialize_pair(a: Column | str, b: Column | str, sep: str = " [SEP] ") -> Column:

@@ -24,6 +24,16 @@ lines (scan pushdown, codegen spans, exchange shapes) to PLAN_AUDIT.md:
   TPC-H-ish relational queries must show non-empty pushed filters).
 - **WholeStageCodegen** span count — reported (wider is better; zero
   spans on a JVM-expression query would mean something broke codegen).
+- **Tokenizer inside a lambda** — always a failure: a ``split(lower(…))``
+  call in the body of a ``lambdafunction`` whose free lambda variables
+  include none bound by that lambda (or by lambdas nested in it) is loop-
+  invariant, and Catalyst re-evaluates it on every iteration (no common-
+  subexpression elimination across lambda boundaries). The shape appears
+  when the optimizer substitutes an un-bound token alias into an iterating
+  lambda, e.g. the ``size(s) > 0`` filter ``InferFiltersFromGenerate`` adds
+  under an ``explode``. Checked on the optimized logical plan of the query
+  and of every frame it ``localCheckpoint()``s while being built (the
+  kernels' driver-side probes and block sweeps run on those).
 
 Plan audit runs at sf0.001: physical plan SHAPE is scale-invariant (the
 same operators, exchanges, and pushdowns appear at any SF; only AQE's
@@ -39,7 +49,7 @@ from __future__ import annotations
 import io
 import re
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -66,7 +76,89 @@ ALLOW = {
 }
 
 
-def audit_one(name: str, df) -> dict:
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(e) -> str:
+    return e.getClass().getSimpleName()
+
+
+def _subtree(e) -> list:
+    out, stack = [], [e]
+    while stack:
+        x = stack.pop()
+        out.append(x)
+        stack.extend(_seq(x.children()))
+    return out
+
+
+def _declared(exprs: list) -> set:
+    """exprIds of the lambda variables the LambdaFunctions among ``exprs`` declare."""
+    return {
+        v.exprId().id()
+        for x in exprs if _kind(x) == "LambdaFunction"
+        for v in _seq(x.arguments())
+    }
+
+
+def tokenizer_in_lambda(jplan) -> list[str]:
+    """Tokenizer calls (``split(lower(…))``) that a lambda body re-evaluates
+    on every iteration, in a JVM logical plan; one line per hit.
+
+    A call is loop-invariant in a ``lambdafunction`` when its free lambda
+    variables (those it references but does not declare itself) include
+    none declared by that lambda or by the lambdas nested in its body. The
+    let-bound form ``transform(array(toks), ts -> …)[0]`` keeps the
+    tokenizer in the ``array(…)`` argument, outside every body, so it
+    passes."""
+    hits = []
+    for node in _subtree(jplan):
+        for e in _seq(node.expressions()):
+            text = e.toString()
+            if "lambdafunction" not in text or "split(lower(" not in text:
+                continue
+            for lam in (x for x in _subtree(e) if _kind(x) == "LambdaFunction"):
+                body = _subtree(lam.function())
+                bound = _declared([lam, *body])
+                for sp in body:
+                    if _kind(sp) != "StringSplit" or _kind(sp.children().apply(0)) != "Lower":
+                        continue
+                    inside = _subtree(sp)
+                    refs = {v.exprId().id() for v in inside if _kind(v) == "NamedLambdaVariable"}
+                    if not (refs - _declared(inside)) & bound:
+                        hits.append(f"{node.nodeName()}: {sp.toString()[:90]} in {lam.toString()[:90]}")
+    return hits
+
+
+def tokenizer_reruns(df, build_plans) -> list[str]:
+    """:func:`tokenizer_in_lambda` over ``df``'s optimized plan and the
+    plans recorded by :func:`checkpointed_plans` while it was built."""
+    plans = (df._jdf.queryExecution().optimizedPlan(), *build_plans)
+    return [h for p in plans for h in tokenizer_in_lambda(p)]
+
+
+@contextmanager
+def checkpointed_plans():
+    """Collect the optimized plan of every frame ``localCheckpoint()``ed
+    while the block runs: the work a query does while it is being built."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list = []
+    orig = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan())
+        return orig(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    try:
+        yield plans
+    finally:
+        DataFrame.localCheckpoint = orig
+
+
+def audit_one(name: str, df, build_plans: list) -> dict:
     # Execute the query's own queryExecution first (cheap at sf0.001):
     # AQE-wrapped plans show neither codegen ids nor the runtime-chosen
     # join strategies until isFinalPlan=true, and the FINAL plan is the
@@ -95,6 +187,9 @@ def audit_one(name: str, df) -> dict:
         notes.append(f"{n_window} Window node(s)")
     if "BatchEvalPython" in plan:
         failures.append("BatchEvalPython (row-at-a-time Python UDF)")
+    rerun = tokenizer_reruns(df, build_plans)
+    if rerun:
+        failures.append(f"tokenizer inside a lambda ({len(rerun)}x; first: {rerun[0]})")
 
     # formatted mode annotates nodes with "[codegen id : N]" — distinct ids
     # = number of WholeStageCodegen spans
@@ -146,7 +241,9 @@ def main() -> None:
         if only and name != only:
             continue
         try:
-            results.append(audit_one(name, fn(spark, sf_dir)))
+            with checkpointed_plans() as build_plans:
+                df = fn(spark, sf_dir)
+            results.append(audit_one(name, df, build_plans))
         except Exception as e:  # noqa: BLE001 — audit everything, report at end
             results.append(
                 {"name": name, "failures": [f"audit error: {type(e).__name__}: {e}"],
@@ -167,7 +264,9 @@ def main() -> None:
         "",
         "Hard checks: no `CartesianProduct`/`BroadcastNestedLoopJoin` outside the",
         "justified allowlist (broadcast 1-row totals / ≤100-row grids / n_lists-row",
-        "centroid tables) and no `BatchEvalPython` (all Python is Arrow-batched).",
+        "centroid tables), no `BatchEvalPython` (all Python is Arrow-batched), and",
+        "no loop-invariant tokenizer (`split(lower(…))`) inside a lambda body, in the",
+        "optimized plan of the query or of any frame it checkpoints while built.",
         "Reported per query: WholeStageCodegen span count, exchange count,",
         "single-partition exchanges (global-agg partial merges — O(partitions)",
         "rows, scale-safe), Window nodes, Arrow nodes, and every parquet scan's",

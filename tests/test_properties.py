@@ -1,5 +1,6 @@
 """Property tests (SURVEY §5e): permutation invariance of input row order,
-determinism of every seeded operator, the set-overlap kernel's
+determinism of every seeded operator, the word-shingle templates against
+their DuckDB twins and a Python spec, the set-overlap kernel's
 dense-equals-sparse and top-K-equals-oracle invariants, MinHash-LSH
 against the exact-Jaccard spec, and the exact vector sweeps against a
 numpy spec, on generated inputs."""
@@ -7,6 +8,7 @@ numpy spec, on generated inputs."""
 from __future__ import annotations
 
 import math
+import re
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -119,6 +121,77 @@ def test_negative_sampling_marginals(spark, spark_corpora):
     # hash-bias toward a fixed subset would zero-out the rest
     assert len(freq) >= int(0.8 * n_a)
     assert max(freq.values()) <= 6 * 3
+
+
+# Texts over ASCII words, digits, punctuation, whitespace and non-ASCII
+# characters (accented, CJK, emoji, and letters whose lower case is or
+# holds ASCII: Kelvin sign, dotted capital I); plus word streams with
+# repeats, and NULL.
+_CHARS = list("abcXYZ019") + [" ", "  ", ".", ",", "-", "!", "\t", "é", "ß", "Σ", "日", "😀", "K", "İ"]
+_text = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(_CHARS), max_size=25).map("".join),
+    st.lists(st.sampled_from(["a", "b", "the", "B"]), max_size=8).map(" ".join),
+)
+
+
+def _spec_tokens(text: str | None) -> list[str]:
+    return [t for t in re.split("[^a-z0-9]+", (text or "").lower()) if t]
+
+
+def _spec_shingles(ts: list[str], n: int) -> set[str]:
+    return {" ".join(ts[i:i + n]) for i in range(len(ts) - n + 1)}
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(texts=st.lists(_text, min_size=1, max_size=8))
+@example(texts=["", "word", "a a a a b a", "...!! -- ,", "café naïve 日本 ok", None])
+def test_shingle_templates_equal_duckdb_twins_and_spec(spark, texts):
+    """SPARK_BIGRAMS_SQL / SPARK_TRIGRAMS_SQL equal DUCKDB_BIGRAMS_SQL /
+    DUCKDB_TRIGRAMS_SQL and the Python spec on the same token arrays, and
+    ``word_shingles`` (Spark tokenizer + template) equals the spec on the
+    raw texts. All compared as sets."""
+    import duckdb
+    import pyarrow as pa
+
+    from ertransfer_spark.functions.text import (
+        DUCKDB_BIGRAMS_SQL,
+        DUCKDB_TRIGRAMS_SQL,
+        SPARK_BIGRAMS_SQL,
+        SPARK_TRIGRAMS_SQL,
+        word_shingles,
+    )
+
+    toks = [_spec_tokens(t) for t in texts]
+    rows = spark.createDataFrame(
+        list(zip(range(len(texts)), texts, toks)), "id long, text string, ts array<string>"
+    ).select(
+        "id",
+        F.expr(SPARK_BIGRAMS_SQL.format(ts="ts")).alias("b"),
+        F.expr(SPARK_TRIGRAMS_SQL.format(ts="ts")).alias("t"),
+        word_shingles("text", n=2).alias("wb"),
+        word_shingles("text", n=3).alias("wt"),
+    ).collect()
+    spark_out = {r["id"]: r for r in rows}
+
+    with duckdb.connect() as con:
+        con.register("docs", pa.table({
+            "id": pa.array(range(len(texts)), pa.int64()),
+            "ts": pa.array(toks, pa.list_(pa.string())),
+        }))
+        duck_out = {
+            i: (b, t) for i, b, t in con.execute(
+                f"SELECT id, {DUCKDB_BIGRAMS_SQL.format(ts='ts')}, "
+                f"{DUCKDB_TRIGRAMS_SQL.format(ts='ts')} FROM docs"
+            ).fetchall()
+        }
+    for i, ts in enumerate(toks):
+        big, tri = _spec_shingles(ts, 2), _spec_shingles(ts, 3)
+        r = spark_out[i]
+        assert set(r["b"]) == set(duck_out[i][0]) == big, (texts[i], ts)
+        assert set(r["t"]) == set(duck_out[i][1]) == tri, (texts[i], ts)
+        assert set(r["wb"]) == big and set(r["wt"]) == tri, texts[i]
+        assert len(r["b"]) == len(big) and len(r["t"]) == len(tri)  # distinct
 
 
 # Small integer set sizes put many pairs EXACTLY on round(J,6) threshold
