@@ -214,7 +214,6 @@ FEATURE_NAMES = [
     "levenshtein_sim",
     "jaro_winkler",
     "len_ratio",
-    "prefix_sim",
 ]
 
 

@@ -14,7 +14,9 @@ Reference semantics being reproduced (citations into /root/reference):
   splitters/KNN-Join/splitter.py:72-78, settings.py:2-11 → :func:`qgrams`.
 
 Everything here is a native Column expression (whole-stage codegen);
-the only Python is the stemmer's pandas UDF, Arrow-batched.
+the only Python is the stemmer's pandas UDF, Arrow-batched, and
+:func:`poly_hash_np`, the numpy twin of the pinned polynomial hash that
+the MinHash kernel calls per Arrow batch.
 
 The module also exports the DuckDB-SQL equivalents used by
 ``__spark_entry__.oracle_sql`` so tokenization parity is kept in ONE place.
@@ -198,6 +200,41 @@ def poly_hash(s: str) -> int:
     for ch in s:
         h = (h * 31 + ord(ch)) % POLY_HASH_MOD
     return h
+
+
+def poly_hash_np(strings):
+    """:func:`poly_hash` of every string of a null-free ``pyarrow`` string
+    array → int64 ndarray, vectorized over the array by character position.
+
+    The strings' UTF-8 bytes are decoded once into one code-point array;
+    strings are visited longest first, so step p updates the prefix of
+    strings longer than p and the whole loop costs one pass over the
+    characters. h < 2^31 keeps h·31 + code point far inside int64."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(strings)
+    if n == 0:
+        return np.empty(0, np.int64)
+    lens = pc.utf8_length(strings).to_numpy(zero_copy_only=False).astype(np.int64)
+    wide = pa.types.is_large_string(strings.type)
+    offs = np.frombuffer(
+        strings.buffers()[1], np.int64 if wide else np.int32, n + 1, strings.offset * (8 if wide else 4)
+    )
+    data = strings.buffers()[2]
+    text = str(memoryview(data)[offs[0]:offs[-1]], "utf-8") if data is not None else ""
+    cps = np.frombuffer(text.encode("utf-32-le"), np.uint32).astype(np.int64)
+    order = np.argsort(-lens, kind="stable")
+    starts = (np.cumsum(lens) - lens)[order]
+    asc = lens[order][::-1]
+    h = np.full(n, 7, np.int64)
+    for p in range(int(asc[-1])):
+        k = n - int(np.searchsorted(asc, p, side="right"))  # strings longer than p
+        h[:k] = (h[:k] * 31 + cps[starts[:k] + p]) % POLY_HASH_MOD
+    out = np.empty(n, np.int64)
+    out[order] = h
+    return out
 
 
 def word_shingles(text_col: str, n: int = 2) -> Column:

@@ -12,8 +12,8 @@ filters over the one set-overlap kernel in ``operators.overlap``
   counts → top-K (``top_k_token_join``) or rounded-Jaccard threshold
   (``token_jaccard_join``)
 
-``minhash_lsh_join`` is the sublinear alternative: the murmur3 family of
-the one MinHash-LSH in ``operators.minhash`` (band keys → bucket join on
+``minhash_lsh_join`` is the sublinear alternative: the one MinHash-LSH in
+``operators.minhash`` (band keys → bucket join on
 (band_idx, band_hash) → exact-Jaccard verify), candidates ∝ band
 collisions instead of shared tokens.
 
@@ -209,8 +209,7 @@ def minhash_lsh_join(
     self_join: bool = False,
 ) -> DataFrame:
     """MinHash-LSH join → (a_id, b_id, sim), kept when round(sim, 6) ≥
-    ``min_jaccard``: the murmur3 family of
-    :func:`~ertransfer_spark.operators.minhash.minhash_pairs` (exact
+    ``min_jaccard``: :func:`~ertransfer_spark.operators.minhash.minhash_pairs` (exact
     verify, so precision is 1; the banding sets recall: 32 bands × 3 rows
     collide with probability ~0.99 at Jaccard 0.5). ``self_join=True``
     pairs ``records_a`` with itself, each pair once with a_id < b_id.

@@ -12,15 +12,16 @@ is the exact-dup case). Here each flavor is a standalone operator:
            kernel (operators.overlap), df-pruned so a hot gram cannot
            explode the join.
 - minhash: MinHash+LSH banding (operators.minhash), the 100 TB path
-           (candidates ∝ true near-dups, not |corpus|²): murmur3 for
-           throughput, portable for the DuckDB-verified twin.
+           (candidates ∝ true near-dups, not |corpus|²), over the pinned
+           polynomial hash, so the DuckDB twin verifies it hash-for-hash.
 - simhash: 32-bit SimHash fingerprint from the pinned polynomial token
            hash (``functions.text.SPARK_POLY_HASH_SQL``: the same hash is
            expressible in any engine, so the DuckDB oracle can verify it
            bit-for-bit).
 
-All pure Column expressions except the n-gram join's dense grid kernel
-(one numpy matmul per grid cell).
+All pure Column expressions except two numpy kernels: the n-gram join's
+dense grid (one matmul per grid cell) and the MinHash band hashes (one
+Arrow UDF call per batch).
 """
 
 from __future__ import annotations
@@ -101,12 +102,6 @@ def shingle_jaccard_pairs(
     return jaccard_at_least(pairs, threshold).select("a_id", "b_id", "sim_r")
 
 
-def _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, family):
-    recs = docs.select(F.col(id_col).cast("long").alias("id"), tok.alias("s"))
-    out = minhash_pairs(recs, None, "id", "s", n_hashes, bands, min_jaccard, family)
-    return out.select("a_id", "b_id", F.round("sim", 6).alias("sim_r"))
-
-
 def minhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -114,40 +109,17 @@ def minhash_dedup(
     n_hashes: int = 96,
     bands: int = 32,
     min_jaccard: float = 0.5,
-    shingle: int = 2,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs → (a_id, b_id, sim_r), a_id < b_id: the
-    murmur3 family of :func:`~ertransfer_spark.operators.minhash.minhash_pairs`,
-    the throughput path (rows-only oracle check; recall is tested against
-    exact Jaccard). ``shingle``: word n-gram size of the token set (1 = raw
-    tokens); shingles ≥ 2 keep small-vocabulary corpora selective.
-    """
-    tok = (
-        F.array_distinct(tokens(F.col(text_col)))
-        if shingle <= 1
-        else word_shingles(text_col, n=shingle)
-    )
-    return _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, "murmur3")
-
-
-def minhash_dedup_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 96,
-    bands: int = 32,
-    min_jaccard: float = 0.5,
-    shingle: int = 2,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs → (a_id, b_id, sim_r), a_id < b_id: the
-    portable family of :func:`~ertransfer_spark.operators.minhash.minhash_pairs`,
+    """MinHash+LSH near-dup pairs over word-bigram shingles → (a_id, b_id,
+    sim_r), a_id < b_id: :func:`~ertransfer_spark.operators.minhash.minhash_pairs`,
     whose band keys have an exact SQL twin
     (:func:`minhash_portable_duckdb_sql`; it verifies on the shingle
     strings, the shared verify on their xxhash64s — equal barring a 64-bit
     in-pair collision).
     """
-    tok = word_shingles(text_col, n=shingle)
-    return _minhash_dedup(docs, id_col, tok, n_hashes, bands, min_jaccard, "portable")
+    recs = docs.select(F.col(id_col).cast("long").alias("id"), word_shingles(text_col).alias("s"))
+    out = minhash_pairs(recs, None, "id", "s", n_hashes, bands, min_jaccard)
+    return out.select("a_id", "b_id", F.round("sim", 6).alias("sim_r"))
 
 
 def minhash_portable_duckdb_sql(
@@ -158,7 +130,7 @@ def minhash_portable_duckdb_sql(
     bands: int = 32,
     min_jaccard: float = 0.5,
 ) -> str:
-    """DuckDB query mirroring :func:`minhash_dedup_portable` hash-for-hash."""
+    """DuckDB query mirroring :func:`minhash_dedup` hash-for-hash."""
     rows = rows_per_band(n_hashes, bands)
     toks = DUCKDB_TOKENS_SQL.format(col=text_col)
     sh = DUCKDB_BIGRAMS_SQL.format(ts=toks)

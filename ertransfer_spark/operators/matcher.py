@@ -28,9 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ertransfer_spark.functions.similarity import FEATURE_NAMES, features_native
-
-FEATURES = [f for f in FEATURE_NAMES if f != "prefix_sim"]
+from ertransfer_spark.functions.similarity import FEATURE_NAMES as FEATURES
+from ertransfer_spark.functions.similarity import features_native
 
 # first number in a normalized attr value (attr_features kind="num")
 _NUM_RE = r"([0-9]+(?:\.[0-9]+)?)"

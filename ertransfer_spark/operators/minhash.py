@@ -1,20 +1,15 @@
 """MinHash-LSH — the one code path that turns token arrays into verified
 Jaccard pairs by MinHash banding (Broder, *On the resemblance and
 containment of documents*, 1997). Behind ``blocking.minhash_lsh_join``,
-``dedup.minhash_dedup`` (murmur3), ``dedup.minhash_dedup_portable``
-(portable) and ``streaming.ingest.incremental_dedup_stream``.
+``dedup.minhash_dedup`` and ``streaming.ingest.incremental_dedup_stream``.
 
-**Band keys** ``(id, band_idx, band_hash)``: explode the tokens once, take
-``n_hashes`` partial-aggregable ``min(h_j(tok))`` columns in one
-``groupBy(id)`` (a nested-lambda signature would be duplicated per band by
-codegen), then ``posexplode`` one hash per band. The hash family is the
-only thing that varies:
-
-- ``murmur3``: h_j(t) = ``hash(t, j)``; band = ``hash(rows...)``;
-- ``portable``: th(t) = the pinned polynomial hash
-  (``functions.text.SPARK_POLY_HASH_SQL``), once per posting;
-  h_j(t) = (th·(2j+1) + j·99991) mod M; band = fold (acc·1000003 + h)
-  mod M over the band's rows, M = 2^31-1. Every step has a DuckDB twin.
+**Band keys** ``(id, band_idx, band_hash)``: one Arrow UDF per batch
+(:func:`band_hashes`, numpy) maps a row's token array to its ``bands``
+band hashes, then one ``posexplode``. The hash family is pinned, so every
+step has a DuckDB twin (``dedup.minhash_portable_duckdb_sql``):
+th(t) = the pinned polynomial hash (``functions.text.poly_hash``);
+h_j(t) = (th·(2j+1) + j·99991) mod M, minimized over the row's tokens;
+band = fold (acc·1000003 + h) mod M over the band's rows, M = 2^31-1.
 
 **Candidates**: one equi-join on ``(band_idx, band_hash)``; a hot bucket
 is the LSH analog of a hot token, split by AQE's skew join.
@@ -28,15 +23,13 @@ have no signature and never pair.
 
 from __future__ import annotations
 
-import functools
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ertransfer_spark.functions.text import POLY_HASH_MOD, SPARK_POLY_HASH_SQL
+from ertransfer_spark.functions.text import POLY_HASH_MOD, poly_hash_np
 
-MH_MUL = 99991      # portable h_j(t) = (th(t)*(2j+1) + j*MH_MUL) mod M
-BAND_MUL = 1000003  # portable band key: fold (acc*BAND_MUL + h) mod M
+MH_MUL = 99991      # h_j(t) = (th(t)*(2j+1) + j*MH_MUL) mod M
+BAND_MUL = 1000003  # band key: fold (acc*BAND_MUL + h) mod M
 
 
 def rows_per_band(n_hashes: int, bands: int) -> int:
@@ -50,38 +43,51 @@ def rows_per_band(n_hashes: int, bands: int) -> int:
     return n_hashes // bands
 
 
+def band_hashes(tokens, n_hashes: int, bands: int):
+    """The band hashes of each row of a ``pyarrow`` list<string> array →
+    list<int64> array: ``bands`` hashes per row, none for a null or empty
+    row (null tokens are skipped). numpy over the whole batch: the token
+    hashes, then one ``minimum.reduceat`` per h_j, then the band fold."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = rows_per_band(n_hashes, bands)
+    lens = pc.list_value_length(tokens).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = pc.list_flatten(tokens)
+    row = np.repeat(np.arange(len(tokens)), lens)
+    if flat.null_count:
+        row = row[flat.is_valid().to_numpy(zero_copy_only=False)]
+        flat = flat.drop_null()
+    th = poly_hash_np(flat)
+    starts = np.flatnonzero(np.r_[True, row[1:] != row[:-1]]) if len(row) else row
+    sig = np.empty((len(starts), n_hashes), np.int64)
+    for j in range(n_hashes):
+        sig[:, j] = np.minimum.reduceat((th * (2 * j + 1) + j * MH_MUL) % POLY_HASH_MOD, starts)
+    sig = sig.reshape(len(starts), bands, rows)
+    acc = np.zeros((len(starts), bands), np.int64)
+    for r in range(rows):
+        acc = (acc * BAND_MUL + sig[:, :, r]) % POLY_HASH_MOD
+    n_out = np.zeros(len(tokens), np.int64)
+    n_out[row[starts]] = bands
+    offsets = np.concatenate([[0], np.cumsum(n_out)]).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(acc.ravel()))
+
+
 def band_keys(
     records: DataFrame,
     id_col: str,
     tokens_col: str,
     n_hashes: int,
     bands: int,
-    family: str = "murmur3",
 ) -> DataFrame:
     """(id, band_idx, band_hash) LSH band keys, one row per record and band."""
-    rows = rows_per_band(n_hashes, bands)
-    posts = records.select(F.col(id_col).alias("id"), F.explode(tokens_col).alias("tok"))
-    if family == "murmur3":
-        mins = [F.min(F.hash("tok", F.lit(j))) for j in range(n_hashes)]
-
-        def band(hs: list[Column]) -> Column:
-            return F.hash(*hs)
-    elif family == "portable":
-        posts = posts.select("id", F.expr(SPARK_POLY_HASH_SQL.format(s="tok")).alias("th"))
-        mins = [
-            F.min((F.col("th") * (2 * j + 1) + j * MH_MUL) % POLY_HASH_MOD)
-            for j in range(n_hashes)
-        ]
-
-        def band(hs: list[Column]) -> Column:
-            return functools.reduce(
-                lambda acc, h: (acc * BAND_MUL + h) % POLY_HASH_MOD, hs, F.lit(0)
-            )
-    else:
-        raise ValueError(f"family must be murmur3|portable, got {family!r}")
-    sig = posts.groupBy("id").agg(*[m.alias(f"h{j}") for j, m in enumerate(mins)])
-    band_cols = [band([F.col(f"h{b * rows + r}") for r in range(rows)]) for b in range(bands)]
-    return sig.select("id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"))
+    rows_per_band(n_hashes, bands)
+    kernel = F.arrow_udf(lambda t: band_hashes(t, n_hashes, bands), "array<bigint>")
+    return records.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(kernel(F.col(tokens_col))).alias("band_idx", "band_hash"),
+    )
 
 
 def candidate_pairs(keys_a: DataFrame, keys_b: DataFrame, self_join: bool) -> DataFrame:
@@ -137,14 +143,18 @@ def minhash_pairs(
     n_hashes: int,
     bands: int,
     min_jaccard: float,
-    family: str = "murmur3",
 ) -> DataFrame:
     """Band keys → candidates → verify: (a_id, b_id, sim) pairs with
     round(Jaccard, 6) ≥ ``min_jaccard`` among those sharing a band.
-    ``records_b=None`` is the self-join of ``records_a`` (a_id < b_id)."""
+    ``records_b=None`` is the self-join of ``records_a`` (a_id < b_id).
+
+    Each side's band keys are materialized once (``localCheckpoint``): a
+    self-join reads the one copy on both sides, and the Arrow UDF is
+    planned on its own rather than under the join, where Spark does not
+    extract it and fails to generate code for it."""
     self_join = records_b is None
     records_b = records_a if self_join else records_b
-    ka = band_keys(records_a, id_col, tokens_col, n_hashes, bands, family)
-    kb = ka if self_join else band_keys(records_b, id_col, tokens_col, n_hashes, bands, family)
+    ka = band_keys(records_a, id_col, tokens_col, n_hashes, bands).localCheckpoint()
+    kb = ka if self_join else band_keys(records_b, id_col, tokens_col, n_hashes, bands).localCheckpoint()
     cand = candidate_pairs(ka, kb, self_join)
     return verify(cand, records_a, records_b, id_col, tokens_col, min_jaccard)

@@ -14,12 +14,11 @@ Paths, same contract (query_id, nbr_id, sim_r):
   bounded by the block size. The cost is explicitly quadratic
   (replication factor = block count of the other side) — inherent to
   exact all-pairs; the sublinear scale paths are the ANN paths below.
-- lsh_topk / lsh_topk_portable — random-hyperplane LSH. Each vector is
-  bucketed by the sign pattern of `n_planes` fixed pseudo-random
-  hyperplanes per table (murmur3 planes generated JVM-side, or the pinned
-  portable integer spec); candidates share a bucket in ≥1 of `n_tables`
-  tables. The two differ only in the per-plane bit expression. Shuffle
-  width O(vectors × tables), candidates ∝ collisions.
+- lsh_topk — random-hyperplane LSH over the pinned portable integer
+  plane spec. Each side is materialized once as (id, vector, bucket keys);
+  the keys come from one int64 numpy matmul per Arrow batch
+  (:func:`plane_keys`), and candidates share a bucket in ≥1 of `n_tables`
+  tables. Shuffle width O(vectors × tables), candidates ∝ collisions.
 - ivf_topk — inverted-file ANN: corpus assigned once to the cells of
   deterministic id-hash seeds, queries probe the n_probe nearest cells
   through an equi-join.
@@ -33,7 +32,6 @@ reproducible across engines and float-summation orders.
 from __future__ import annotations
 
 import functools
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -265,11 +263,16 @@ def vector_blocking(
     tokens_col: str = "token_set",
     id_col: str = "conv_id",
     dim: int = 128,
-    n_planes: int = 6,
+    n_planes: int = 4,
     n_tables: int = 12,
 ) -> DataFrame:
     """J2 as a blocker: feature-hash both sides, hyperplane-LSH candidate
-    join, exact cosine top-k → (a_id, b_id, sim) candidate pairs."""
+    join, exact cosine top-k → (a_id, b_id, sim) candidate pairs.
+
+    4 planes per table: the pinned planes are far from independent (for
+    i < 10, w[P][i] steps by 1 with i, so planes differ mostly by a
+    constant offset), and 6 planes split near-duplicates apart (golden-pair
+    recall 0.84 on the 60-conversation synth corpora; 4 planes give 0.96)."""
     ea = embed_records(records_a, tokens_col, id_col, dim)
     eb = embed_records(records_b, tokens_col, id_col, dim)
     # exclude_self=False: A and B are DIFFERENT tables; overlapping raw id
@@ -395,101 +398,6 @@ def ivf_seeded_duckdb_sql(
     """
 
 
-def lsh_topk_portable(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    n_tables: int = 4,
-    round_dp: int = 4,
-) -> DataFrame:
-    """Hyperplane LSH with a fully PORTABLE plane spec → (query_id, nbr_id,
-    sim_r) — the value-verifiable sibling of :func:`lsh_topk` (murmur3
-    planes, the throughput path).
-
-    Pinned spec (every step exact integer arithmetic, so bucket bits are
-    bit-identical in any engine — no float-summation-order hazard):
-
-    - plane weight w[P][i] = th(``pl:{P}:{i}``) % 2001 - 1000, where th is
-      the pinned polynomial hash (functions/text.py: fold (h*31+ascii)
-      mod 2^31-1, seed 7) — integers in [-1000, 1000];
-    - quantized vector q[i] = CAST(round(v[i] * 1e6) AS BIGINT);
-    - bit(P) = 1 iff Σ_i q[i]·w[P][i] > 0 (exact BIGINT dot);
-    - table t's bucket key = the n_planes bits of planes
-      [t·n_planes, (t+1)·n_planes) concatenated;
-    - candidates = bucket collisions in any table (distinct, self-pairs
-      dropped), then the proven-portable exact cosine re-rank (4 dp
-      rounding, nbr_id tie-break).
-
-    Plane weights are generated on the driver from the same spec and baked
-    into the plan as literals (tiny: n_tables·n_planes·dim ints); the
-    DuckDB twin (:func:`lsh_portable_duckdb_sql`) re-derives them from the
-    hash spec in SQL, so the oracle verifies the spec itself cross-engine.
-    """
-    first = (
-        corpus.select(_as_double(vec_col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .first()
-    )
-    if first is None:
-        # empty corpus (or all-null vec_col): no plane dimension to derive
-        # — return the schema-stable empty result like the other topk ops
-        return queries.select(
-            F.col(id_col).alias("query_id"), F.col(id_col).alias("nbr_id"), F.lit(0.0).alias("sim_r")
-        ).limit(0)
-    dim = len(first["v"])
-    weights = [
-        [poly_hash(f"pl:{p}:{i}") % 2001 - 1000 for i in range(dim)]
-        for p in range(n_tables * n_planes)
-    ]
-
-    def bit(q: Column, plane: int) -> Column:
-        w = F.array(*[F.lit(x) for x in weights[plane]])
-        dot = F.aggregate(F.zip_with(q, w, lambda a, b: a * b), F.lit(0).cast("long"), lambda acc, x: acc + x)
-        return (dot > 0).cast("int")
-
-    quantized = F.transform(_as_double(vec_col), lambda x: F.round(x * 1e6).cast("long"))
-    cand = _bucket_candidates(queries, corpus, id_col, quantized, bit, n_planes, n_tables, True)
-    return _rerank(cand, queries, corpus, k, id_col, vec_col, round_dp)
-
-
-def _bucket_candidates(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec: Column,
-    bit: Callable[[Column, int], Column],
-    n_planes: int,
-    n_tables: int,
-    exclude_self: bool,
-) -> DataFrame:
-    """Distinct ``(query_id, nbr_id)`` pairs that share a bucket in at least
-    one of ``n_tables`` hyperplane-LSH tables. Table t's bucket key is the
-    0/1 ``bit(vec, plane)`` of planes [t·n_planes, (t+1)·n_planes)
-    concatenated; ``exclude_self`` drops query_id == nbr_id.
-
-    Each side is one projection whose array of per-table keys is
-    posexploded, so its input lineage runs once, not once per table."""
-    keys = F.array(*[
-        F.concat_ws("", *[bit(F.col("_v"), t * n_planes + p).cast("string")
-                          for p in range(n_planes)])
-        for t in range(n_tables)
-    ])
-
-    def bucketed(df: DataFrame, side: str) -> DataFrame:
-        out = df.select(F.col(id_col).alias(f"{side}_id"), vec.alias("_v"))
-        return out.select(f"{side}_id", F.posexplode(keys).alias("tbl", "bucket"))
-
-    cand = bucketed(queries, "q").join(bucketed(corpus, "c"), ["tbl", "bucket"]).select(
-        F.col("q_id").alias("query_id"), F.col("c_id").alias("nbr_id")
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-    return cand.distinct()
-
-
 def lsh_portable_duckdb_sql(
     k: int = 5,
     n_planes: int = 8,
@@ -498,7 +406,7 @@ def lsh_portable_duckdb_sql(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB twin of :func:`lsh_topk_portable` — re-derives the plane
+    """DuckDB twin of :func:`lsh_topk` — re-derives the plane
     weights from the pinned polynomial hash IN SQL (so the oracle verifies
     the cross-engine spec, not driver-shipped literals), quantizes vectors
     the same way, and replays bucketing + exact cosine top-k."""
@@ -545,18 +453,61 @@ def lsh_portable_duckdb_sql(
     """
 
 
-def _hyperplane_sign(vec: Column, plane: int, seed: int) -> Column:
-    """sign(v · h_plane) where h_plane[i] = deterministic pseudo-random ±/value
-    from murmur3(i, plane, seed), scaled to [-1, 1]. Pure JVM expression."""
-    weighted = F.zip_with(
-        vec,
-        F.transform(
-            F.sequence(F.lit(0), F.size(vec) - 1),
-            lambda i: (F.hash(i, F.lit(plane), F.lit(seed)).cast("double") / F.lit(2147483647.0)),
-        ),
-        lambda x, h: x * h,
+@functools.lru_cache(maxsize=8)
+def plane_weights(n_planes: int, dim: int):
+    """(n_planes, dim) int64 plane weights w[P][i] = th(``pl:{P}:{i}``) %
+    2001 - 1000, th the pinned polynomial hash: integers in [-1000, 1000]."""
+    import numpy as np
+
+    return np.array(
+        [[poly_hash(f"pl:{p}:{i}") % 2001 - 1000 for i in range(dim)] for p in range(n_planes)],
+        dtype=np.int64,
     )
-    return (F.aggregate(weighted, F.lit(0.0), lambda a, v: a + v) > 0).cast("int")
+
+
+def _round_half_up(x):
+    """Spark's ``round(x)`` of a double: ties go away from zero (numpy's
+    ``round`` sends them to the even neighbour). x - trunc(x) is exact."""
+    import numpy as np
+
+    t = np.trunc(x)
+    return t + np.copysign(np.abs(x - t) >= 0.5, x)
+
+
+def plane_keys(vectors, n_planes: int, n_tables: int):
+    """The ``n_tables`` hyperplane-LSH bucket keys of each row of a
+    ``pyarrow`` list<double> array → list<int64> array, by the pinned
+    portable spec (exact integer arithmetic, so the bits are the same in
+    any engine):
+
+    - quantized vector q[i] = round(v[i] · 1e6) (ties away from zero; a
+      null component counts 0, a null vector is empty);
+    - bit(P) = 1 iff Σ_i q[i]·w[P][i] > 0 over the row's own components
+      (:func:`plane_weights`), one int64 matmul for the whole batch;
+    - table t's key = the bits of planes [t·n_planes, (t+1)·n_planes),
+      first plane most significant.
+
+    Raises ``ValueError`` unless Σ_i |q[i]|·max|w| < 2^62 for every row:
+    numpy int64 arithmetic would wrap silently past it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(vectors)
+    lens = pc.list_value_length(vectors).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = pc.list_flatten(vectors).fill_null(0.0).to_numpy(zero_copy_only=False)
+    x = np.zeros((n, int(lens.max()) if n else 0))
+    starts = np.cumsum(lens) - lens
+    x[np.repeat(np.arange(n), lens), np.arange(len(flat)) - np.repeat(starts, lens)] = flat
+    q = _round_half_up(x * 1e6)
+    w = plane_weights(n_tables * n_planes, x.shape[1])
+    bound = np.abs(q).sum(axis=1) * (np.abs(w).max() if w.size else 0)
+    if not np.all(bound < 2.0 ** 62):  # also catches NaN and ±inf
+        raise ValueError("plane_keys: a quantized vector's plane dot can reach 2^62 (int64 overflow)")
+    bits = (q.astype(np.int64) @ w.T > 0).reshape(n, n_tables, n_planes)
+    keys = bits.astype(np.int64) @ (np.int64(1) << np.arange(n_planes - 1, -1, -1, dtype=np.int64))
+    offsets = np.arange(0, n * n_tables + 1, n_tables, dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(keys.ravel()))
 
 
 def lsh_topk(
@@ -567,22 +518,43 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
     round_dp: int = 4,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Random-hyperplane LSH ANN → (query_id, nbr_id, sim_r), approximate.
 
-    Bucket key per table = the n_planes sign bits; candidates = bucket
-    collisions in any table (distinct), then exact cosine re-rank. At 100 TB
-    the bucket join replaces the cross join: cost ∝ collisions, and AQE
+    Bucket keys per :func:`plane_keys` (the pinned portable plane spec; the
+    DuckDB twin :func:`lsh_portable_duckdb_sql` re-derives the planes from
+    the hash spec in SQL); candidates = bucket collisions in any table
+    (distinct), then the exact cosine re-rank (``_rerank``). At 100 TB the
+    bucket join replaces the cross join: cost ∝ collisions, and AQE
     skew-join splits hot buckets.
+
+    Each side is materialized once (``localCheckpoint``) as (id, vector,
+    keys): the bucket join and the re-rank read the same copy, so a
+    computed input (``vector_blocking``'s embeddings) runs once per side,
+    and the Arrow UDF is planned on its own rather than under a self-join.
+    An empty corpus has no keys, hence no candidates and no rows.
 
     ``exclude_self`` drops query_id == nbr_id rows — correct for the
     self-join ANN contract (queries IS the corpus), but set it False when
     queries and corpus are DIFFERENT tables whose raw id spaces overlap
     (cross-source blocking): there (5, 5) is a legitimate candidate pair.
     """
-    bit = functools.partial(_hyperplane_sign, seed=seed)
-    cand = _bucket_candidates(queries, corpus, id_col, _as_double(vec_col), bit, n_planes, n_tables, exclude_self)
-    return _rerank(cand, queries, corpus, k, id_col, vec_col, round_dp)
+    if not 1 <= n_planes <= 63:
+        raise ValueError(f"n_planes={n_planes} must be in 1..63: a bucket key is one int64")
+    kernel = F.arrow_udf(lambda v: plane_keys(v, n_planes, n_tables), "array<bigint>")
+
+    def side(df: DataFrame) -> DataFrame:
+        v = _as_double(vec_col)
+        return df.select(id_col, v.alias(vec_col), kernel(v).alias("_keys")).localCheckpoint()
+
+    def bucketed(df: DataFrame, name: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(name), F.posexplode("_keys").alias("tbl", "bucket"))
+
+    q = side(queries)
+    c = q if corpus is queries else side(corpus)
+    cand = bucketed(q, "query_id").join(bucketed(c, "nbr_id"), ["tbl", "bucket"])
+    if exclude_self:
+        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
+    return _rerank(cand.select("query_id", "nbr_id").distinct(), q, c, k, id_col, vec_col, round_dp)

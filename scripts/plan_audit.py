@@ -18,6 +18,9 @@ lines (scan pushdown, codegen spans, exchange shapes) to PLAN_AUDIT.md:
 - **BatchEvalPython** (row-at-a-time Python UDF) — always a failure; the
   engine's Python surface must be Arrow (`ArrowEvalPython`,
   `FlatMapGroupsInPandas`, `MapInPandas`, `FlatMapCoGroupsInPandas`).
+  Checked, and the Arrow nodes listed, over the query's plan and the
+  optimized plans of the frames it ``localCheckpoint()``s while being
+  built (the MinHash and LSH key kernels run inside such frames).
 - **Scan parquet** nodes — the audit records `PushedFilters` and
   `ReadSchema` so column pruning / predicate pushdown are visible per
   query (the transcript tables are read with explicit projections; the
@@ -185,7 +188,8 @@ def audit_one(name: str, df, build_plans: list) -> dict:
     n_window = plan.count(") Window")
     if n_window:
         notes.append(f"{n_window} Window node(s)")
-    if "BatchEvalPython" in plan:
+    built = "\n".join(p.toString() for p in build_plans)
+    if "BatchEvalPython" in plan + built:
         failures.append("BatchEvalPython (row-at-a-time Python UDF)")
     rerun = tokenizer_reruns(df, build_plans)
     if rerun:
@@ -198,7 +202,7 @@ def audit_one(name: str, df, build_plans: list) -> dict:
         set(
             re.findall(
                 r"(ArrowEvalPython|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|MapInPandas)",
-                plan,
+                plan + built,
             )
         )
     )
@@ -264,12 +268,13 @@ def main() -> None:
         "",
         "Hard checks: no `CartesianProduct`/`BroadcastNestedLoopJoin` outside the",
         "justified allowlist (broadcast 1-row totals / ≤100-row grids / n_lists-row",
-        "centroid tables), no `BatchEvalPython` (all Python is Arrow-batched), and",
-        "no loop-invariant tokenizer (`split(lower(…))`) inside a lambda body, in the",
-        "optimized plan of the query or of any frame it checkpoints while built.",
+        "centroid tables); and, in the plan of the query or of any frame it",
+        "checkpoints while built, no `BatchEvalPython` (all Python is Arrow-batched)",
+        "and no loop-invariant tokenizer (`split(lower(…))`) inside a lambda body.",
         "Reported per query: WholeStageCodegen span count, exchange count,",
         "single-partition exchanges (global-agg partial merges — O(partitions)",
-        "rows, scale-safe), Window nodes, Arrow nodes, and every parquet scan's",
+        "rows, scale-safe), Window nodes, Arrow nodes (checkpointed frames",
+        "included), and every parquet scan's",
         "pushed filters + read schema (predicate pushdown / column pruning",
         "evidence).",
         "",

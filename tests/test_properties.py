@@ -2,8 +2,9 @@
 determinism of every seeded operator, the word-shingle templates against
 their DuckDB twins and a Python spec, the set-overlap kernel's
 dense-equals-sparse and top-K-equals-oracle invariants, MinHash-LSH
-against the exact-Jaccard spec, and the exact vector sweeps against a
-numpy spec, on generated inputs."""
+against the exact-Jaccard spec, the MinHash and hyperplane-LSH key
+kernels against their pure-Python specs, and the exact vector sweeps
+against a numpy spec, on generated inputs."""
 
 from __future__ import annotations
 
@@ -241,24 +242,23 @@ def _round6(x: float) -> float:
     return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
-@pytest.mark.parametrize("family", ["murmur3", "portable"])
 @settings(max_examples=5, deadline=None, derandomize=True)
 @given(
     docs=_corpus,
     t=_threshold,
     banding=st.sampled_from([(4, 2), (6, 3), (8, 8), (12, 4)]),
 )
-def test_minhash_pairs_equal_exact_jaccard_spec(spark, family, docs, t, banding):
-    """For both hash families and any banding, the MinHash self-join's rows
-    are exact-Jaccard rows (round(J, 6) ≥ t, with J's value), come once
-    each with a_id < b_id, and include every pair of identical sets (whose
-    min-hashes all agree, so every band collides)."""
+def test_minhash_pairs_equal_exact_jaccard_spec(spark, docs, t, banding):
+    """For any banding, the MinHash self-join's rows are exact-Jaccard rows
+    (round(J, 6) ≥ t, with J's value), come once each with a_id < b_id,
+    and include every pair of identical sets (whose min-hashes all agree,
+    so every band collides)."""
     from ertransfer_spark.operators.minhash import minhash_pairs
 
     docs = docs + [docs[0]]
     d = spark.createDataFrame(list(enumerate(docs)), "id long, s array<string>")
     n_hashes, bands = banding
-    rows = [tuple(r) for r in minhash_pairs(d, None, "id", "s", n_hashes, bands, t, family).collect()]
+    rows = [tuple(r) for r in minhash_pairs(d, None, "id", "s", n_hashes, bands, t).collect()]
     ids = [(a, b) for a, b, _ in rows]
     assert len(ids) == len(set(ids))
     for a, b, sim in rows:
@@ -269,6 +269,105 @@ def test_minhash_pairs_equal_exact_jaccard_spec(spark, family, docs, t, banding)
     same = {(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))
             if set(docs[a]) == set(docs[b])}
     assert same <= set(ids)
+
+
+def _band_keys_spec(tokens: list[str], n_hashes: int, bands: int) -> list[int]:
+    """The pinned MinHash band keys of one token array, from ``poly_hash``."""
+    from ertransfer_spark.functions.text import POLY_HASH_MOD, poly_hash
+    from ertransfer_spark.operators.minhash import BAND_MUL, MH_MUL
+
+    if not tokens:
+        return []
+    th = [poly_hash(t) for t in tokens]
+    sig = [min((h * (2 * j + 1) + j * MH_MUL) % POLY_HASH_MOD for h in th) for j in range(n_hashes)]
+    rows = n_hashes // bands
+    keys = []
+    for b in range(bands):
+        acc = 0
+        for r in range(rows):
+            acc = (acc * BAND_MUL + sig[b * rows + r]) % POLY_HASH_MOD
+        keys.append(acc)
+    return keys
+
+
+_token = st.text(alphabet=st.sampled_from(list("ab0") + ["é", "ß", "Σ", "日", "本", "😀", "𝄞"]), max_size=5)
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(
+    docs=st.lists(st.lists(_token, max_size=6), min_size=1, max_size=12),
+    banding=st.sampled_from([(4, 2), (6, 3), (8, 8)]),
+)
+@example(docs=[[], ["", "é"], ["日本", "😀𝄞", ""], ["ab", "ab"]], banding=(4, 2))
+def test_band_keys_equal_poly_hash_spec(spark, docs, banding):
+    """The Arrow band-key kernel equals the pure-Python spec on accented,
+    CJK and non-BMP tokens and on '' tokens; an empty token array gets
+    no band-key rows."""
+    from ertransfer_spark.operators.minhash import band_keys
+
+    n_hashes, bands = banding
+    d = spark.createDataFrame(list(enumerate(docs)), "id long, s array<string>")
+    got = sorted(tuple(r) for r in band_keys(d, "id", "s", n_hashes, bands).collect())
+    want = sorted(
+        (i, b, key) for i, ts in enumerate(docs) for b, key in enumerate(_band_keys_spec(ts, n_hashes, bands))
+    )
+    assert got == want
+
+
+def _plane_keys_spec(vec: list, n_planes: int, n_tables: int) -> list[int]:
+    """The pinned hyperplane-LSH bucket keys of one vector: Spark's
+    round(v * 1e6) (HALF_UP on the double's shortest decimal), exact
+    integer plane dots, bits first plane first."""
+    from ertransfer_spark.functions.text import poly_hash
+
+    q = [0 if v is None else int(Decimal(repr(v * 1e6)).quantize(Decimal(1), rounding=ROUND_HALF_UP)) for v in vec]
+    keys = []
+    for t in range(n_tables):
+        key = 0
+        for p in range(t * n_planes, (t + 1) * n_planes):
+            dot = sum(x * (poly_hash(f"pl:{p}:{i}") % 2001 - 1000) for i, x in enumerate(q))
+            key = 2 * key + (dot > 0)
+        keys.append(key)
+    return keys
+
+
+_tie = st.integers(-10**6, 10**6).map(lambda k: (k + 0.5) / 1e6)  # v * 1e6 = k + 0.5
+_component = st.one_of(st.floats(-1, 1, allow_nan=False), _tie, st.none())
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(
+    vecs=st.lists(st.one_of(st.none(), st.lists(_component, max_size=6)), min_size=1, max_size=10),
+    shape=st.sampled_from([(2, 2), (4, 3), (8, 1)]),
+)
+# plane 0 weighs components 0 and 1 by 158 and 159: the tie -158.5 must
+# round to -159 (dot 0, bit 0); to even it gives -158 (dot 158, bit 1)
+@example(vecs=[[-158.5e-6, 158e-6], [2.5e-6], [], None], shape=(2, 2))
+def test_plane_keys_equal_spec(vecs, shape):
+    """The LSH bucket-key kernel equals the Python spec, ties on a .5
+    boundary of v * 1e6 included; a null vector counts as empty."""
+    import pyarrow as pa
+
+    from ertransfer_spark.operators.simsearch import plane_keys
+
+    n_planes, n_tables = shape
+    got = plane_keys(pa.array(vecs, pa.list_(pa.float64())), n_planes, n_tables).to_pylist()
+    assert got == [_plane_keys_spec(v or [], n_planes, n_tables) for v in vecs]
+
+
+def test_plane_keys_raise_past_the_overflow_bound():
+    """A quantized vector whose plane dot can reach 2^62 raises instead of
+    wrapping; one just inside the bound does not."""
+    import pyarrow as pa
+
+    from ertransfer_spark.operators.simsearch import plane_keys
+
+    def keys(v):
+        return plane_keys(pa.array([v], pa.list_(pa.float64())), 4, 2)
+
+    keys([4.0e9])  # |q| · max|w| = 4e15 · 961 ≈ 3.8e18 < 2^62 ≈ 4.61e18
+    with pytest.raises(ValueError, match="2\\^62"):
+        keys([5.0e9])
 
 
 @settings(max_examples=6, deadline=None, derandomize=True)
