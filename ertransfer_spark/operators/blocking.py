@@ -158,17 +158,14 @@ def token_jaccard_join(
     has at most ``dense_dict_max`` tokens, else the sparse posting join;
     the output is the same either way.
     """
-    ids = lambda r: r.select(F.col(id_col).cast("long").alias("id"), tokens_col)  # noqa: E731
+    ids = lambda r: r.selectExpr(f"CAST(`{id_col}` AS BIGINT) AS id", f"`{tokens_col}`")  # noqa: E731
     pairs = overlap_pairs(
         ids(ra), ids(rb), "id", tokens_col, max_token_df=max_token_df,
         min_jaccard=min_sim, dense_dict_max=dense_dict_max,
         rows_per_block=rows_per_block,
     )
-    return jaccard_at_least(pairs, min_sim).select(
-        "a_id", "b_id", "overlap",
-        F.col("a_size").cast("long").alias("a_size"),
-        F.col("b_size").cast("long").alias("b_size"),
-        "sim_r",
+    return jaccard_at_least(pairs, min_sim).selectExpr(
+        "a_id", "b_id", "overlap", "CAST(a_size AS BIGINT) AS a_size", "CAST(b_size AS BIGINT) AS b_size", "sim_r"
     )
 
 

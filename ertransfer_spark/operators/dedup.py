@@ -94,12 +94,12 @@ def shingle_jaccard_pairs(
     join degenerates to near-all-pairs), else the sparse posting self-join;
     the output is the same either way (pinned in tests/test_properties.py).
     """
-    d = docs.select(F.col(id_col).cast("long").alias("id"), gram_col)
+    d = docs.selectExpr(f"CAST(`{id_col}` AS BIGINT) AS id", f"`{gram_col}`")
     pairs = overlap_pairs(
         d, None, "id", gram_col, max_token_df=max_gram_df, min_jaccard=threshold,
         dense_dict_max=dense_dict_max, rows_per_block=rows_per_block,
     )
-    return jaccard_at_least(pairs, threshold).select("a_id", "b_id", "sim_r")
+    return jaccard_at_least(pairs, threshold).selectExpr("a_id", "b_id", "sim_r")
 
 
 def minhash_dedup(

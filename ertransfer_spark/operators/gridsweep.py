@@ -4,36 +4,27 @@ into grid cells scored by one Python kernel each.
 :func:`block_sweep` is the sweep behind every exact all-pairs kernel —
 ``simsearch.brute_force_topk``, ``simsearch.cosine_neardup_pairs`` and the
 set-overlap kernel's dense grid in ``overlap.overlap_pairs`` (behind
-``dedup.shingle_jaccard_pairs`` and ``blocking.token_jaccard_join``). It
-materializes and counts each side once, sizes the grid with
-:func:`grid_blocks`, buckets rows by ``pmod(xxhash64(id), p)``, replicates
-each side across the other side's block axis (or, for the triangular
-self-grid, across the blocks ≥ / ≤ its own), and hands each cell's rows to
-the caller's numpy body through :func:`grid_cogroup`. Each cell is one
-Arrow-batched Python call, so the Arrow boundary of every sweep lives here.
+``dedup.shingle_jaccard_pairs`` and ``blocking.token_jaccard_join``). The
+caller hands it materialized sides and their row counts (the overlap
+kernel takes them from its dictionary probe, the simsearch callers from
+:func:`materialize`), so a sweep runs no job of its own before the grid.
+It sizes the grid with :func:`grid_blocks`, buckets rows by
+``pmod(xxhash64(id), p)``, replicates each side across the other side's
+block axis (or, for the triangular self-grid, across the blocks ≥ / ≤ its
+own), and hands each cell's rows to the caller's numpy body through
+:func:`grid_cogroup`. Each cell is one Arrow-batched Python call, so the
+Arrow boundary of every sweep lives here.
 
-Every sweep needs "for each grid cell (i, j), give one
-Python kernel the cell's LEFT rows and RIGHT rows". The direct expression
-is ``left.groupBy(keys).cogroup(right.groupBy(keys)).applyInPandas(...)``
-— but when both sides derive from the SAME upstream DataFrame (triangular
-self-sweeps, or A/B splits of one table), Spark's self-join attribute
-de-duplication can interact with column pruning so the RIGHT side's data
-columns are pruned down to the grouping keys under some terminal plans
-(measured: ``df.count()`` on the cogroup result ships a key-only right
-pdf and the kernel KeyErrors, while ``collect()`` and sink writes run the
-very same DataFrame correctly).
-
-``grid_cogroup`` sidesteps the dual-lineage resolution entirely: the two
-sides are tagged with ``_side`` (0 = left, 1 = right), unioned (a union of
-same-lineage branches has no ambiguity), and a SINGLE
-``groupBy(keys).applyInPandas`` splits each cell's pdf by the tag. Same
-per-cell memory bound as the cogroup, one exchange of the concatenated
-rows instead of two per-side exchanges, and the grouped-map node consumes
-every column of its one child — nothing to mis-prune.
-
-Both sides must share a schema (rename role columns to a common name
-before calling). The kernel receives ``(key, left_pdf, right_pdf)`` with
-the ``_side`` tag already stripped.
+Why one grouped map and not ``left.groupBy(keys).cogroup(right.groupBy(keys))``:
+when both sides derive from the SAME upstream DataFrame (self-sweeps, A/B
+splits of one table), self-join attribute de-duplication interacts with
+column pruning, and under some terminal plans (measured: ``df.count()``)
+the RIGHT pdf reaches the kernel with only the key columns.
+``grid_cogroup`` tags the sides with ``_side``, unions them and splits
+each cell's pdf in ONE ``groupBy(keys).applyInPandas``: the same per-cell
+memory bound, one exchange instead of two, and nothing to mis-prune. Both
+sides must share a schema; the kernel gets ``(key, left_pdf, right_pdf)``
+with the tag stripped.
 """
 
 from __future__ import annotations
@@ -42,7 +33,6 @@ from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def grid_blocks(
@@ -77,6 +67,13 @@ def grid_blocks(
     return max(1, by_mem, by_par)
 
 
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """``(side, rows)`` for :func:`block_sweep`: a lazy ``localCheckpoint``
+    that its own count job computes, so the side is built once."""
+    side = df.localCheckpoint(eager=False)
+    return side, side.count()
+
+
 def grid_cogroup(
     left: DataFrame,
     right: DataFrame,
@@ -92,9 +89,7 @@ def grid_cogroup(
         raise ValueError(
             f"grid_cogroup sides must share a schema: {left.columns} vs {right.columns}"
         )
-    u = left.withColumn("_side", F.lit(0)).unionByName(
-        right.withColumn("_side", F.lit(1))
-    )
+    u = left.selectExpr("*", "0 AS _side").unionByName(right.selectExpr("*", "1 AS _side"))
 
     def split_cell(key, pdf):
         lp = pdf[pdf["_side"] == 0].drop(columns=["_side"])
@@ -106,7 +101,9 @@ def grid_cogroup(
 
 def block_sweep(
     left: DataFrame,
+    n_left: int,
     right: DataFrame | None,
+    n_right: int,
     cell: Callable[[pd.DataFrame, pd.DataFrame, bool], pd.DataFrame],
     schema: str,
     rows_per_block: int,
@@ -117,36 +114,31 @@ def block_sweep(
     Both sides carry an ``id`` column and share a schema; ``right=None`` is
     the triangular self-grid of ``left``, whose cells (i, j ≥ i) see every
     unordered row pair exactly once — ``diagonal`` is True on the (i, i)
-    cells, where the body must keep one orientation of each pair. Each side
-    is materialized (``localCheckpoint``) and counted once; a cell with an
-    empty side returns an empty frame of ``schema`` without calling
-    ``cell``."""
+    cells, where the body must keep one orientation of each pair. The sides
+    come materialized with their row counts ``n_left`` / ``n_right``
+    (``n_right`` is unused for the self-grid); the sweep reads each side
+    once and runs no job of its own. A cell with an empty side returns an
+    empty frame of ``schema`` without calling ``cell``."""
     par = left.sparkSession.sparkContext.defaultParallelism
-    sa = left.localCheckpoint()
-    cols = sa.columns
-
-    def blk(n: int):
-        return F.pmod(F.xxhash64("id"), F.lit(n))
-
-    if right is None:
-        p = grid_blocks(sa.count(), rows_per_block, par, triangular=True)
-        v = sa.withColumn("_b", blk(p))
+    cols = [f"`{c}`" for c in left.columns]
+    triangular = right is None
+    if triangular:
+        p = grid_blocks(n_left, rows_per_block, par, triangular=True)
+        blk = f"pmod(xxhash64(id), {p})"
         # left of cell (i, j): block i rows for every j >= i; right: block
         # j rows for every i <= j
-        lrep = v.select(F.col("_b").alias("bi"), F.explode(F.sequence("_b", F.lit(p - 1))).alias("bj"), *cols)
-        rrep = v.select(F.explode(F.sequence(F.lit(0), "_b")).alias("bi"), F.col("_b").alias("bj"), *cols)
+        lrep = left.selectExpr(f"{blk} AS bi", f"explode(sequence({blk}, {p - 1})) AS bj", *cols)
+        rrep = left.selectExpr(f"explode(sequence(0, {blk})) AS bi", f"{blk} AS bj", *cols)
     else:
-        sb = right.localCheckpoint()
-        pl = grid_blocks(sa.count(), rows_per_block, par, triangular=False)
-        pr = grid_blocks(sb.count(), rows_per_block, par, triangular=False)
-        lrep = sa.select(blk(pl).alias("bi"), F.explode(F.sequence(F.lit(0), F.lit(pr - 1))).alias("bj"), *cols)
-        rrep = sb.select(F.explode(F.sequence(F.lit(0), F.lit(pl - 1))).alias("bi"), blk(pr).alias("bj"), *cols)
+        pl = grid_blocks(n_left, rows_per_block, par, triangular=False)
+        pr = grid_blocks(n_right, rows_per_block, par, triangular=False)
+        lrep = left.selectExpr(f"pmod(xxhash64(id), {pl}) AS bi", f"explode(sequence(0, {pr - 1})) AS bj", *cols)
+        rrep = right.selectExpr(f"explode(sequence(0, {pl - 1})) AS bi", f"pmod(xxhash64(id), {pr}) AS bj", *cols)
 
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     empty = to_arrow_schema(StructType.fromDDL(schema)).empty_table().to_pandas()
-    triangular = right is None
 
     def run_cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(lpdf) or not len(rpdf):

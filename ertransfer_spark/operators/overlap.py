@@ -10,43 +10,47 @@ kernel, filters on top):
 - ``blocking.token_jaccard_join``: rounded-threshold Jaccard A/B join;
 - ``dedup.shingle_jaccard_pairs``: rounded-threshold Jaccard self-join.
 
-**Postings.** Tokens become xxhash64 keys (8-byte shuffle keys instead of
-token strings; a 64-bit collision would merge two posting lists,
-P ≈ n²/2⁶⁵ over the distinct tokens). Posting rows are skinny —
-``(g, id)``, plus ``cnt`` under multiset semantics — and the record sizes
-are joined back after the pair aggregation. ``posting_budget`` keeps the
-first N ids per token per side.
+**Postings.** Tokens become xxhash64 keys (8-byte shuffle keys; a 64-bit
+collision would merge two posting lists, P ≈ n²/2⁶⁵ over the distinct
+tokens). Posting rows are skinny — ``(g, id)``, plus ``cnt`` under
+multiset semantics — and the record sizes are joined back after the pair
+aggregation. ``posting_budget`` keeps the first N ids per token per side.
+The explode is ``explode_outer`` with the NULL key dropped after: an inner
+``explode`` makes the optimizer infer a ``size(hs) > 0`` filter that
+rebuilds the hashed array below the projection.
 
-**Token-df table** ``(g, df_a, df_b)``: one count per side, over the tokens
-of both sides. It feeds
-
-- the two-sided ``max_token_df`` cap: tokens over the cap on either side
-  leave the postings through a broadcast join against the HOT set. The hot
-  set has at most |postings|/cap rows, so it broadcasts at any corpus
-  size; the kept-token set grows with the vocabulary and never does;
-- the rare flag (``keep_rare_df``);
-- hot-token salting: a token shared by df_a × df_b records lands its whole
-  df_a·df_b join output in one partition (AQE's skew join splits by input
-  size, not by output product). Tokens with df_a·df_b > ``HOT_PRODUCT``
-  spread their A postings over ``defaultParallelism`` salt keys and
-  replicate their B postings to each; cold tokens join unsalted;
-- the dense-dictionary probe.
+**Token-df table** ``(g, df_a, df_b)``: one ``groupBy("g")`` over both
+sides with two conditional counts. It feeds the two-sided ``max_token_df``
+cap (tokens over it on either side leave the postings through a broadcast
+join against the HOT set, at most |postings|/cap rows at any corpus size;
+the kept-token set grows with the vocabulary and is never broadcast), the
+rare flag (``keep_rare_df``), hot-token salting (AQE's skew join splits by
+input size, not by the df_a·df_b output product, so tokens with
+df_a·df_b > ``HOT_PRODUCT`` spread their A postings over
+``defaultParallelism`` salt keys and replicate their B postings to each),
+and the dense-dictionary probe.
 
 **Kernels.** The sparse posting join (token equi-join → ``(a_id, b_id)``
-count) is the web-scale path. The dense grid runs only for set-semantics
-Jaccard calls with ``min_jaccard > 0`` whose capped shared dictionary has
-at most ``dense_dict_max`` tokens: each cell of a ``gridsweep.block_sweep``
-computes all pairwise overlaps with one binary-matrix float32 matmul over
-a cell-local dictionary, and emits only pairs that can reach ``min_jaccard`` (a
-prefilter with a margin; callers apply the authoritative rounded filter).
-That is the regime where every shared token is hot but under the cap and
-the posting join streams near-all-pairs through two shuffles. Both
-kernels return the same pairs at or above ``min_jaccard``.
+count) is the web-scale path. Set-semantics Jaccard calls with
+``min_jaccard > 0`` materialize ``(id, hs, sz)`` once per side (a lazy
+``localCheckpoint``), and everything reads it: the df
+table, the probe, the postings and the dense grid. Their df table also
+counts one NULL-key sentinel posting per record (no xxhash64 key is
+NULL), so the probe's one aggregate job computes the sides and returns
+both the capped shared dictionary and each side's row count. When that
+dictionary has at most ``dense_dict_max`` tokens, each cell of a
+``gridsweep.block_sweep`` computes all pairwise overlaps with one
+binary-matrix float32 matmul over a cell-local dictionary and emits only
+pairs that can reach ``min_jaccard`` (a prefilter with a margin; callers
+apply the authoritative rounded filter). That is the regime where every
+shared token is hot but under the cap and the posting join streams
+near-all-pairs through two shuffles. Both kernels return the same pairs
+at or above ``min_jaccard``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Join-output product df_a·df_b above which a token's posting join is salted.
@@ -55,30 +59,39 @@ HOT_PRODUCT = 65536
 
 def _prep(records: DataFrame, id_col: str, tokens_col: str, multiset: bool) -> DataFrame:
     """(id, hs, sz): hashed tokens (distinct unless multiset) and set size."""
-    toks = F.col(tokens_col) if multiset else F.array_distinct(F.col(tokens_col))
-    hs = F.transform(toks, lambda t: F.xxhash64(t))
-    return records.select(F.col(id_col).alias("id"), hs.alias("hs"), F.size(hs).alias("sz"))
+    toks = f"`{tokens_col}`" if multiset else f"array_distinct(`{tokens_col}`)"
+    return records.selectExpr(
+        f"`{id_col}` AS id", f"transform({toks}, t -> xxhash64(t)) AS hs", f"size({toks}) AS sz"
+    )
 
 
 def _postings(prep: DataFrame, side: str, multiset: bool, posting_budget: int | None) -> DataFrame:
     """(g, {side}_id[, {side}_cnt]) posting rows."""
     sid = f"{side}_id"
-    posts = prep.select(F.col("id").alias(sid), F.explode("hs").alias("g"))
+    posts = prep.selectExpr(f"id AS {sid}", "explode_outer(hs) AS g").filter("g IS NOT NULL")
     if multiset:
-        posts = posts.groupBy("g", sid).agg(F.count(F.lit(1)).alias(f"{side}_cnt"))
+        posts = posts.groupBy("g", sid).agg(F.expr(f"count(1) AS {side}_cnt"))
     if posting_budget:
-        w = Window.partitionBy("g").orderBy(sid)
-        posts = posts.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= posting_budget
-        ).drop("_rn")
+        rn = f"row_number() OVER (PARTITION BY g ORDER BY {sid}) AS _rn"
+        posts = posts.selectExpr("*", rn).filter(f"_rn <= {posting_budget}").drop("_rn")
     return posts
+
+
+def _token_df(a: DataFrame, b: DataFrame | None, g: str) -> DataFrame:
+    """(g, df_a, df_b) over the rows of the expression ``g`` on each side;
+    ``b=None`` is the self-join, whose df_b is df_a."""
+    if b is None:
+        return a.selectExpr(f"{g} AS g").groupBy("g").agg(F.expr("count(1) AS df_a"), F.expr("count(1) AS df_b"))
+    u = a.selectExpr(f"{g} AS g", "true AS _a").unionByName(b.selectExpr(f"{g} AS g", "false AS _a"))
+    return u.groupBy("g").agg(F.expr("count_if(_a) AS df_a"), F.expr("count_if(NOT _a) AS df_b"))
 
 
 def jaccard_at_least(pairs: DataFrame, min_sim: float) -> DataFrame:
     """Add ``sim_r`` = round(Jaccard, 6) and keep rows with sim_r ≥ min_sim —
     the filter the SQL oracles state, applied to either kernel's output."""
-    sim = F.col("overlap") / (F.col("a_size") + F.col("b_size") - F.col("overlap"))
-    return pairs.withColumn("sim_r", F.round(sim, 6)).filter(F.col("sim_r") >= min_sim)
+    return pairs.selectExpr("*", "round(overlap / (a_size + b_size - overlap), 6) AS sim_r").filter(
+        f"sim_r >= CAST('{float(min_sim)!r}' AS DOUBLE)"
+    )
 
 
 def overlap_pairs(
@@ -108,78 +121,71 @@ def overlap_pairs(
     not be returned.
     """
     triangular = records_b is None
+    probe = min_jaccard > 0 and not (multiset or posting_budget or keep_rare_df)
     prep_a = _prep(records_a, id_col, tokens_col, multiset)
     prep_b = prep_a if triangular else _prep(records_b, id_col, tokens_col, multiset)
+    over_cap = f"(df_a > {max_token_df} OR df_b > {max_token_df})" if max_token_df else "false"
+
+    if probe:
+        # one materialization per side, computed by the probe's job below
+        prep_a = prep_a.localCheckpoint(eager=False)
+        prep_b = prep_a if triangular else prep_b.localCheckpoint(eager=False)
+        # a NULL-key sentinel per record: the g = NULL row counts each side
+        dfs = _token_df(prep_a, None if triangular else prep_b, "explode_outer(concat(hs, array(NULL)))")
+        # one bounded collect: the side sizes, the dictionary-size probe
+        # and, in the dense branch, the dictionary itself (every row when
+        # the dictionary fits, so the NULL row is among them)
+        kept = f"g IS NULL OR (df_a > 0 AND df_b > 0 AND NOT {over_cap})"
+        rows = dfs.filter(kept).limit(dense_dict_max + 2).collect()
+        keep = [r["g"] for r in rows if r["g"] is not None]
+        if 0 < len(keep) <= dense_dict_max:
+            n_a, n_b = next((r["df_a"], r["df_b"]) for r in rows if r["g"] is None)
+            return _dense_pairs(prep_a, n_a, None if triangular else prep_b, n_b, keep, min_jaccard, rows_per_block)
+
     pa = _postings(prep_a, "a", multiset, posting_budget)
     pb = _postings(prep_b, "b", multiset, posting_budget)
-
-    dfs = pa.groupBy("g").agg(F.count(F.lit(1)).alias("df_a"))
-    if triangular:
-        dfs = dfs.withColumn("df_b", F.col("df_a"))
-    else:
-        dfs = dfs.join(pb.groupBy("g").agg(F.count(F.lit(1)).alias("df_b")), "g")
-    over_cap = (
-        (F.col("df_a") > max_token_df) | (F.col("df_b") > max_token_df)
-        if max_token_df else F.lit(False)
-    )
-
-    if min_jaccard > 0 and not (multiset or posting_budget or keep_rare_df):
-        # materialized once: the probe below and the sparse path's hot set
-        dfs = dfs.localCheckpoint()
-        # one bounded collect is both the dictionary-size probe and, in
-        # the dense branch, the dictionary itself
-        kept = dfs.filter(~over_cap).select("g").limit(dense_dict_max + 1).collect()
-        if 0 < len(kept) <= dense_dict_max:
-            return _dense_pairs(
-                prep_a, None if triangular else prep_b, [r["g"] for r in kept],
-                min_jaccard, rows_per_block,
-            )
+    if not probe:
+        dfs = _token_df(pa, None if triangular else pb, "g")
 
     fan = records_a.sparkSession.sparkContext.defaultParallelism
     # _drop: over the cap (leaves the postings); otherwise hot and salted
-    hot = dfs.filter(over_cap | (F.col("df_a") * F.col("df_b") > HOT_PRODUCT))
-    hot = F.broadcast(hot.select("g", over_cap.alias("_drop")))
-    pa = pa.join(hot, "g", "left").filter(~F.coalesce("_drop", F.lit(False)))
-    pb = pb.join(hot, "g", "left").filter(~F.coalesce("_drop", F.lit(False)))
-    is_hot = F.col("_drop").isNotNull()
-    pa = pa.withColumn(
-        "_salt", F.when(is_hot, F.pmod(F.hash("a_id"), F.lit(fan))).otherwise(F.lit(0))
-    ).drop("_drop")
-    pb = pb.withColumn(
-        "_salt",
-        F.explode(F.when(is_hot, F.sequence(F.lit(0), F.lit(fan - 1))).otherwise(F.array(F.lit(0)))),
-    ).drop("_drop")
+    hot = dfs.filter(f"g IS NOT NULL AND ({over_cap} OR df_a * df_b > {HOT_PRODUCT})")
+    hot = F.broadcast(hot.selectExpr("g", f"{over_cap} AS _drop"))
+    cols_a = ["g", "a_id"] + (["a_cnt"] if multiset else [])
+    pa = pa.join(hot, "g", "left").filter("NOT coalesce(_drop, false)").selectExpr(
+        *cols_a, f"CASE WHEN _drop IS NULL THEN 0 ELSE pmod(hash(a_id), {fan}) END AS _salt"
+    )
+    pb = pb.join(hot, "g", "left").filter("NOT coalesce(_drop, false)").selectExpr(
+        "g", "b_id", *(["b_cnt"] if multiset else []),
+        f"explode(CASE WHEN _drop IS NULL THEN array(0) ELSE sequence(0, {fan - 1}) END) AS _salt",
+    )
 
-    rare_agg: list[Column] = []
+    rare_agg = []
     if keep_rare_df:
         # the rare set is the vocabulary's long tail — not broadcastable at
         # scale — so it joins the A postings by token (one extra exchange)
-        rare = dfs.filter((F.col("df_a") + F.col("df_b") <= keep_rare_df) & ~over_cap)
-        pa = pa.join(rare.select("g", F.lit(1).alias("_rare")), "g", "left").withColumn(
-            "_rare", F.coalesce(F.col("_rare"), F.lit(0))
-        )
-        rare_agg = [F.max("_rare").alias("_has_rare")]
+        rare = dfs.filter(f"df_a + df_b <= {keep_rare_df} AND NOT {over_cap}").selectExpr("g", "1 AS _rare")
+        pa = pa.join(rare, "g", "left").selectExpr(*cols_a, "_salt", "coalesce(_rare, 0) AS _rare")
+        rare_agg = [F.expr("max(_rare) AS _has_rare")]
 
     joined = pa.join(pb, ["g", "_salt"])
     if triangular:
-        joined = joined.filter(F.col("a_id") < F.col("b_id"))
-    overlap = F.sum(F.least("a_cnt", "b_cnt")) if multiset else F.count(F.lit(1))
-    pairs = joined.groupBy("a_id", "b_id").agg(overlap.cast("long").alias("overlap"), *rare_agg)
-    sizes_a = prep_a.select(F.col("id").alias("a_id"), F.col("sz").alias("a_size"))
-    sizes_b = prep_b.select(F.col("id").alias("b_id"), F.col("sz").alias("b_size"))
+        joined = joined.filter("a_id < b_id")
+    overlap = "sum(least(a_cnt, b_cnt))" if multiset else "count(1)"
+    pairs = joined.groupBy("a_id", "b_id").agg(F.expr(f"CAST({overlap} AS BIGINT) AS overlap"), *rare_agg)
+    sizes_a = prep_a.selectExpr("id AS a_id", "sz AS a_size")
+    sizes_b = prep_b.selectExpr("id AS b_id", "sz AS b_size")
     out = ["a_id", "b_id", "overlap", "a_size", "b_size"] + (["_has_rare"] if rare_agg else [])
-    return pairs.join(sizes_a, "a_id").join(sizes_b, "b_id").select(*out)
+    return pairs.join(sizes_a, "a_id").join(sizes_b, "b_id").selectExpr(*out)
 
 
 def _dense_pairs(
-    prep_a: DataFrame,
-    prep_b: DataFrame | None,
-    keep: list[int],
-    min_jaccard: float,
-    rows_per_block: int,
+    prep_a: DataFrame, n_a: int, prep_b: DataFrame | None, n_b: int,
+    keep: list[int], min_jaccard: float, rows_per_block: int,
 ) -> DataFrame:
-    """Block-matrix sweep over (id, hs, sz) rows: rectangular A × B grid, or
-    the triangular self-grid when ``prep_b`` is None.
+    """Block-matrix sweep over materialized (id, hs, sz) rows of
+    ``n_a`` / ``n_b`` records: rectangular A × B grid, or the triangular
+    self-grid when ``prep_b`` is None.
 
     The kept dictionary has at most ``dense_dict_max`` tokens by branch
     condition, so it ships to the cells as an O(dict) array; each cell
@@ -192,12 +198,11 @@ def _dense_pairs(
 
     triangular = prep_b is None
     keep_arr = np.sort(np.asarray(keep, dtype=np.int64))
-    cols = ("id", F.sort_array("hs").alias("gs"), "sz")
     t = min_jaccard - 1e-6  # margin: the caller's rounded filter is authoritative
 
     def overlap_cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame, diagonal: bool) -> pd.DataFrame:
-        lg = [np.asarray(v, dtype=np.int64) for v in lpdf["gs"]]
-        rg = [np.asarray(v, dtype=np.int64) for v in rpdf["gs"]]
+        lg = [np.asarray(v, dtype=np.int64) for v in lpdf["hs"]]
+        rg = [np.asarray(v, dtype=np.int64) for v in rpdf["hs"]]
         vocab = np.intersect1d(np.unique(np.concatenate(lg + rg)), keep_arr, assume_unique=True)
 
         def densify(arrs):
@@ -234,7 +239,7 @@ def _dense_pairs(
         )
 
     return gridsweep.block_sweep(
-        prep_a.select(*cols), None if triangular else prep_b.select(*cols), overlap_cell,
+        prep_a, n_a, prep_b, n_b, overlap_cell,
         schema="a_id long, b_id long, overlap long, a_size int, b_size int",
         rows_per_block=rows_per_block,
     )

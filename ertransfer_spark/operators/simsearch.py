@@ -153,7 +153,7 @@ def brute_force_topk(
         return df.select(F.col(id_col).cast("long").alias("id"), _as_double(vec_col).alias("v"))
 
     scored = gridsweep.block_sweep(
-        side(queries), side(corpus), score_cell,
+        *gridsweep.materialize(side(queries)), *gridsweep.materialize(side(corpus)), score_cell,
         schema="query_id long, nbr_id long, sim double", rows_per_block=rows_per_block,
     )
     return _top_k(scored.select("query_id", "nbr_id", F.round("sim", round_dp).alias("sim_r")), k)
@@ -203,7 +203,8 @@ def cosine_neardup_pairs(
 
     v = vectors.select(F.col(id_col).cast("long").alias("id"), _as_double(vec_col).alias("v"))
     scored = gridsweep.block_sweep(
-        v, None, score_cell, schema="a_id long, b_id long, sim double", rows_per_block=rows_per_block,
+        *gridsweep.materialize(v), None, 0, score_cell,
+        schema="a_id long, b_id long, sim double", rows_per_block=rows_per_block,
     )
     return scored.select(
         "a_id", "b_id", F.round("sim", round_dp).alias("sim_r")

@@ -143,8 +143,9 @@ def tokenizer_reruns(df, build_plans) -> list[str]:
 
 @contextmanager
 def checkpointed_plans():
-    """Collect the optimized plan of every frame ``localCheckpoint()``ed
-    while the block runs: the work a query does while it is being built."""
+    """Collect the optimized plan of every frame ``localCheckpoint()``ed,
+    lazily or eagerly, while the block runs: the work a query does while it
+    is being built, and the sides the overlap kernel materializes."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     plans: list = []

@@ -203,6 +203,9 @@ _VOCAB = [f"t{v}" for v in range(12)]
 _token_set = st.lists(st.sampled_from(_VOCAB), min_size=1, max_size=8, unique=True)
 _corpus = st.lists(_token_set, min_size=1, max_size=20)
 _threshold = st.sampled_from([1 / 8, 1 / 5, 1 / 4, 1 / 3, 1 / 2, 2 / 3])
+# the overlap kernel's side sizes come from its probe, which must count
+# records with an empty token array too
+_overlap_corpus = st.lists(st.lists(st.sampled_from(_VOCAB), max_size=8, unique=True), min_size=1, max_size=20)
 
 
 def _kernel_rows(ra, rb, t, cap, dense_dict_max):
@@ -216,10 +219,16 @@ def _kernel_rows(ra, rb, t, cap, dense_dict_max):
 
 
 @settings(max_examples=6, deadline=None, derandomize=True)
-@given(a=_corpus, b=_corpus, t=_threshold, cap=st.integers(1, 20))
+@given(a=_overlap_corpus, b=_overlap_corpus, t=_threshold, cap=st.integers(1, 20))
+@example(a=[[], ["t0", "t1"], [], ["t1"]], b=[["t1", "t2"], []], t=1 / 3, cap=20)
+@example(a=[["t0", "t1"], ["t1"]], b=[[], []], t=1 / 8, cap=20)
+@example(a=[["t0"], ["t0", "t1"]], b=[["t2"], ["t3", "t4"]], t=1 / 8, cap=20)
+@example(a=[["t0"], ["t0", "t1"], ["t0"]], b=[["t0"], ["t0", "t1"]], t=1 / 8, cap=1)
 def test_overlap_kernel_dense_equals_sparse_rectangular(spark, a, b, t, cap):
     """The set-overlap kernel's rectangular dense grid (several cells at
-    rows_per_block=7) returns the sparse posting join's rows exactly."""
+    rows_per_block=7) returns the sparse posting join's rows exactly, also
+    with empty token arrays and with a side that keeps no token (all
+    empty, none shared, or all over the cap)."""
     schema = "id long, s array<string>"
     ra = spark.createDataFrame(list(enumerate(a)), schema)
     rb = spark.createDataFrame([(1000 + i, s) for i, s in enumerate(b)], schema)
@@ -227,10 +236,12 @@ def test_overlap_kernel_dense_equals_sparse_rectangular(spark, a, b, t, cap):
 
 
 @settings(max_examples=6, deadline=None, derandomize=True)
-@given(docs=_corpus, t=_threshold, cap=st.integers(1, 20))
+@given(docs=_overlap_corpus, t=_threshold, cap=st.integers(1, 20))
+@example(docs=[[], ["t0"], [], ["t0", "t1"], ["t1"]], t=1 / 2, cap=20)
+@example(docs=[[], []], t=1 / 8, cap=20)
 def test_overlap_kernel_dense_equals_sparse_triangular(spark, docs, t, cap):
     """The triangular self-join: dense grid rows equal the sparse posting
-    self-join's, all with a_id < b_id."""
+    self-join's, all with a_id < b_id, also with empty token arrays."""
     d = spark.createDataFrame(list(enumerate(docs)), "id long, s array<string>")
     dense = _kernel_rows(d, None, t, cap, 100000)
     assert dense == _kernel_rows(d, None, t, cap, 0)

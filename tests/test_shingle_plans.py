@@ -111,3 +111,14 @@ def test_canonicalize_paths_tokenize_once(spark, spark_corpora):
             lambda: top_k_token_join(ra, rb, k=3, tokens_col="shingle_set"),
         ):
             assert _rerun_tokenizers(build) == []
+
+
+@pytest.mark.parametrize("name, sides", [("dedup_shingle_jaccard", 1), ("topk_token_join", 2)])
+def test_audit_records_the_kernel_sides(spark, sf_dir, name, sides):
+    """The overlap kernel materializes each side lazily; the audit still
+    records those frames' plans, so its checks cover the side projections."""
+    import __spark_entry__ as entry
+
+    with checkpointed_plans() as plans:
+        entry.queries()[name](spark, sf_dir)
+    assert len(plans) == sides and all("xxhash64(" in p.toString() for p in plans)
