@@ -127,7 +127,7 @@ def parse_train_params(spec: str) -> dict:
 
 def cmd_run(args) -> int:
     from ertransfer_spark.operators.canonicalize import canonicalize_table
-    from ertransfer_spark.operators.labeling import attach_labels, stratified_split
+    from ertransfer_spark.operators.labeling import stratified_split
     from ertransfer_spark.plans.pipeline import ERPipeline, PipelineConfig
     from ertransfer_spark.session import get_spark
     from ertransfer_spark.sources.normalizer import (

@@ -25,7 +25,6 @@ def canonicalize(
     transcripts: DataFrame,
     id_col: str = "conv_id",
     keep_turns: bool = False,
-    extra_group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Returns (conv_id, agValue, tokens, token_set, n_turns, n_tokens
     [, turns]).
@@ -34,13 +33,11 @@ def canonicalize(
     - ``tokens``/``token_set``: pinned tokenization of agValue (F1-F4 input).
     - ``turns``: the ordered struct array, kept only for the round-trip
       invariant test (per-turn text equality under stable turn ordering).
-    - ``extra_group_cols``: columns functionally dependent on ``id_col``
-      (e.g. a source-side tag) carried through the groupBy as extra keys.
     """
     turns = F.array_sort(
         F.collect_list(F.struct(F.col("turn_idx"), F.col("role"), F.col("text"), F.col("tool")))
     )
-    agg = transcripts.groupBy(id_col, *(extra_group_cols or [])).agg(
+    agg = transcripts.groupBy(id_col).agg(
         turns.alias("turns"),
         F.count(F.lit(1)).alias("n_turns"),
         F.min("ts").alias("first_ts"),
@@ -77,53 +74,6 @@ def canonicalize(
     if not keep_turns:
         rec = rec.drop("turns")
     return rec
-
-
-def canonicalize_sides(
-    transcripts_a: DataFrame,
-    transcripts_b: DataFrame,
-    id_col: str = "conv_id",
-    checkpoint: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Canonicalize BOTH sources as ONE job: union with a side tag, one
-    groupBy shuffle over 2x the rows, one materialization, then split
-    lazily by the tag.
-
-    Why: two sequential per-side actions each end with a straggler tail
-    that idles most of a wide cluster (measured: the canonicalize stage
-    scaled at 0.37-0.43 efficiency 8->32 cores as two eager actions).
-    One action over the union keeps every core busy to a single tail and
-    halves job-submission latency. Requires the two sources' ids to be
-    collision-free across sides (the synth corpus prefixes ``a_``/``b_``;
-    the CLI namespaces raw table ids) — grouping additionally by the tag
-    makes the result correct even when they do collide.
-    """
-    tagged = transcripts_a.withColumn("_side", F.lit("a")).unionByName(
-        transcripts_b.withColumn("_side", F.lit("b"))
-    )
-    # 2x the session shuffle width: the union carries 2x the groups, and a
-    # 1x-width groupBy doubles every reduce task's collect_list hash map —
-    # measured 2.2x slower at 480k/32c (objectHashAggregate falls toward
-    # its sort-based fallback). Repartitioning by EXACTLY the group keys
-    # satisfies the aggregation's required distribution, so the groupBy
-    # adds no second shuffle — one exchange at 2x width for 2x rows.
-    spark = tagged.sparkSession
-    # Guard: on a cluster whose input parallelism exceeds 2x the configured
-    # shuffle width (AQE-coalesced sessions, very wide scans) never shrink
-    # below the input's own partition count — getNumPartitions is plan-only,
-    # no job. At the measured regimes (32-256 shuffle partitions, local
-    # parquet scans) the 2x term dominates and behavior is unchanged.
-    width = max(
-        2 * int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        tagged.rdd.getNumPartitions(),
-    )
-    tagged = tagged.repartition(width, id_col, "_side")
-    rec = canonicalize(tagged, id_col=id_col, extra_group_cols=["_side"])
-    if checkpoint:
-        rec = rec.localCheckpoint()
-    ra = rec.filter(F.col("_side") == "a").drop("_side")
-    rb = rec.filter(F.col("_side") == "b").drop("_side")
-    return ra, rb
 
 
 def canonicalize_table(

@@ -58,7 +58,6 @@ def unique_mapping_clusters(
     predictions: DataFrame,
     threshold: float = 0.5,
     prob_col: str = "prob_class1",
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Greedy 1-1 matching (UMC) → (a_id, b_id, prob).
 
@@ -83,26 +82,18 @@ def unique_mapping_clusters(
     frontier are lazy filters over the CHECKPOINTED frontier, so nothing
     is recomputed and lineage stays flat.
 
-    The loop runs to convergence by default: every round accepts at least
-    one edge (the global maximum is mutual-best), so rounds are bounded by
-    the edge count and in practice by the longest preference chain. Pass
-    ``max_rounds`` only as an explicit safety valve — exhausting it emits
-    a warning and returns the PARTIAL matching accepted so far (a chain of
-    N strictly-decreasing edges needs ~N/2 rounds, so a silent low cap
-    would drop valid greedy matches).
+    The loop always converges: every round accepts at least one edge (the
+    global maximum is mutual-best), so rounds are bounded by the edge
+    count and in practice by the longest preference chain (a chain of N
+    strictly-decreasing edges needs ~N/2 rounds).
     """
-    import itertools
-    import warnings
-
     remaining = predictions.filter(F.col(prob_col) >= threshold).select(
         "a_id", "b_id", F.col(prob_col).alias("prob")
     )
     accepted_parts: list[DataFrame] = []
     wa = Window.partitionBy("a_id").orderBy(F.desc("prob"), F.asc("a_id"), F.asc("b_id"))
     wb = Window.partitionBy("b_id").orderBy(F.desc("prob"), F.asc("a_id"), F.asc("b_id"))
-    rounds = range(max_rounds) if max_rounds is not None else itertools.count()
-    converged = False
-    for _ in rounds:
+    while True:
         flags = (
             remaining.withColumn("_ra", F.row_number().over(wa))
             .withColumn("_rb", F.row_number().over(wb))
@@ -119,24 +110,16 @@ def unique_mapping_clusters(
         ).collect()[0]
         n, nb = row["n"], row["nb"] or 0
         if nb == 0:  # implies n == 0 (see docstring)
-            converged = True
             break
         best = flags.filter(F.col("_best")).select("a_id", "b_id", "prob")
         accepted_parts.append(best)
         if nb == n:  # every remaining edge was accepted — frontier is empty
-            converged = True
             break
         remaining = (
             flags.filter(~F.col("_best"))
             .join(best.select("a_id"), "a_id", "left_anti")
             .join(best.select("b_id"), "b_id", "left_anti")
             .select("a_id", "b_id", "prob")
-        )
-    if not converged and max_rounds is not None:
-        warnings.warn(
-            f"unique_mapping_clusters stopped at max_rounds={max_rounds} "
-            "before convergence — returning a PARTIAL greedy matching",
-            stacklevel=2,
         )
     if not accepted_parts:
         # schema-stable empty result derived from the input (ids keep

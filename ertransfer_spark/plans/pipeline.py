@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -89,7 +89,6 @@ class PipelineConfig:
     attrs: tuple = ()                # per-attribute features (tabular path;
                                      # requires run(raw_a=, raw_b=))
     attr_extra: tuple = ()           # extra (kind, attr) feature pairs
-    extra: dict = field(default_factory=dict)
 
 
 class ERPipeline:
@@ -113,15 +112,10 @@ class ERPipeline:
             return self.catalog.read(name)
         t0 = time.time()
         self.catalog.commit(name, fn(), meta={"run_id": self.run_id})
-        self.catalog.append_lineage([{
-            "stage": name,
-            "run_id": self.run_id,
-            "wall_ms": int((time.time() - t0) * 1000),
-            "block_key": "",
-            "candidate_count": self.catalog.manifest(name)["rows"],
-            "comparisons": 0,
-            "matches": self.catalog.column_sum(name, label_col) if label_col else 0,
-        }])
+        self.catalog.append_lineage(
+            name, self.run_id, int((time.time() - t0) * 1000),
+            matches=self.catalog.column_sum(name, label_col) if label_col else 0,
+        )
         return self.catalog.read(name)
 
     def _featurize(self, pairs: DataFrame, raw_a: DataFrame | None = None,
@@ -252,9 +246,9 @@ class ERPipeline:
                         train_matcher_local,
                     )
 
-                    # deterministic hash-sample cap (scaling_worker.py
-                    # recipe): the boundary estimate doesn't improve past
-                    # ~100k pairs. Positives ALWAYS pass — on label-scarce
+                    # deterministic hash-sample cap (cfg.train_sample_cap):
+                    # the boundary estimate doesn't improve past ~100k
+                    # pairs. Positives ALWAYS pass — on label-scarce
                     # corpora a label-blind sample can nearly erase them
                     # and degenerate the IRLS boundary — so the driver
                     # collect is bounded by n_positives + ~cap (ceil keeps

@@ -8,9 +8,10 @@ entrypoint.py:83-87). Here every stage output is an atomic table snapshot:
     <workdir>/<table>/snap-<n>/part-*.parquet + _MANIFEST.json
 
 The manifest is written LAST, so a snapshot is visible iff complete —
-the Iceberg-commit semantics on plain parquet. When an Iceberg catalog is
-on the classpath (not in this image; import-gated), ``SnapshotCatalog``
-delegates to ``df.writeTo(...)`` instead; the pipeline code is identical.
+the Iceberg-commit semantics on plain parquet. The API mirrors an Iceberg
+catalog's (``commit`` ↔ ``writeTo(...).createOrReplace()``, ``append`` ↔
+fast append, ``read(snapshot=)`` ↔ time travel); tests/test_iceberg_seam.py
+maps each method to its Iceberg counterpart.
 
 The manifest also records the snapshot's schema, which
 :meth:`SnapshotCatalog.read` passes to the parquet reader instead of
@@ -72,19 +73,6 @@ def _nullable(dtype):
         return {**dtype, "valueContainsNull": True, "keyType": _nullable(dtype["keyType"]),
                 "valueType": _nullable(dtype["valueType"])}
     return dtype
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg Spark runtime is actually loadable. NB: plain
-    ``spark._jvm.org.apache.iceberg.Table`` attribute access is NOT a probe —
-    py4j returns a JavaPackage stub for any dotted path without touching the
-    classpath (found by tests/test_iceberg_seam.py: the old form returned
-    True on a jar-less image). Class.forName forces a real load attempt."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class SnapshotCatalog:
@@ -343,14 +331,27 @@ class SnapshotCatalog:
             return json.load(f)
 
     # -- lineage -------------------------------------------------------------
-    def append_lineage(self, rows: list[dict]) -> None:
-        if not rows:
-            return
+    def append_lineage(self, stage: str, run_id: str, wall_ms: int = 0, *,
+                       matches: int = 0, comparisons: int = 0,
+                       candidate_count: int | None = None) -> None:
+        """Append the lineage row of the committed table ``stage``.
+        ``candidate_count`` defaults to the rows its manifest records."""
         import pandas as pd
 
+        if candidate_count is None:
+            candidate_count = self.manifest(stage)["rows"]
+        row = {
+            "stage": stage,
+            "run_id": run_id,
+            "wall_ms": wall_ms,
+            "block_key": "",
+            "candidate_count": candidate_count,
+            "comparisons": comparisons,
+            "matches": matches,
+        }
         d = self.root / "lineage"
         d.mkdir(parents=True, exist_ok=True)
-        pd.DataFrame(rows).to_parquet(d / f"part-{uuid.uuid4().hex}.parquet")
+        pd.DataFrame([row]).to_parquet(d / f"part-{uuid.uuid4().hex}.parquet")
 
     def lineage(self) -> DataFrame:
         d = self.root / "lineage"

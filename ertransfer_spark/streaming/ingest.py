@@ -108,20 +108,8 @@ def stream_to_catalog(
             return
         stage = f"{table}_batch_{batch_id:05d}"
         catalog.commit(stage, canonicalize(batch_df), meta={"batch_id": batch_id})
-        catalog.append_lineage(
-            [
-                {
-                    "stage": stage,
-                    "run_id": f"stream-{batch_id}",
-                    "wall_ms": 0,
-                    "block_key": "",
-                    # rows written, from the commit's manifest: no count() job
-                    "candidate_count": catalog.manifest(stage)["rows"],
-                    "comparisons": 0,
-                    "matches": 0,
-                }
-            ]
-        )
+        # rows written, from the commit's manifest: no count() job
+        catalog.append_lineage(stage, f"stream-{batch_id}")
 
     return _start(turns_stream, commit_batch, checkpoint_dir, trigger_available_now)
 
@@ -224,17 +212,10 @@ def incremental_dedup_stream(
         # rows each commit wrote, from its manifest: no count() jobs, and
         # the verify join runs once, in the commit
         catalog.append_lineage(
-            [
-                {
-                    "stage": stage,
-                    "run_id": f"stream-{batch_id}",
-                    "wall_ms": 0,
-                    "block_key": "",
-                    "candidate_count": catalog.manifest(corpus_table)["rows"],
-                    "comparisons": int(n_cand),
-                    "matches": catalog.manifest(stage)["rows"],
-                }
-            ]
+            stage, f"stream-{batch_id}",
+            candidate_count=catalog.manifest(corpus_table)["rows"],
+            comparisons=n_cand,
+            matches=catalog.manifest(stage)["rows"],
         )
 
     return _start(turns_stream, process_batch, checkpoint_dir, trigger_available_now)

@@ -15,7 +15,7 @@ salting and per-block budgets.
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -69,7 +69,6 @@ class SynthConfig:
     mega_conv_turns: int = 0         # if >0, make conv 0 this many turns
     head_fraction: float = 0.35      # P(word drawn from the hot head vocab)
     seed: int = 42
-    extra: dict = field(default_factory=dict)
 
 
 def _make_conv(rng: random.Random, conv_id: str, cfg: SynthConfig, hot: bool) -> list[dict]:

@@ -1,52 +1,35 @@
-"""One scaling-measurement run: the full ER pipeline (canonicalize →
-shingle blocking join → feature UDFs → logistic matcher → UMC clustering)
-at a given core count, on a deterministic synthetic corpus.
+"""One scaling-measurement run: one ``ERPipeline.run`` (canonicalize →
+shingle top-K blocking → feature UDFs → logistic matcher → UMC
+clustering, every stage committed to a snapshot catalog) at a given core
+count, on a deterministic synthetic corpus.
+
+Usage: python scripts/scaling_worker.py CPUS [N_CONV]
 
 Prints one JSON line {cpus, n_conv, turns, scored_pairs, wall_s,
-turns_per_sec, f1}. Invoked in a FRESH process per core count (a JVM's
-local[N] master is fixed at startup) by scripts/bench_scaling.py.
+turns_per_sec, pairs_per_sec, f1, stages}. Invoked in a FRESH process per
+core count (a JVM's local[N] master is fixed at startup) by
+scripts/bench_scaling.py.
 """
 
 from __future__ import annotations
 
 import json
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def main() -> None:
-    cpus = int(sys.argv[1])
-    n_conv = int(sys.argv[2]) if len(sys.argv) > 2 else 10000
-
-    from pyspark.sql import functions as F
-
-    from ertransfer_spark.operators.blocking import top_k_token_join
-    from ertransfer_spark.operators.canonicalize import canonicalize_sides
-    from ertransfer_spark.operators.clustering import (
-        best_threshold,
-        pairwise_metrics,
-        unique_mapping_clusters,
-    )
-    from ertransfer_spark.operators.labeling import (
-        attach_labels,
-        referential_filter,
-        stratified_split,
-    )
-    from ertransfer_spark.operators.matcher import (
-        attach_pair_text,
-        featurize,
-        score,
-        train_matcher_local,
-    )
-    from ertransfer_spark.session import get_spark
+def run(spark, n_conv: int) -> dict:
+    """Time one ``ERPipeline.run`` over ``n_conv`` synthetic conversations
+    (seed 42) on ``spark``; the catalog lives in a temp dir removed
+    afterwards."""
+    from ertransfer_spark.operators.canonicalize import canonicalize
+    from ertransfer_spark.plans.pipeline import ERPipeline, PipelineConfig
     from ertransfer_spark.synth import SynthConfig, generate_spark
 
-    import os
-    shuffle = int(os.environ.get("SHUFFLE_PARTS", max(cpus * 2, 64)))
-    spark = get_spark("scaling", cpus=cpus, shuffle_partitions=shuffle)
     # Input materialization is distributed (executor-side mapInPandas — no
     # driver Arrow ingest; identical rows at any parallelism, asserted in
     # tests/test_scaling_path.py) and happens BEFORE the timed window: the
@@ -59,101 +42,47 @@ def main() -> None:
     matches = matches.localCheckpoint()
     turns = sa.count() + sb.count()
 
-    stage_s: dict[str, float] = {}
-
-    def mark(name: str, t_prev: float) -> float:
-        now = time.time()
-        stage_s[name] = round(now - t_prev, 2)
-        return now
-
     # JVM warm-up, OUTSIDE the timed window: run the aggregation/shuffle
     # codegen paths once over a small slice so the first timed job does
     # not pay one-time JVM costs (JIT compilation, heap expansion to the
     # configured size) that a real deployment's long-running executors
     # never see. Measured: the first heavy shuffle job on a cold 48g JVM
     # drew 60-110 s at 480k/32c where the same job takes 13-17 s warm.
-    from ertransfer_spark.operators.canonicalize import canonicalize as _canon
+    canonicalize(sa.limit(150_000)).write.format("noop").mode("overwrite").save()
 
-    _canon(sa.limit(150_000)).write.format("noop").mode("overwrite").save()
+    # max_token_df=500 is the per-block comparison budget (the contract
+    # queries' df cap): head-vocabulary stop-shingles grow df about
+    # linearly with corpus size, so their join output grows quadratically;
+    # the cap bounds every block to <= 250k comparisons.
+    cfg = PipelineConfig(k=25, max_token_df=500)
+    with tempfile.TemporaryDirectory(prefix="scaling-") as workdir:
+        pipe = ERPipeline(spark, workdir, cfg)
+        t0 = time.time()
+        out = pipe.run(sa, sb, matches, resume=False)
+        wall = time.time() - t0
+        cat = pipe.catalog
+        n_pairs = cat.manifest("predictions")["rows"]
+        lin = cat.lineage().collect()
+        lin.sort(key=lambda r: cat.manifest(r["stage"])["committed_at"])
+    return {
+        "n_conv": n_conv,
+        "turns": turns,
+        "scored_pairs": n_pairs,
+        "wall_s": round(wall, 2),
+        "turns_per_sec": round(turns / wall, 1),
+        "pairs_per_sec": round(n_pairs / wall, 1),
+        "f1": round(out["metrics"]["f1"], 4),
+        "stages": {r["stage"]: round(r["wall_ms"] / 1000, 2) for r in lin},
+    }
 
-    t0 = time.time()
-    t = t0
-    # one union-tagged canonicalize action instead of two sequential
-    # eager per-side checkpoints: each per-side action ended in a
-    # straggler tail idling most of the wide leg (stage efficiency
-    # 0.37-0.43 measured); one job over 2x rows has one tail
-    ra, rb = canonicalize_sides(sa, sb)
-    t = mark("canonicalize", t)
-    golden = referential_filter(matches, ra, rb)
-    # blocking: top_k_token_join's built-in plan is the configuration
-    # measured variant-by-variant (results in BENCH.md): xxhash64 skinny
-    # (token, id) postings, salting only for output-explosive tokens
-    # (dfa*dfb > 64k), collect_list/slice top-K. The one knob:
-    # - max_token_df=500: the per-block comparison budget (same constant
-    #   as the contract queries' df cap) — head-vocabulary stop-shingles
-    #   grow df ~ linearly with corpus size, so their join output grows
-    #   QUADRATICALLY; the cap bounds every block to <=250k comparisons.
-    #   Inactive below ~240k convs; F1 is asserted >=0.99 regardless.
-    labeled = attach_labels(
-        top_k_token_join(
-            ra, rb, k=int(sys.argv[3]) if len(sys.argv) > 3 else 25,
-            tokens_col="shingle_set", max_token_df=500,
-        ),
-        golden,
-    ).localCheckpoint()
-    t = mark("blocking", t)
-    # train on a deterministic hash-sample CAPPED at ~100k pairs: the
-    # decision boundary is a statistical estimate whose sample size does
-    # not grow with the corpus (a proportional sample made train the
-    # scaling laggard — 212 s at 480k convs, efficiency 0.39, all of it
-    # featurizing 720k pairs the LR fit doesn't need). The scored-pair
-    # THROUGHPUT path below still featurizes and scores every candidate.
-    train_pairs = stratified_split(labeled)["train"]
-    n_train = train_pairs.count()
-    keep = max(1, n_train // 100_000)
-    train_pairs = train_pairs.filter(
-        F.pmod(F.xxhash64("a_id", "b_id", F.lit(999)), F.lit(keep)) == 0
-    )
-    # Featurization of the sample runs on executors; the IRLS solve runs
-    # on the driver over the collected ~100k x 7 float matrix (<1 s,
-    # deterministic) and the coefficients are broadcast as plan literals —
-    # vs Spark ML LBFGS whose maxIter tree-aggregate JOBS over the same
-    # bounded sample were a 30-200 s fixed floor (train stage efficiency
-    # 0.28-0.46 in every pre-fix run; decision-boundary parity with the
-    # ML fit is asserted in tests/test_scaling_path.py).
-    # truncate=256: ship only the feature-relevant prefix + original
-    # length through the pair joins — value-identical features (parity
-    # test in tests/test_matcher_zoo.py), several-fold fewer bytes on the
-    # pipeline's widest shuffle
-    model = train_matcher_local(
-        featurize(attach_pair_text(train_pairs, ra, rb, truncate=256))
-    )
-    t = mark("train", t)
-    preds = score(
-        model, featurize(attach_pair_text(labeled, ra, rb, truncate=256))
-    ).localCheckpoint()
-    n_pairs = preds.count()
-    t = mark("score", t)
-    accepted = unique_mapping_clusters(preds, best_threshold(preds))
-    metrics = pairwise_metrics(accepted, golden)
-    t = mark("cluster", t)
-    wall = time.time() - t0
 
-    print(
-        json.dumps(
-            {
-                "cpus": cpus,
-                "n_conv": n_conv,
-                "turns": turns,
-                "scored_pairs": n_pairs,
-                "wall_s": round(wall, 2),
-                "turns_per_sec": round(turns / wall, 1),
-                "pairs_per_sec": round(n_pairs / wall, 1),
-                "f1": round(metrics["f1"], 4),
-                "stages": stage_s,
-            }
-        )
-    )
+def main() -> None:
+    from ertransfer_spark.session import get_spark
+
+    cpus = int(sys.argv[1])
+    n_conv = int(sys.argv[2]) if len(sys.argv) > 2 else 10000
+    spark = get_spark("scaling", cpus=cpus, shuffle_partitions=max(cpus * 2, 64))
+    print(json.dumps({"cpus": cpus, **run(spark, n_conv)}))
     spark.stop()
 
 

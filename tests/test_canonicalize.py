@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from ertransfer_spark.operators.canonicalize import canonicalize, explode_turns
 from ertransfer_spark.oracle import pandas_oracle as oracle
@@ -29,48 +28,6 @@ def test_agvalue_matches_oracle(spark, spark_corpora, corpora):
     got = recs.sort_values("conv_id").reset_index(drop=True)
     want = want.sort_values("conv_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_canonicalize_sides_matches_per_side(spark, spark_corpora):
-    """The single-job union-tagged path (scaling pipeline) is row-identical
-    to two per-side canonicalize calls — including when the two sources
-    share raw conv_ids (the tag keeps groups side-local)."""
-    from ertransfer_spark.operators.canonicalize import canonicalize_sides
-
-    ta, tb = spark_corpora[0], spark_corpora[1]
-    # force an id collision: re-key B's rows onto A's id space
-    tb_clash = tb.withColumn(
-        "conv_id", F.regexp_replace("conv_id", "^b_", "a_")
-    )
-    for b_side in (tb, tb_clash):
-        ra, rb = canonicalize_sides(ta, b_side, checkpoint=False)
-        for got_df, want_df in ((ra, canonicalize(ta)), (rb, canonicalize(b_side))):
-            got = got_df.select("conv_id", "agValue", "n_tokens").toPandas()
-            want = want_df.select("conv_id", "agValue", "n_tokens").toPandas()
-            got = got.sort_values("conv_id").reset_index(drop=True)
-            want = want.sort_values("conv_id").reset_index(drop=True)
-            assert sorted(got_df.columns) == sorted(want_df.columns)
-            pd.testing.assert_frame_equal(got, want)
-
-
-def test_canonicalize_sides_width_guard(spark, spark_corpora):
-    """width = max(2 × shuffle partitions, union's input partitions): the
-    repartition never shrinks below the input's own parallelism (r3 verdict
-    residue — future-proofs AQE-coalesced sessions / very wide scans)."""
-    from ertransfer_spark.operators.canonicalize import canonicalize_sides
-
-    ta, tb = spark_corpora[0].coalesce(1), spark_corpora[1].coalesce(1)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # narrow input (union = 2 partitions): the 2x-shuffle term wins → 8
-        ra, _ = canonicalize_sides(ta, tb, checkpoint=True)
-        assert ra.rdd.getNumPartitions() == 8
-        # input wider than 2x shuffle width (union = 48): guard keeps 48
-        ra2, _ = canonicalize_sides(ta.repartition(24), tb.repartition(24), checkpoint=True)
-        assert ra2.rdd.getNumPartitions() == 48
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_empty_cleaning_turn_parity(spark):

@@ -74,10 +74,7 @@ def test_umc_equals_greedy_random(spark):
 def test_umc_converges_on_preference_chain(spark):
     """A strictly-decreasing preference chain accepts ONE edge per round
     (each round's mutual-best is only the global head of the remaining
-    chain) — the convergence-by-default loop must finish it completely,
-    and an explicit low max_rounds must warn and return a PARTIAL match."""
-    import warnings
-
+    chain) — the loop must finish it completely."""
     # path graph a0-b0-a1-b1-...: probs strictly decreasing along the path
     rows = []
     for i in range(12):
@@ -88,13 +85,6 @@ def test_umc_converges_on_preference_chain(spark):
     assert set(zip(got["a_id"], got["b_id"])) == set(zip(want["a_id"], want["b_id"]))
     # sequential greedy takes every (a_i, b_i) edge — 12 matches
     assert len(got) == 12
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        part = unique_mapping_clusters(
-            preds_df(spark, rows), threshold=0.1, max_rounds=2
-        ).toPandas()
-    assert len(part) == 2  # one edge accepted per round on a chain
-    assert any("max_rounds" in str(x.message) for x in w)
 
 
 def test_threshold_sweep_strict_gt_boundary(spark):

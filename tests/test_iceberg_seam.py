@@ -32,9 +32,16 @@ import pytest
 
 
 def _iceberg_on_classpath(spark) -> bool:
-    from ertransfer_spark.sources.catalog import _iceberg_available
-
-    return _iceberg_available(spark)
+    """True iff the Iceberg Spark runtime is actually loadable. Plain
+    ``spark._jvm.org.apache.iceberg.Table`` attribute access is NOT a probe:
+    py4j returns a JavaPackage stub for any dotted path without touching
+    the classpath, so it is True on a jar-less image. Class.forName forces
+    a real load attempt."""
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
+        return True
+    except Exception:
+        return False
 
 
 def test_real_iceberg_roundtrip(spark, tmp_path):

@@ -137,3 +137,25 @@ def test_local_fit_deterministic(spark):
     m1 = train_matcher_local(df, feature_cols=["f1", "f2"])
     m2 = train_matcher_local(df, feature_cols=["f1", "f2"])
     assert m1.weights == m2.weights and m1.intercept == m2.intercept
+
+
+def test_scaling_worker_runs_the_pipeline(spark):
+    """scripts/scaling_worker.py times one ERPipeline.run: its result has
+    every key scripts/bench_scaling.py reads, its stages are the
+    pipeline's lineage stages, and the run resolves the corpus."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "scripts" / "scaling_worker.py"
+    spec = importlib.util.spec_from_file_location("scaling_worker", path)
+    worker = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(worker)
+
+    res = worker.run(spark, 60)
+    assert {"wall_s", "turns_per_sec", "pairs_per_sec", "f1", "stages"} <= set(res)
+    assert list(res["stages"]) == [
+        "records_a", "records_b", "candidates", "labeled",
+        "predictions", "matched_pairs", "clusters",
+    ]
+    assert res["scored_pairs"] > 0
+    assert res["f1"] >= 0.99
