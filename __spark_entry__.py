@@ -268,64 +268,34 @@ def q_snm_blocking(spark, sf_dir):
 
 
 def q_threshold_sweep(spark, sf_dir):
-    """M4: single-pass F1 sweep over prob buckets (label = same lang)."""
-    # strict-> boundary parity with clustering.threshold_sweep: a sim_r
-    # exactly AT grid point i/100 is NOT predicted-positive at threshold
-    # i/100 (reference clusterers filter prob > t), so it buckets to i-1
-    bkt_f = F.floor(F.col("sim_r") * 100)
-    bkt = F.least(
-        F.when(F.col("sim_r") <= bkt_f / F.lit(100), bkt_f - 1).otherwise(bkt_f),
-        F.lit(99),
-    )
+    """M4: single-pass F1 sweep over prob buckets (label = same lang),
+    through the real operator (``clustering.threshold_sweep``): one row
+    per non-empty bucket, built from the operator's returned rows."""
+    from ertransfer_spark.operators.clustering import threshold_sweep
+
     s = _scored_pairs(spark, sf_dir).select(
-        bkt.cast("long").alias("bkt"),
-        F.expr(f"CASE WHEN {LABEL_EXPR} THEN 1 ELSE 0 END").alias("label"),
+        F.expr(f"CASE WHEN {LABEL_EXPR} THEN 1 ELSE 0 END").alias("label"), "sim_r"
     )
-    agg = s.groupBy("bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("label").cast("long").alias("pos"),
+    rows = [
+        (i, r["pred_n"], r["tp"], r["precision"], r["recall"], r["f1"])
+        for i, r in enumerate(threshold_sweep(s, prob_col="sim_r")) if r["n"]
+    ]
+    out = spark.createDataFrame(
+        rows, "bkt bigint, pred_n bigint, tp bigint, prec double, rec double, f1 double"
     )
-    # the ≤100-row bucket agg is referenced three times below (lhs,
-    # broadcast rhs, total); checkpoint it so the expensive _scored_pairs
-    # subtree is computed exactly once, not re-derived per branch if the
-    # optimizer misses exchange reuse
-    agg = agg.localCheckpoint()
-    # the cumulative sums run over ≤100 bucket rows (the threshold grid,
-    # not data rows). A global window here would move them to a single
-    # partition — correct but it spams the WindowExec no-partition warning
-    # on every run (partitionBy(lit(1)) doesn't help: Catalyst prunes
-    # foldable partition keys and the spec is empty again). Express the
-    # descending cumulative as a tiny ≥ self-join instead: same values,
-    # broadcast-sized, no warning to mask a real one.
-    rhs = agg.select(
-        F.col("bkt").alias("bkt2"), F.col("n").alias("n2"), F.col("pos").alias("pos2")
-    )
-    tot = agg.agg(F.sum("pos").alias("total_pos"))
-    out = (
-        agg.join(F.broadcast(rhs), F.col("bkt2") >= F.col("bkt"))
-        .groupBy("bkt", "n", "pos")
-        .agg(F.sum("n2").alias("pred_n"), F.sum("pos2").alias("tp"))
-        .crossJoin(F.broadcast(tot))
-    )
-    prec = F.col("tp") / F.col("pred_n")
-    rec = F.col("tp") / F.col("total_pos")
     return out.select(
-        "bkt",
-        F.col("pred_n").cast("long").alias("pred_n"),
-        F.col("tp").cast("long").alias("tp"),
-        F.round(prec, 6).alias("prec_r"),
-        F.round(rec, 6).alias("rec_r"),
-        F.round(F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0), 6).alias("f1_r"),
+        "bkt", "pred_n", "tp",
+        *[F.round(c, 6).alias(f"{c}_r") for c in ("prec", "rec", "f1")],
     )
 
 
 def q_stratified_split(spark, sf_dir):
-    """M3: deterministic label-stratified split via a portable Knuth
-    multiplicative hash on (a_id, b_id) — counts per (split, label)."""
-    h = (F.col("a_id") * F.lit(2654435761) + F.col("b_id") * F.lit(97)) % F.lit(4294967296)
-    bkt = h % 100
+    """M3: the seeded 60/20/20 split (``labeling.split_column``, the rule
+    ``stratified_split`` filters on) — counts per (split, label)."""
+    from ertransfer_spark.operators.labeling import split_column
+
     s = _scored_pairs(spark, sf_dir).select(
-        F.when(bkt < 60, "train").when(bkt < 80, "valid").otherwise("test").alias("split"),
+        split_column().alias("split"),
         F.expr(f"CASE WHEN {LABEL_EXPR} THEN 1 ELSE 0 END").cast("long").alias("label"),
     )
     return s.groupBy("split", "label").agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
@@ -880,7 +850,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from ertransfer_spark.functions.text import DUCKDB_NORM
+    from ertransfer_spark.functions.text import DUCKDB_NORM, duckdb_qgrams_sql
     from ertransfer_spark.functions.textstats import (
         QUALITY_DUCKDB,
         TOKEN_COUNTS_DUCKDB,
@@ -891,6 +861,7 @@ def oracle_sql() -> dict[str, str]:
         minhash_portable_duckdb_sql,
         simhash_duckdb_sql,
     )
+    from ertransfer_spark.operators.labeling import duckdb_split_sql
     from ertransfer_spark.operators.simsearch import (
         ivf_seeded_duckdb_sql,
         lsh_portable_duckdb_sql,
@@ -908,12 +879,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "qgram_profile": f"""
             WITH g AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     list_distinct(
-                       CASE WHEN length({norm}) < 3 THEN
-                         CASE WHEN length({norm}) > 0 THEN [{norm}] ELSE []::VARCHAR[] END
-                       ELSE list_transform(range(1, length({norm}) - 1), i -> substr({norm}, i, 3)) END
-                     ) AS q3
+              SELECT CAST(doc_id AS BIGINT) AS doc_id, {duckdb_qgrams_sql("text", q=3)} AS q3
               FROM documents
             )
             SELECT doc_id, CAST(len(q3) AS BIGINT) AS n_q3,
@@ -959,14 +925,13 @@ def oracle_sql() -> dict[str, str]:
                      max(CASE WHEN rare THEN 1 ELSE 0 END) AS has_rare
               FROM sa JOIN sb USING (g) GROUP BY a_id, b_id
             ), rk AS (
-              SELECT *, overlap / (a_sz + b_sz - overlap) AS sim,
-                row_number() OVER (PARTITION BY a_id ORDER BY overlap/(a_sz+b_sz-overlap) DESC, b_id) AS rka,
-                row_number() OVER (PARTITION BY b_id ORDER BY overlap/(a_sz+b_sz-overlap) DESC, a_id) AS rkb
+              SELECT *, round(overlap / (a_sz + b_sz - overlap), 6) AS sim_r,
+                row_number() OVER (PARTITION BY a_id ORDER BY round(overlap/(a_sz+b_sz-overlap), 6) DESC, b_id) AS rka,
+                row_number() OVER (PARTITION BY b_id ORDER BY round(overlap/(a_sz+b_sz-overlap), 6) DESC, a_id) AS rkb
               FROM pr
             )
             SELECT a_id, b_id, overlap,
-                   CAST(a_sz AS BIGINT) AS a_size, CAST(b_sz AS BIGINT) AS b_size,
-                   round(sim, 6) AS sim_r
+                   CAST(a_sz AS BIGINT) AS a_size, CAST(b_sz AS BIGINT) AS b_size, sim_r
             FROM rk WHERE rka <= 3 OR rkb <= 3 OR has_rare = 1
         """,
         "snm_blocking": f"""
@@ -1035,10 +1000,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "stratified_split": SQL_SCORED + f"""
             , lab AS (
-              SELECT CASE WHEN (a_id * 2654435761 + b_id * 97) % 4294967296 % 100 < 60 THEN 'train'
-                          WHEN (a_id * 2654435761 + b_id * 97) % 4294967296 % 100 < 80 THEN 'valid'
-                          ELSE 'test' END AS split,
-                     {label_int} AS label
+              SELECT {duckdb_split_sql()} AS split, {label_int} AS label
               FROM scored
             )
             SELECT split, label, CAST(count(*) AS BIGINT) AS n_pairs

@@ -15,8 +15,8 @@ codegen do not land on the first query timed.
 ``--reps N`` runs N timed passes and keeps each query's best time; the
 value is the sum of the bests, and ``"reps"`` in the result line says how
 many passes it took them from. If any query fails, the run prints no
-result line and exits non-zero. Run with SPARK_GRAFT_CPUS=8 and =32 on
-the same input to evidence the N→4N scaling rule (see BENCH.md).
+result line and exits non-zero. The N→4N scaling evidence comes from
+scripts/bench_scaling.py (see BENCH.md).
 
     SPARK_GRAFT_CPUS=4 python bench.py --reps 3
 """

@@ -13,8 +13,6 @@
   pure-Python ``jaro_winkler`` is the pinned spec it is tested against:
   standard Jaro, Winkler prefix ≤4, p=0.1, boost threshold 0.7 — matches
   DuckDB's jaro_winkler_similarity so the oracle can check it.
-- Dense cosine on array<float> embeddings (methods/embeddings/
-  get_similarity.py:4-10): native zip_with/aggregate expression.
 """
 
 from __future__ import annotations
@@ -92,26 +90,6 @@ def levenshtein_sim(a: Column, b: Column) -> Column:
     """1 - lev/maxlen, JVM built-in (methods/magellan feature analog)."""
     ml = F.greatest(F.length(a), F.length(b))
     return F.when(ml > 0, F.lit(1.0) - F.levenshtein(a, b) / ml.cast("double")).otherwise(F.lit(1.0))
-
-
-# --------------------------------------------------------------------------
-# Dense vector cosine — native expression over array<float/double>
-# --------------------------------------------------------------------------
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def cosine_dense(a: Column, b: Column) -> Column:
-    """Cosine over embedding arrays (parity: torch CosineSimilarity,
-    methods/embeddings/get_similarity.py:4-10). Double accumulation so the
-    DuckDB oracle (list_dot_product on DOUBLE[]) hash-matches."""
-    denom = F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
 # --------------------------------------------------------------------------

@@ -65,9 +65,9 @@ def top_k_token_join(
     (:func:`~ertransfer_spark.operators.overlap.overlap_pairs`: xxhash64
     skinny postings, the two-sided ``max_token_df`` cap, ``posting_budget``,
     hot-token salting). Keeps the K most-similar records under the chosen
-    set metric (jaccard/dice/cosine/overlap), deterministic tie-break
-    (sim DESC, other id ASC). Set semantics by default; ``multiset=True``
-    count-weights overlaps (pyJedAI ``_multiset`` parity).
+    set metric (jaccard/dice/cosine/overlap), deterministic order
+    (round(sim, 6) DESC, other id ASC). Set semantics by default;
+    ``multiset=True`` count-weights overlaps (pyJedAI ``_multiset`` parity).
 
     ``direction``: ``"fwd"`` keeps K per A-record; ``"rev"`` keeps K per
     B-record — J3 parity with the reference's build-side switch
@@ -115,17 +115,20 @@ def top_k_token_join(
     ranks = {"fwd": [("a_id", "b_id")], "rev": [("b_id", "a_id")],
              "union": [("a_id", "b_id"), ("b_id", "a_id")]}[direction]
 
+    # rank on the value the contract reports (6 dp) with the id tie-break,
+    # so a near-tie past the sixth decimal ranks the same in every engine
+    sim_r = F.round("sim", 6)
     if direction == "union" or keep_rare_df:
         keep = (F.col("_has_rare") == 1) if keep_rare_df else F.lit(False)
         for key, other in ranks:
-            w = Window.partitionBy(key).orderBy(F.desc("sim"), F.asc(other))
+            w = Window.partitionBy(key).orderBy(sim_r.desc(), F.asc(other))
             scored = scored.withColumn(f"_rk_{key}", F.row_number().over(w))
             keep = keep | (F.col(f"_rk_{key}") <= k)
         return scored.filter(keep).select(*out_cols)
 
     ((key, other),) = ranks
     item = F.struct(
-        (-F.col("sim")).alias("_ns"), *[F.col(c) for c in out_cols if c != key]
+        (-sim_r).alias("_ns"), *[F.col(c) for c in out_cols if c != key]
     )
     topped = scored.groupBy(key).agg(
         F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("_top")

@@ -146,8 +146,14 @@ def threshold_sweep(
     """F1/P/R for every threshold t = i/grid in ONE pass.
 
     Parity: clustering/Probabilities/clustering.py:70-102 runs the grid as
-    100 full rescans; here one bucketed groupBy + driver-side cumsum over
-    ``grid`` rows. Returns [{threshold, precision, recall, f1}, ...].
+    100 full rescans; here one bucketed groupBy (one collect of at most
+    ``grid + 1`` rows) + driver-side cumsum over ``grid`` rows.
+    Returns one row per grid point i: {threshold, precision, recall, f1,
+    n, pred_n, tp}, where ``n`` counts the rows of bucket i (prob in
+    (i/grid, (i+1)/grid]), ``pred_n`` the rows predicted positive at the
+    threshold and ``tp`` the positives among them. This is the one bucket
+    rule and the one cumulative sum: the ``threshold_sweep`` contract query
+    calls it.
 
     Boundary rule: predicted-positive at threshold t means ``prob > t``
     STRICTLY — the comparator the reference's clusterers apply
@@ -175,22 +181,19 @@ def threshold_sweep(
     out = []
     # predicted-positive at threshold t=i/grid = rows with prob > t = buckets >= i
     # (exact, not approximate: grid-point probs were shifted to bucket i-1 above)
-    cum_n = cum_p = 0
-    suffix = [(0, 0)] * (grid + 1)
+    pred_n = tp = 0
     for i in range(grid - 1, -1, -1):
         n, p = by_bkt.get(i, (0, 0))
-        cum_n += n
-        cum_p += p
-        suffix[i] = (cum_n, cum_p)
-    for i in range(grid):
-        pred_n, tp = suffix[i]
+        pred_n += n
+        tp += p
         prec = tp / pred_n if pred_n else 0.0
         rec = tp / total_pos if total_pos else 0.0
         f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-        out.append(
-            {"threshold": i / grid, "precision": prec, "recall": rec, "f1": f1}
-        )
-    return out
+        out.append({
+            "threshold": i / grid, "precision": prec, "recall": rec, "f1": f1,
+            "n": n, "pred_n": pred_n, "tp": tp,
+        })
+    return out[::-1]
 
 
 def best_threshold(predictions: DataFrame, **kw) -> float:

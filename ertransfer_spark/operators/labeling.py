@@ -6,15 +6,19 @@ Reference parity:
   null test (never a driver-side set()).
 - referential-integrity filter (P4): drop matches whose ids vanished,
   splitters/KNN-Join/splitter.py:167-170 → two left-semi joins.
-- stratified 60/20/20 split, label-stratified, seeded (M3):
-  splitters/KNN-Join/splitter.py:118-132 → deterministic hash-bucket
-  within label strata (no sampleBy: exact, reproducible, order-independent).
+- seeded 60/20/20 split (M3): splitters/KNN-Join/splitter.py:118-132 →
+  a deterministic hash bucket per pair (no sampleBy: reproducible and
+  order-independent). The bucket is the pinned polynomial hash
+  (``functions.text.poly_hash``) of the pair's string form, so the split
+  has an exact DuckDB twin (:func:`duckdb_split_sql`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ertransfer_spark.functions.text import DUCKDB_POLY_HASH_SQL, SPARK_POLY_HASH_SQL
 
 
 def attach_labels(
@@ -34,14 +38,9 @@ def attach_labels(
         F.col(b_col).alias("b_id"),
         F.lit(1).alias("label"),
     ).dropDuplicates(["a_id", "b_id"])
-    out = candidates.join(F.broadcast(m) if _small(m) else m, ["a_id", "b_id"], "left")
+    # matches tables are dim-sized in every reference dataset (69-22k rows)
+    out = candidates.join(F.broadcast(m), ["a_id", "b_id"], "left")
     return out.fillna({"label": 0})
-
-
-def _small(df: DataFrame) -> bool:
-    # matches tables are dim-sized in every reference dataset (69-22k rows);
-    # broadcast unless caller disabled it. Heuristic only — AQE corrects.
-    return True
 
 
 def referential_filter(matches: DataFrame, records_a: DataFrame, records_b: DataFrame,
@@ -54,30 +53,57 @@ def referential_filter(matches: DataFrame, records_a: DataFrame, records_b: Data
     return filtered.select(*matches.columns)
 
 
+def _split_case(bucket: str, weights: tuple) -> str:
+    t1 = int(weights[0] * 100)
+    t2 = t1 + int(weights[1] * 100)
+    return (
+        f"CASE WHEN {bucket} < {t1} THEN 'train' "
+        f"WHEN {bucket} < {t2} THEN 'valid' ELSE 'test' END"
+    )
+
+
+def split_column(
+    weights: tuple = (0.6, 0.2, 0.2), seed: int = 42, a_col: str = "a_id", b_col: str = "b_id"
+) -> Column:
+    """The split name (``train``/``valid``/``test``) of each pair.
+
+    Bucket = poly_hash(``"{a}|{b}|{seed}"``) mod 100 over the ids' string
+    form, so string and integer ids split alike and
+    :func:`duckdb_split_sql` is its exact DuckDB twin. The key string is
+    let-bound (one-element ``transform``) so the per-character hash fold
+    does not rebuild it per character."""
+    key = f"concat_ws('|', CAST(`{a_col}` AS STRING), CAST(`{b_col}` AS STRING), '{int(seed)}')"
+    h = SPARK_POLY_HASH_SQL.format(s="_k")
+    return F.expr(_split_case(f"transform(array({key}), _k -> {h})[0] % 100", weights))
+
+
+def duckdb_split_sql(
+    weights: tuple = (0.6, 0.2, 0.2), seed: int = 42, a_col: str = "a_id", b_col: str = "b_id"
+) -> str:
+    """DuckDB twin of :func:`split_column`."""
+    key = f"concat_ws('|', CAST({a_col} AS VARCHAR), CAST({b_col} AS VARCHAR), '{int(seed)}')"
+    return _split_case(f"({DUCKDB_POLY_HASH_SQL.format(s=key)}) % 100", weights)
+
+
 def stratified_split(
     labeled: DataFrame,
     weights: tuple = (0.6, 0.2, 0.2),
     seed: int = 42,
-    label_col: str = "label",
 ) -> dict[str, DataFrame]:
-    """Deterministic split → {'train','valid','test'}.
+    """Deterministic split → {'train','valid','test'}, filtered on
+    :func:`split_column`.
 
-    Bucket = xxhash64(a_id, b_id, seed) mod 100 — exact same rows every
-    run regardless of partitioning or input order (unlike randomSplit),
-    disjoint by construction. The hash is label-independent, so per-label
-    fractions match the weights in expectation (binomial concentration);
-    for the EXACTLY label-stratified variant (reference
-    train_test_split(stratify=...) parity) see
+    The same rows land in each split every run, regardless of partitioning
+    or input order (unlike randomSplit), and the splits are disjoint by
+    construction. The split ignores labels: per-label fractions match the
+    weights only in expectation. For an exactly label-stratified split
+    (the reference's train_test_split(stratify=...)) see
     clustering.tune_threshold_runs, which ranks within each label stratum.
     """
-    b = F.pmod(F.xxhash64("a_id", "b_id", F.lit(seed)), F.lit(100))
-    t1 = int(weights[0] * 100)
-    t2 = t1 + int(weights[1] * 100)
-    with_bucket = labeled.withColumn("_bkt", b)
+    with_split = labeled.withColumn("_split", split_column(weights, seed))
     return {
-        "train": with_bucket.filter(F.col("_bkt") < t1).drop("_bkt"),
-        "valid": with_bucket.filter((F.col("_bkt") >= t1) & (F.col("_bkt") < t2)).drop("_bkt"),
-        "test": with_bucket.filter(F.col("_bkt") >= t2).drop("_bkt"),
+        name: with_split.filter(F.col("_split") == name).drop("_split")
+        for name in ("train", "valid", "test")
     }
 
 

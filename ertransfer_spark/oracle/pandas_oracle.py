@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import re
 from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 
@@ -55,8 +56,14 @@ def jaccard(a: frozenset, b: frozenset) -> float:
     return inter / union if union else 0.0
 
 
+def round6(x: float) -> float:
+    """Spark's ``round(x, 6)``: HALF_UP on the shortest decimal form."""
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
 def top_k_join(recs_a: pd.DataFrame, recs_b: pd.DataFrame, k: int, min_sim: float = 0.0) -> pd.DataFrame:
-    """Brute-force jaccard top-K per A record, tie-break (sim desc, b_id asc)."""
+    """Brute-force jaccard top-K per A record, ranked (round(sim, 6) desc,
+    b_id asc)."""
     out = []
     b_list = list(recs_b[["conv_id", "token_set"]].itertuples(index=False))
     for a in recs_a.itertuples(index=False):
@@ -65,7 +72,7 @@ def top_k_join(recs_a: pd.DataFrame, recs_b: pd.DataFrame, k: int, min_sim: floa
             s = jaccard(a.token_set, b_toks)
             if s > 0 and s >= min_sim:
                 sims.append((s, b_id))
-        sims.sort(key=lambda x: (-x[0], x[1]))
+        sims.sort(key=lambda x: (-round6(x[0]), x[1]))
         for s, b_id in sims[:k]:
             out.append({"a_id": a.conv_id, "b_id": b_id, "sim": s})
     return pd.DataFrame(out, columns=["a_id", "b_id", "sim"])
@@ -136,27 +143,3 @@ def connected_components(pairs: pd.DataFrame) -> dict:
             out[m] = label
     return out
 
-
-def pairwise_f1(accepted: pd.DataFrame, golden: pd.DataFrame) -> dict:
-    acc = set(zip(accepted["a_id"], accepted["b_id"]))
-    gold = set(zip(golden.iloc[:, 0], golden.iloc[:, 1]))
-    tp = len(acc & gold)
-    prec = tp / len(acc) if acc else 0.0
-    rec = tp / len(gold) if gold else 0.0
-    f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-    return {"precision": prec, "recall": rec, "f1": f1, "tp": tp}
-
-
-def cluster_pairs(assignment: dict) -> set:
-    """Cluster assignment → implied set of cross-source matched pairs
-    (for cluster-level pairwise F1)."""
-    by_label = defaultdict(lambda: ([], []))
-    for node, label in assignment.items():
-        side, raw = node.split("#", 1)
-        by_label[label][0 if side == "a" else 1].append(raw)
-    pairs = set()
-    for a_ids, b_ids in by_label.values():
-        for a in a_ids:
-            for b in b_ids:
-                pairs.add((a, b))
-    return pairs

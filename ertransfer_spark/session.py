@@ -33,14 +33,11 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
     master: str | None = None,
 ) -> SparkSession:
-    """``master`` (or env SPARK_GRAFT_MASTER) overrides the default
-    local[n] — e.g. ``local-cluster[4,8,10240]`` runs 4 real executor
-    JVMs with their own heaps (the in-sandbox analog of a 4-executor
-    cluster; used by scripts/bench_scaling.py mode=cluster). Under
-    spark-submit the submitted master/pyFiles win over builder confs."""
+    """``master`` overrides the default local[n]. Under spark-submit the
+    submitted master wins over builder confs."""
     n = cpus or default_parallelism()
     shuffle = shuffle_partitions or max(n, 8)
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{n}]"
+    master = master or f"local[{n}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -54,9 +51,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # ignored under local[n] (one JVM); under local-cluster it must fit
-        # the per-worker allowance in the master string
-        .config("spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")

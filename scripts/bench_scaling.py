@@ -1,167 +1,102 @@
-"""Two-cluster-size scaling evidence (north rule: throughput scaling
-efficiency ≥ 0.8 from N to 4N executors).
+"""N→4N-core scaling evidence (north rule: throughput scaling efficiency
+≥ 0.8 from N to 4N executors).
 
-No real cluster exists in this sandbox, so per the driver's instruction the
-same job runs at two parallelism levels — local[8] and local[32] — on the
-same deterministic input, in fresh processes (fresh JVM each, since a
-local[N] master is fixed at session start). Efficiency =
-(T_32 / T_8) / (32 / 8). Results are appended to BENCH.md.
+The same ``ERPipeline`` run (scripts/scaling_worker.py) goes at two core
+budgets derived from the box: N = nproc // 4 and 4N. Each leg runs in a
+fresh process (a JVM's local[N] master is fixed at start-up) pinned with
+``taskset`` to its first N or 4N usable cores, because local[N] on a bigger box
+still lets GC, shuffle IO and Python workers use every core. The driver
+heap scales with the core budget (1.5 g/core, at least 8 g): 4N executors
+bring 4× the memory of N. Efficiency = (throughput_4N / throughput_N) / 4,
+appended to BENCH.md.
 
-Usage: python scripts/bench_scaling.py [n_conv] [n_runs] [mode]
+On one box both legs share the memory bus and the fixed per-job latency,
+so the efficiency is a lower bound on what N and 4N executors would give.
 
-Modes (each leg is taskset-pinned to its core budget and runs in a fresh
-process; efficiency = (T_4N / T_N) / 4):
+Usage: python scripts/bench_scaling.py [n_conv] [n_runs]
 
-- ``local``  (default): local[8] vs local[32] — one shared JVM per leg.
-- ``cluster``: 2 vs 8 REAL executor JVMs (local-cluster[k,4,mem], launched
-  via ``spark-submit --py-files`` exactly as the north rule prescribes) —
-  per-executor heaps/GC/python-daemons, shuffle over the block-transfer
-  service. The closest in-sandbox analog of N vs 4N executors.
-- ``small``: local[2] vs local[8] — both legs far below the box's memory
-  bandwidth ceiling, matching a real cluster where every 4 cores bring
-  their own memory bus (the 8→32 comparison saturates the shared bus at
-  the 32 leg, understating the software's scalability).
+Exits non-zero when the box has fewer than 4 cores.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil as _sh
 import subprocess
 import sys
-import zipfile
 from datetime import datetime, timezone
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
-MODES = {
-    # mode: (legs = [(cpus, master|None, submit)], label per leg)
-    "local": [(8, None, False), (32, None, False)],
-    "small": [(2, None, False), (8, None, False)],
-    "cluster": [
-        (8, "local-cluster[2,4,12288]", True),
-        (32, "local-cluster[8,4,12288]", True),
-    ],
-}
 
-
-def _pyfiles_zip() -> str:
-    """Package ertransfer_spark for --py-files (executors in local-cluster
-    mode run their python workers from the shipped zip, like a real
-    ``spark-submit --py-files`` deployment)."""
-    zpath = "/tmp/ertransfer_spark_pyfiles.zip"
-    pkg = REPO / "ertransfer_spark"
-    with zipfile.ZipFile(zpath, "w") as z:
-        for p in sorted(pkg.rglob("*.py")):
-            z.write(p, f"ertransfer_spark/{p.relative_to(pkg)}")
-    return zpath
-
-
-def run_once(cpus: int, n_conv: int, master: str | None, submit: bool) -> dict:
-    """One leg, pinned to ``cpus`` PHYSICAL cores with taskset: local[N] on
-    an unrestricted 32-core box is not an N-core machine (GC, shuffle IO,
-    Arrow and Python workers use every core regardless of task slots), so
-    the honest proxy for an N-executor vs 4N-executor cluster is an
-    N-core vs 4N-core CPU envelope."""
-    worker = str(REPO / "scripts" / "scaling_worker.py")
-    env = dict(os.environ)
-    if submit:
-        # multi-JVM: per-executor 8g heaps (the master string caps each
-        # worker at 10g); the driver only generates the corpus + runs LBFGS
-        spark_home = os.environ.get("SPARK_HOME", "/opt/spark")
-        env["SPARK_GRAFT_MASTER"] = master or ""
-        env["SPARK_EXECUTOR_MEM"] = "10g"
-        cmd = [
-            f"{spark_home}/bin/spark-submit",
-            "--driver-memory", "16g",
-            "--py-files", _pyfiles_zip(),
-            worker, str(cpus), str(n_conv),
-        ]
-    else:
-        # Heap scales WITH the core budget (1.5 g/core: 8c→12g, 32c→48g;
-        # override with HEAP_MODE=fixed for the old equal-48g behavior).
-        # Rationale: the quantity being proxied is N vs 4N EXECUTORS, and
-        # going 4N multiplies total cluster memory 4× at CONSTANT
-        # per-executor heap — an equal heap for both legs silently hands
-        # the small "cluster" 4× the per-executor memory of the large one
-        # (less GC pressure per task, bigger page-cache share), flattering
-        # the slow leg. 1.5 g/core = 6 g per 4-core executor-equivalent,
-        # matching the 10-12 g executors of the cluster-mode legs. (48g at
-        # 32c was itself measured: 13% end-to-end win vs 24g — GC-bound at
-        # 32 task threads in one JVM.)
-        if os.environ.get("HEAP_MODE", "percore") == "fixed":
-            env["SPARK_DRIVER_MEM"] = "48g"
-        else:
-            env["SPARK_DRIVER_MEM"] = f"{max(int(cpus * 1.5), 8)}g"
-        if master:
-            env["SPARK_GRAFT_MASTER"] = master
-        cmd = [sys.executable, worker, str(cpus), str(n_conv)]
-    if _sh.which("taskset"):
-        cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+def run_once(cpus: int, n_conv: int) -> dict:
+    """One leg: the worker in a fresh process pinned to the first ``cpus``
+    cores this process may run on."""
+    env = dict(os.environ, SPARK_DRIVER_MEM=f"{max(int(cpus * 1.5), 8)}g")
+    cores = ",".join(map(str, sorted(os.sched_getaffinity(0))[:cpus]))
+    cmd = [
+        "taskset", "-c", cores,
+        sys.executable, str(REPO / "scripts" / "scaling_worker.py"), str(cpus), str(n_conv),
+    ]
     out = subprocess.run(
-        cmd,
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=str(REPO),
-        timeout=9000,
-        env=env,
+        cmd, capture_output=True, text=True, check=True, cwd=str(REPO), timeout=9000, env=env,
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
-def main() -> None:
+def main() -> int:
     n_conv = int(sys.argv[1]) if len(sys.argv) > 1 else 120000
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    mode = sys.argv[3] if len(sys.argv) > 3 else "local"
-    legs = MODES[mode]
-    (c_lo, m_lo, s_lo), (c_hi, m_hi, s_hi) = legs
-    lbl_lo = m_lo or f"local[{c_lo}]"
-    lbl_hi = m_hi or f"local[{c_hi}]"
+    nproc = len(os.sched_getaffinity(0))
+    if nproc < 4:
+        print(f"bench_scaling: needs at least 4 usable cores for an N→4N pair, found {nproc}",
+              file=sys.stderr)
+        return 1
+    c_lo = nproc // 4
+    c_hi = 4 * c_lo
 
     results: dict[int, list[dict]] = {c_lo: [], c_hi: []}
     for _ in range(n_runs):
-        for cpus, master, submit in legs:
-            r = run_once(cpus, n_conv, master, submit)
+        for cpus in (c_lo, c_hi):
+            r = run_once(cpus, n_conv)
             results[cpus].append(r)
             print(json.dumps(r))
 
-    best8 = max(results[c_lo], key=lambda r: r["turns_per_sec"])
-    best32 = max(results[c_hi], key=lambda r: r["turns_per_sec"])
-    eff = (best32["turns_per_sec"] / best8["turns_per_sec"]) / (c_hi / c_lo)
+    lo = max(results[c_lo], key=lambda r: r["turns_per_sec"])
+    hi = max(results[c_hi], key=lambda r: r["turns_per_sec"])
+    eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / (c_hi / c_lo)
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
 
     block = f"""
-## Scaling run {stamp} (n_conv={n_conv}, best of {n_runs}, mode={mode})
+## Scaling run {stamp} (n_conv={n_conv}, best of {n_runs}, nproc={nproc})
 
 | parallelism | wall s | turns/sec | scored pairs/sec | F1 |
 | --- | --- | --- | --- | --- |
-| {lbl_lo}  | {best8['wall_s']} | {best8['turns_per_sec']} | {best8['pairs_per_sec']} | {best8['f1']} |
-| {lbl_hi} | {best32['wall_s']} | {best32['turns_per_sec']} | {best32['pairs_per_sec']} | {best32['f1']} |
+| local[{c_lo}] | {lo['wall_s']} | {lo['turns_per_sec']} | {lo['pairs_per_sec']} | {lo['f1']} |
+| local[{c_hi}] | {hi['wall_s']} | {hi['turns_per_sec']} | {hi['pairs_per_sec']} | {hi['f1']} |
 
-**Scaling efficiency (N={c_lo} → 4N={c_hi} cores): {eff:.3f}** (target ≥ 0.8;
-same input, same code path, fresh process per level — the in-sandbox proxy
-for N vs 4N executors mandated by the driver instructions{'; REAL executor '
-'JVMs via spark-submit --py-files + local-cluster' if s_lo else ''}).
+**Scaling efficiency (N={c_lo} → 4N={c_hi} cores): {eff:.3f}, a lower bound**
+(target ≥ 0.8; same input and code path, a fresh taskset-pinned process
+per leg; both legs share one box's memory bus and per-job latency).
 """
-    s8, s32 = best8.get("stages", {}), best32.get("stages", {})
-    if s8 and s32:
+    s_lo, s_hi = lo.get("stages", {}), hi.get("stages", {})
+    if s_lo and s_hi:
         block += "\nPer-stage decomposition (wall s, best runs):\n\n"
-        block += f"| stage | {lbl_lo} | {lbl_hi} | speedup | efficiency |\n"
+        block += f"| stage | local[{c_lo}] | local[{c_hi}] | speedup | efficiency |\n"
         block += "| --- | --- | --- | --- | --- |\n"
-        for st in s8:
-            t8, t32 = s8[st], s32.get(st, 0.0)
-            if t32 > 0:
-                block += f"| {st} | {t8} | {t32} | {t8 / t32:.2f}x | {t8 / t32 / 4:.2f} |\n"
+        for st, t_lo in s_lo.items():
+            t_hi = s_hi.get(st, 0.0)
+            if t_hi > 0:
+                block += f"| {st} | {t_lo} | {t_hi} | {t_lo / t_hi:.2f}x | {t_lo / t_hi / 4:.2f} |\n"
     bench_md = REPO / "BENCH.md"
     header = "# BENCH — throughput & two-cluster-size scaling evidence\n"
     prev = bench_md.read_text() if bench_md.exists() else header
     bench_md.write_text(prev + block)
     print(f"efficiency={eff:.3f} → appended to BENCH.md")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

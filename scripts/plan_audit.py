@@ -66,10 +66,6 @@ ALLOW = {
     # the events table), broadcast-nested-loop-joined back. O(1) rows.
     ("kl_association", "BroadcastNestedLoopJoin"): "1-row global-distribution frame",
     ("kl_divergence", "BroadcastNestedLoopJoin"): "1-row totals frame",
-    # threshold sweeps join the ≤100-row bucket grid to itself with a >=
-    # condition (the windowless cumulative-sum form — see CLAUDE.md).
-    ("threshold_sweep", "BroadcastNestedLoopJoin"):
-        "≤100-row bucket-grid >= self-join + 1-row totals crossJoin",
     ("tokenize_stats", "BroadcastNestedLoopJoin"): "1-row corpus-totals frame",
     ("tfidf_pair_cosine", "BroadcastNestedLoopJoin"): "1-row corpus-count frame",
     # IVF joins every vector against the BROADCAST n_lists-row centroid
@@ -268,7 +264,7 @@ def main() -> None:
         f"{len(results)} queries audited, **{len(bad)} hard failures**.",
         "",
         "Hard checks: no `CartesianProduct`/`BroadcastNestedLoopJoin` outside the",
-        "justified allowlist (broadcast 1-row totals / ≤100-row grids / n_lists-row",
+        "justified allowlist (broadcast 1-row totals / n_lists-row",
         "centroid tables); and, in the plan of the query or of any frame it",
         "checkpoints while built, no `BatchEvalPython` (all Python is Arrow-batched)",
         "and no loop-invariant tokenizer (`split(lower(…))`) inside a lambda body.",

@@ -173,6 +173,28 @@ def test_keep_rare_df_passthrough(spark):
     assert ("a1", "b9") in rev
 
 
+def test_topk_ranks_on_the_rounded_sim(spark):
+    """Two candidates whose Jaccard values differ only past the sixth
+    decimal tie on round(sim, 6), so the lower id wins, in the
+    collect_list form and the window form (a rare-token call, whose
+    threshold no shared token meets) alike."""
+    a = [f"t{i}" for i in range(2000)]
+    ra = spark.createDataFrame([("a1", a)], "conv_id string, token_set array<string>")
+    rb = spark.createDataFrame(
+        [
+            # 999/2998 = 0.33322215 → 0.333222
+            ("b1", a[:999] + [f"u{i}" for i in range(998)]),
+            # 1000/3001 = 0.33322226 → 0.333222: higher unrounded, higher id
+            ("b2", a[:1000] + [f"v{i}" for i in range(1001)]),
+        ],
+        "conv_id string, token_set array<string>",
+    )
+    for kw in ({}, {"keep_rare_df": 1}):
+        got = top_k_token_join(ra, rb, k=1, metric="jaccard", **kw).collect()
+        assert [(r.a_id, r.b_id) for r in got] == [("a1", "b1")], kw
+        assert got[0].sim == 999 / 2998
+
+
 def test_token_jaccard_join_dense_equals_sparse(spark):
     """token_jaccard_join's two kernels (rectangular dense block-matmul vs
     the sparse posting equi-join) must return the IDENTICAL scored pair

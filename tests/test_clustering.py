@@ -7,7 +7,7 @@ import random
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ertransfer_spark.operators.clustering import (
@@ -171,6 +171,40 @@ def test_threshold_sweep_single_pass_matches_bruteforce(spark):
         assert abs(sweep[t_idx]["recall"] - rec) < 1e-9
     bt = best_threshold(df)
     assert 0.0 <= bt < 1.0
+
+
+_prob = st.one_of(st.sampled_from([i / 100 for i in range(101)]), st.floats(0.0, 1.0))
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(
+    rows=st.lists(st.tuples(_prob, st.integers(0, 1)), min_size=1, max_size=40),
+    same=st.sampled_from([None, 0, 1]),
+)
+@example(rows=[(0.0, 1), (1.0, 0), (0.5, 1)], same=None)
+@example(rows=[(0.0, 0), (0.01, 0), (1.0, 0)], same=0)
+def test_threshold_sweep_equals_bruteforce_strict_count(spark, rows, same):
+    """Every grid point of the sweep equals a brute-force strict prob > t
+    count: grid-exact probs, 0.0 and 1.0 included, and inputs where every
+    row has one label (``same``)."""
+    if same is not None:
+        rows = [(p, same) for p, _ in rows]
+    df = spark.createDataFrame(rows, "prob_class1 double, label int")
+    sweep = threshold_sweep(df)
+    assert len(sweep) == 100
+    total_pos = sum(lab for _, lab in rows)
+    prev_pred_n = 0
+    for i in range(99, -1, -1):
+        t = i / 100
+        pred = [lab for p, lab in rows if p > t]
+        tp, pred_n = sum(pred), len(pred)
+        prec = tp / pred_n if pred_n else 0.0
+        rec = tp / total_pos if total_pos else 0.0
+        f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+        want = {"threshold": t, "precision": prec, "recall": rec, "f1": f1,
+                "n": pred_n - prev_pred_n, "pred_n": pred_n, "tp": tp}
+        assert sweep[i] == want, (i, sweep[i], want)
+        prev_pred_n = pred_n
 
 
 def test_pairwise_metrics(spark):

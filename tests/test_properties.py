@@ -1,6 +1,6 @@
 """Property tests (SURVEY §5e): permutation invariance of input row order,
-determinism of every seeded operator, the word-shingle templates against
-their DuckDB twins and a Python spec, the set-overlap kernel's
+determinism of every seeded operator, the word-shingle templates and the
+train/valid/test split against their DuckDB twins and a Python spec, the set-overlap kernel's
 dense-equals-sparse and top-K-equals-oracle invariants, MinHash-LSH
 against the exact-Jaccard spec, the MinHash and hyperplane-LSH key
 kernels against their pure-Python specs, and the exact vector sweeps
@@ -16,6 +16,8 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from ertransfer_spark.oracle.pandas_oracle import round6
 
 
 def _pairs(df):
@@ -38,7 +40,18 @@ def test_blocking_permutation_invariance(spark, spark_corpora):
     assert base == shuf
 
 
+def _split_spec(a, b, seed=42, weights=(0.6, 0.2, 0.2)) -> str:
+    """The split rule from the pinned polynomial hash's Python spec."""
+    from ertransfer_spark.functions.text import poly_hash
+
+    bucket = poly_hash(f"{a}|{b}|{seed}") % 100
+    t1 = int(weights[0] * 100)
+    return "train" if bucket < t1 else "valid" if bucket < t1 + int(weights[1] * 100) else "test"
+
+
 def test_split_permutation_invariance(spark, spark_corpora):
+    """Every partitioning and row order of the candidates gives the same
+    three disjoint splits, and each pair sits where the spec puts it."""
     from ertransfer_spark.operators.blocking import top_k_token_join
     from ertransfer_spark.operators.canonicalize import canonicalize
     from ertransfer_spark.operators.labeling import stratified_split
@@ -46,13 +59,50 @@ def test_split_permutation_invariance(spark, spark_corpora):
     ta, tb, m = spark_corpora
     cand = top_k_token_join(canonicalize(ta), canonicalize(tb), k=3).withColumn(
         "label", F.lit(0)
-    )
-    s1 = stratified_split(cand)
-    s2 = stratified_split(cand.repartition(11).orderBy(F.rand(5)))
-    for name in ("train", "valid", "test"):
-        a = sorted((r["a_id"], r["b_id"]) for r in s1[name].collect())
-        b = sorted((r["a_id"], r["b_id"]) for r in s2[name].collect())
-        assert a == b, name
+    ).localCheckpoint()
+    want = {}
+    for r in cand.collect():
+        want.setdefault(_split_spec(r["a_id"], r["b_id"]), []).append((r["a_id"], r["b_id"]))
+    for shuffled in (cand, cand.repartition(11).orderBy(F.rand(5)), cand.coalesce(1)):
+        split = stratified_split(shuffled)
+        for name in ("train", "valid", "test"):
+            got = sorted((r["a_id"], r["b_id"]) for r in split[name].collect())
+            assert got == sorted(want.get(name, [])), name
+
+
+_bigint_id = st.one_of(
+    st.sampled_from([0, -1, 2**63 - 1, -(2**63)]), st.integers(-(2**63), 2**63 - 1)
+)
+_string_id = st.text(st.characters(blacklist_categories=("Cs", "Cc")), max_size=10)
+
+
+@settings(max_examples=10, deadline=None, derandomize=True)
+@given(
+    ids=st.one_of(
+        st.lists(st.tuples(_bigint_id, _bigint_id), min_size=1, max_size=30),
+        st.lists(st.tuples(_string_id, _string_id), min_size=1, max_size=30),
+    ),
+    seed=st.integers(0, 10**6),
+    weights=st.sampled_from([(0.6, 0.2, 0.2), (0.75, 0.25, 0.0)]),
+)
+@example(ids=[(0, 0), (-5, 2**63 - 1), (2**63 - 1, -(2**63))], seed=42, weights=(0.6, 0.2, 0.2))
+def test_split_column_equals_spec_and_duckdb(spark, ids, seed, weights):
+    """labeling.split_column equals its poly_hash spec and its DuckDB twin
+    on BIGINT ids (0, negative, 2^63-1) and on unicode string ids."""
+    import duckdb
+    import pandas as pd
+
+    from ertransfer_spark.operators.labeling import duckdb_split_sql, split_column
+
+    kind = "bigint" if isinstance(ids[0][0], int) else "string"
+    rows = [(i, a, b) for i, (a, b) in enumerate(ids)]
+    df = spark.createDataFrame(rows, f"i int, a_id {kind}, b_id {kind}")
+    got = [r[0] for r in df.orderBy("i").select(split_column(weights, seed)).collect()]
+    want = [_split_spec(a, b, seed, weights) for a, b in ids]
+    assert got == want
+    pdf = pd.DataFrame(rows, columns=["i", "a_id", "b_id"])
+    duck = duckdb.sql(f"SELECT {duckdb_split_sql(weights, seed)} FROM pdf ORDER BY i").fetchall()
+    assert [r[0] for r in duck] == want
 
 
 def test_umc_deterministic_across_runs(spark, spark_corpora):
@@ -248,11 +298,6 @@ def test_overlap_kernel_dense_equals_sparse_triangular(spark, docs, t, cap):
     assert all(r[0] < r[1] for r in dense)
 
 
-def _round6(x: float) -> float:
-    """Spark's round(x, 6) for a double: HALF_UP on its shortest decimal."""
-    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
-
-
 @settings(max_examples=5, deadline=None, derandomize=True)
 @given(
     docs=_corpus,
@@ -276,7 +321,7 @@ def test_minhash_pairs_equal_exact_jaccard_spec(spark, docs, t, banding):
         assert a < b
         sa, sb = set(docs[a]), set(docs[b])
         j = len(sa & sb) / len(sa | sb)
-        assert _round6(j) >= t and abs(sim - j) < 1e-12, (a, b, sim, j)
+        assert round6(j) >= t and abs(sim - j) < 1e-12, (a, b, sim, j)
     same = {(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))
             if set(docs[a]) == set(docs[b])}
     assert same <= set(ids)
