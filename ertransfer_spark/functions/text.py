@@ -179,13 +179,14 @@ DUCKDB_TRIGRAMS_SQL = (
 # th(s) = fold over the chars of s of (h*31 + ascii(c)) mod 2^31-1, seed 7.
 # Integer arithmetic only, so Spark, DuckDB and Python agree bit-for-bit:
 # the portable MinHash, SimHash, document fingerprints, the seeded IVF cells
-# and the portable LSH planes all hash with it. Spark's sequence(1, 0) is
-# descending, so its template guards '' (→ 7, as DuckDB's empty fold gives).
+# and the portable LSH planes all hash with it, and so does the train/valid/
+# test split. Spark folds over split(s, ''), one element per code point (a
+# third cheaper than indexing each one with substring); split('', '') is
+# [''], so its template guards '' (→ 7, as DuckDB's empty fold gives).
 POLY_HASH_MOD = 2147483647
 SPARK_POLY_HASH_SQL = (
     "case when length({s}) = 0 then 7L else "
-    "aggregate(sequence(1, length({s})), 7L, "
-    f"(h, i) -> (h * 31 + ascii(substring({{s}}, i, 1))) % {POLY_HASH_MOD}L) end"
+    f"aggregate(split({{s}}, ''), 7L, (h, c) -> (h * 31 + ascii(c)) % {POLY_HASH_MOD}L) end"
 )
 DUCKDB_POLY_HASH_SQL = (
     "list_reduce(list_prepend(CAST(7 AS BIGINT), "

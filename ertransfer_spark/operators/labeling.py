@@ -62,26 +62,25 @@ def _split_case(bucket: str, weights: tuple) -> str:
     )
 
 
-def split_column(
-    weights: tuple = (0.6, 0.2, 0.2), seed: int = 42, a_col: str = "a_id", b_col: str = "b_id"
-) -> Column:
-    """The split name (``train``/``valid``/``test``) of each pair.
+def split_column(weights: tuple = (0.6, 0.2, 0.2), seed: int = 42) -> Column:
+    """The split name (``train``/``valid``/``test``) of each ``(a_id, b_id)``
+    pair.
 
-    Bucket = poly_hash(``"{a}|{b}|{seed}"``) mod 100 over the ids' string
-    form, so string and integer ids split alike and
+    Bucket = poly_hash(``"{a_id}|{b_id}|{seed}"``) mod 100 over the ids'
+    string form, so string and integer ids split alike and
     :func:`duckdb_split_sql` is its exact DuckDB twin. The key string is
     let-bound (one-element ``transform``) so the per-character hash fold
-    does not rebuild it per character."""
-    key = f"concat_ws('|', CAST(`{a_col}` AS STRING), CAST(`{b_col}` AS STRING), '{int(seed)}')"
+    does not rebuild it per character. The fold is an interpreted lambda:
+    per pair it costs several times the native ``xxhash64``, which DuckDB
+    lacks."""
+    key = f"concat_ws('|', CAST(a_id AS STRING), CAST(b_id AS STRING), '{int(seed)}')"
     h = SPARK_POLY_HASH_SQL.format(s="_k")
     return F.expr(_split_case(f"transform(array({key}), _k -> {h})[0] % 100", weights))
 
 
-def duckdb_split_sql(
-    weights: tuple = (0.6, 0.2, 0.2), seed: int = 42, a_col: str = "a_id", b_col: str = "b_id"
-) -> str:
+def duckdb_split_sql(weights: tuple = (0.6, 0.2, 0.2), seed: int = 42) -> str:
     """DuckDB twin of :func:`split_column`."""
-    key = f"concat_ws('|', CAST({a_col} AS VARCHAR), CAST({b_col} AS VARCHAR), '{int(seed)}')"
+    key = f"concat_ws('|', CAST(a_id AS VARCHAR), CAST(b_id AS VARCHAR), '{int(seed)}')"
     return _split_case(f"({DUCKDB_POLY_HASH_SQL.format(s=key)}) % 100", weights)
 
 

@@ -6,9 +6,9 @@ budgets derived from the box: N = nproc // 4 and 4N. Each leg runs in a
 fresh process (a JVM's local[N] master is fixed at start-up) pinned with
 ``taskset`` to its first N or 4N usable cores, because local[N] on a bigger box
 still lets GC, shuffle IO and Python workers use every core. The driver
-heap scales with the core budget (1.5 g/core, at least 8 g): 4N executors
-bring 4× the memory of N. Efficiency = (throughput_4N / throughput_N) / 4,
-appended to BENCH.md.
+heap is max(1.5 g/core, 8 g), so a leg below 6 cores gets the 8 g floor:
+on a 4-7-core box (N=1, 4N=4) both legs run with the same 8 g heap.
+Efficiency = (throughput_4N / throughput_N) / 4, appended to BENCH.md.
 
 On one box both legs share the memory bus and the fixed per-job latency,
 so the efficiency is a lower bound on what N and 4N executors would give.
@@ -43,7 +43,7 @@ def run_once(cpus: int, n_conv: int) -> dict:
         cmd, capture_output=True, text=True, check=True, cwd=str(REPO), timeout=9000, env=env,
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    return {**json.loads(line), "heap": env["SPARK_DRIVER_MEM"]}
 
 
 def main() -> int:
@@ -79,7 +79,8 @@ def main() -> int:
 
 **Scaling efficiency (N={c_lo} → 4N={c_hi} cores): {eff:.3f}, a lower bound**
 (target ≥ 0.8; same input and code path, a fresh taskset-pinned process
-per leg; both legs share one box's memory bus and per-job latency).
+per leg, driver heaps {lo['heap']} and {hi['heap']}; both legs share one box's
+memory bus and per-job latency).
 """
     s_lo, s_hi = lo.get("stages", {}), hi.get("stages", {})
     if s_lo and s_hi:

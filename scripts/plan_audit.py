@@ -19,8 +19,9 @@ lines (scan pushdown, codegen spans, exchange shapes) to PLAN_AUDIT.md:
   engine's Python surface must be Arrow (`ArrowEvalPython`,
   `FlatMapGroupsInPandas`, `MapInPandas`, `FlatMapCoGroupsInPandas`).
   Checked, and the Arrow nodes listed, over the query's plan and the
-  optimized plans of the frames it ``localCheckpoint()``s while being
-  built (the MinHash and LSH key kernels run inside such frames).
+  optimized plans of the frames it ``localCheckpoint()``s or
+  ``collect()``s while being built (the MinHash and LSH key kernels run
+  inside such frames).
 - **Scan parquet** nodes — the audit records `PushedFilters` and
   `ReadSchema` so column pruning / predicate pushdown are visible per
   query (the transcript tables are read with explicit projections; the
@@ -35,8 +36,12 @@ lines (scan pushdown, codegen spans, exchange shapes) to PLAN_AUDIT.md:
   when the optimizer substitutes an un-bound token alias into an iterating
   lambda, e.g. the ``size(s) > 0`` filter ``InferFiltersFromGenerate`` adds
   under an ``explode``. Checked on the optimized logical plan of the query
-  and of every frame it ``localCheckpoint()``s while being built (the
-  kernels' driver-side probes and block sweeps run on those).
+  and of every frame it ``localCheckpoint()``s or ``collect()``s while
+  being built (the kernels' driver-side probes and block sweeps run on
+  those, and ``threshold_sweep`` collects its bucket rows from them).
+  The other checks read the returned frame's physical plan, so
+  ``threshold_sweep``'s ``_scored_pairs`` input gets them only through
+  the other ``_scored_pairs`` consumers.
 
 Plan audit runs at sf0.001: physical plan SHAPE is scale-invariant (the
 same operators, exchanges, and pushdowns appear at any SF; only AQE's
@@ -138,24 +143,34 @@ def tokenizer_reruns(df, build_plans) -> list[str]:
 
 
 @contextmanager
-def checkpointed_plans():
-    """Collect the optimized plan of every frame ``localCheckpoint()``ed,
-    lazily or eagerly, while the block runs: the work a query does while it
-    is being built, and the sides the overlap kernel materializes."""
+def _recorded_plans(method: str):
+    """The optimized plan of every frame ``DataFrame.<method>`` runs on."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     plans: list = []
-    orig = DataFrame.localCheckpoint
+    orig = getattr(DataFrame, method)
 
     def recording(self, *args, **kwargs):
         plans.append(self._jdf.queryExecution().optimizedPlan())
         return orig(self, *args, **kwargs)
 
-    DataFrame.localCheckpoint = recording
+    setattr(DataFrame, method, recording)
     try:
         yield plans
     finally:
-        DataFrame.localCheckpoint = orig
+        setattr(DataFrame, method, orig)
+
+
+def checkpointed_plans():
+    """Frames ``localCheckpoint()``ed, lazily or eagerly, while the block
+    runs: the sides the overlap kernel materializes."""
+    return _recorded_plans("localCheckpoint")
+
+
+def collected_plans():
+    """Frames ``collect()``ed while the block runs: the kernels' probes, and
+    results a query collects while it is built (``threshold_sweep``)."""
+    return _recorded_plans("collect")
 
 
 def audit_one(name: str, df, build_plans: list) -> dict:
@@ -242,9 +257,9 @@ def main() -> None:
         if only and name != only:
             continue
         try:
-            with checkpointed_plans() as build_plans:
+            with checkpointed_plans() as cp, collected_plans() as cl:
                 df = fn(spark, sf_dir)
-            results.append(audit_one(name, df, build_plans))
+            results.append(audit_one(name, df, cp + cl))
         except Exception as e:  # noqa: BLE001 — audit everything, report at end
             results.append(
                 {"name": name, "failures": [f"audit error: {type(e).__name__}: {e}"],
@@ -266,14 +281,17 @@ def main() -> None:
         "Hard checks: no `CartesianProduct`/`BroadcastNestedLoopJoin` outside the",
         "justified allowlist (broadcast 1-row totals / n_lists-row",
         "centroid tables); and, in the plan of the query or of any frame it",
-        "checkpoints while built, no `BatchEvalPython` (all Python is Arrow-batched)",
+        "checkpoints or collects while built, no `BatchEvalPython` (all Python is",
+        "Arrow-batched)",
         "and no loop-invariant tokenizer (`split(lower(…))`) inside a lambda body.",
         "Reported per query: WholeStageCodegen span count, exchange count,",
         "single-partition exchanges (global-agg partial merges — O(partitions)",
-        "rows, scale-safe), Window nodes, Arrow nodes (checkpointed frames",
-        "included), and every parquet scan's",
+        "rows, scale-safe), Window nodes, Arrow nodes (checkpointed and collected",
+        "frames included), and every parquet scan's",
         "pushed filters + read schema (predicate pushdown / column pruning",
-        "evidence).",
+        "evidence), all from the returned frame's physical plan: `threshold_sweep`",
+        "returns collected bucket rows, so its `_scored_pairs` input gets these",
+        "only through the other `_scored_pairs` consumers.",
         "",
         "| query | verdict | codegen spans | exchanges | arrow nodes | notes |",
         "|---|---|---|---|---|---|",

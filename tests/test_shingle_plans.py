@@ -7,8 +7,9 @@ an ``explode`` over the shingles makes the optimizer infer a
 tokens, and substitute the tokenizer into the per-bigram lambda: the
 document is tokenized again for every bigram. These tests read the
 optimized plans of every ``__spark_entry__._doc_shingles`` consumer (and of
-every frame it checkpoints while being built, where the kernels' probes and
-block sweeps run) and of both canonicalize paths, and fail on a
+every frame it checkpoints or collects while being built, where the
+kernels' probes and block sweeps run and where ``threshold_sweep`` runs
+``_scored_pairs``) and of both canonicalize paths, and fail on a
 ``split(lower(…))`` call inside a lambda body that does not bind it.
 """
 
@@ -20,7 +21,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from scripts.plan_audit import checkpointed_plans, tokenizer_reruns
+from scripts.plan_audit import checkpointed_plans, collected_plans, tokenizer_reruns
 
 # every contract query that reads _doc_shingles, directly or through
 # _scored_pairs
@@ -64,9 +65,9 @@ def sf_dir(tmp_path_factory):
 
 
 def _rerun_tokenizers(build) -> list[str]:
-    with checkpointed_plans() as plans:
+    with checkpointed_plans() as cp, collected_plans() as cl:
         df = build()
-    return tokenizer_reruns(df, plans)
+    return tokenizer_reruns(df, cp + cl)
 
 
 def test_guard_flags_an_unbound_template(spark):
